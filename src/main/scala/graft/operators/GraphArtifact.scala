@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.sources.Ledger
+
 /** Persisted adjacency artifact for the graph family: the edge-list
   * analog of the postings artifact (Retrieval) and the IVF index
   * (VectorOps) — a bucketed, versioned, exactly-once-appendable store
@@ -91,10 +93,11 @@ object GraphArtifact {
   /** Exactly-once append of an edge delta: `adds` come into existence,
     * `deletes` tombstone every EARLIER layer's version of those edges
     * (rows added by this same batch survive — add wins within a tag,
-    * but see the conflict contract below). Publish is stage-then-one-
-    * atomic-rename; the tag dir's existence is the committed marker, so
-    * a replayed batch skips (returns false). Tags must sort in batch
-    * order (zero-padded ids — the layer order IS tag order).
+    * but see the conflict contract below). Published once
+    * ([[graft.sources.Ledger.publishOnce]]); the tag dir's existence is
+    * the committed marker, so a replayed batch skips (returns false).
+    * Tags must sort in batch order (zero-padded ids — the layer order IS
+    * tag order).
     *
     * Conflict contract: the SAME edge in both `adds` and `deletes` of
     * one call has no deterministic winner and is refused loudly before
@@ -106,43 +109,32 @@ object GraphArtifact {
     val s = adds.sparkSession
     val genDir = edgesGenDir(s, dir)
     val nBuckets = readNBuckets(s, genDir)
-    val hfs = hfsOf(s, dir)
-    val committed = new Path(genDir, s"appends/$tag")
-    if (hfs.exists(committed)) return false // replay: already published
-    // normalize each delta ONCE (delta-sized checkpoints): the clash
-    // check, emptiness probe, and bucketed writes all re-read these
-    // instead of re-deriving the caller's batch plan per consumer
-    val addAdj = adjacency(adds, nBuckets).localCheckpoint(true)
-    val delAdj =
-      deletes.map(d => adjacency(d, nBuckets).localCheckpoint(true))
-    delAdj.foreach { d =>
-      val clash = addAdj.select(col("src"), col("dst"))
-        .join(d.select(col("src"), col("dst")), Seq("src", "dst"))
-        .limit(1).collect()
-      if (clash.nonEmpty)
-        throw new IllegalStateException(
-          s"GraphArtifact: batch `$tag` both adds and deletes edge " +
-            s"(${clash.head.getLong(0)}, ${clash.head.getLong(1)}) — " +
-            "no deterministic winner exists within one batch; refusing " +
-            "before publish")
+    Ledger.publishOnce(hfsOf(s, dir), new Path(genDir, s"appends/$tag")) { tmp =>
+      // normalize each delta ONCE (delta-sized checkpoints): the clash
+      // check, emptiness probe, and bucketed writes all re-read these
+      // instead of re-deriving the caller's batch plan per consumer
+      val addAdj = adjacency(adds, nBuckets).localCheckpoint(true)
+      val delAdj =
+        deletes.map(d => adjacency(d, nBuckets).localCheckpoint(true))
+      delAdj.foreach { d =>
+        val clash = addAdj.select(col("src"), col("dst"))
+          .join(d.select(col("src"), col("dst")), Seq("src", "dst"))
+          .limit(1).collect()
+        if (clash.nonEmpty)
+          throw new IllegalStateException(
+            s"GraphArtifact: batch `$tag` both adds and deletes edge " +
+              s"(${clash.head.getLong(0)}, ${clash.head.getLong(1)}) — " +
+              "no deterministic winner exists within one batch; refusing " +
+              "before publish")
+      }
+      addAdj.write.partitionBy("bucket").parquet(s"$tmp/data")
+      delAdj.foreach { slim =>
+        // written only when non-empty: the dir's existence is the probe's
+        // has-tombstones signal, so delete-free appends cost no join
+        if (!slim.isEmpty)
+          slim.write.partitionBy("bucket").parquet(s"$tmp/deletes")
+      }
     }
-    val tmp = new Path(genDir, s".append_tmp_$tag")
-    if (hfs.exists(tmp)) hfs.delete(tmp, true) // torn-attempt debris
-    addAdj.write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$tmp/data")
-    delAdj.foreach { slim =>
-      // written only when non-empty: the dir's existence is the probe's
-      // has-tombstones signal, so delete-free appends cost no join
-      if (!slim.isEmpty)
-        slim.write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$tmp/deletes")
-    }
-    hfs.mkdirs(committed.getParent)
-    require(hfs.rename(tmp, committed),
-      s"GraphArtifact: atomic publish rename failed for append `$tag` " +
-        s"at $dir — the ledger contract (existence = completeness) " +
-        "would be violated by continuing")
-    true
   }
 
   private val edgeSchema = StructType(Seq(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.sources.Tables
+import graft.sources.Ledger
 
 /** Persisted PageRank over the adjacency artifact, with EXACT
   * incremental refresh (round-13 verdict task #5): the LSM artifact
@@ -459,28 +459,20 @@ object RankArtifact {
       prevVals = vals
     }
 
-    // stage the overlay, publish with one atomic rename
-    val hfs = hfsOf(s, genDir)
-    val dtag = f"d${deltas.size}%06d"
-    val tmp = new Path(genDir, s".delta_tmp_$dtag")
-    if (hfs.exists(tmp)) hfs.delete(tmp, true)
-    // outVals are all eagerly checkpointed above, so the per-iteration
-    // overlay writes are independent reads of disjoint cached blocks —
-    // overlap them (§2.6) instead of serializing `iters` write jobs
-    parallelJobs(s, outVals.zipWithIndex.map { case (vals, idx) => () =>
-      withBucket(vals, meta.nBuckets).write.mode("overwrite")
-        .partitionBy("bucket").parquet(s"$tmp/iter=${idx + 1}")
-    }.toSeq)
-    if (!removed.isEmpty)
-      withBucket(removed, meta.nBuckets).write.mode("overwrite")
-        .parquet(s"$tmp/removed")
-    writeSmall(s, new Path(tmp, "_covered"),
-      (covered ++ newTags).sorted.mkString(","))
-    val committed = new Path(genDir, s"deltas/$dtag")
-    hfs.mkdirs(committed.getParent)
-    require(hfs.rename(tmp, committed),
-      s"RankArtifact: atomic publish rename failed for overlay `$dtag` " +
-        s"at $rankDir")
+    val committed = new Path(genDir, f"deltas/d${deltas.size}%06d")
+    Ledger.publishOnce(hfsOf(s, genDir), committed) { tmp =>
+      // outVals are all eagerly checkpointed above, so the per-iteration
+      // overlay writes are independent reads of disjoint cached blocks —
+      // overlap them (§2.6) instead of serializing `iters` write jobs
+      parallelJobs(s, outVals.zipWithIndex.map { case (vals, idx) => () =>
+        withBucket(vals, meta.nBuckets).write
+          .partitionBy("bucket").parquet(s"$tmp/iter=${idx + 1}")
+      }.toSeq)
+      if (!removed.isEmpty)
+        withBucket(removed, meta.nBuckets).write.parquet(s"$tmp/removed")
+      writeSmall(s, new Path(tmp, "_covered"),
+        (covered ++ newTags).sorted.mkString(","))
+    }
     "delta"
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.sources.Tables
+import graft.sources.{Ledger, Tables}
 
 /** Positional-postings phrase search (SURVEY.md §2.11 extension).
   *
@@ -103,6 +103,10 @@ object Retrieval {
     new graft.sources.GenStore(MetaName, "postings artifact",
       "build one with Retrieval.writePostings(docs, dir)")
 
+  /** A committed append layer — not a publish still in flight (hidden). */
+  private def committedLayer(st: org.apache.hadoop.fs.FileStatus): Boolean =
+    st.isDirectory && !st.getPath.getName.startsWith(".")
+
   private def hfsOf(s: SparkSession, path: String) =
     new Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
 
@@ -171,13 +175,11 @@ object Retrieval {
   }
 
   /** Exactly-once append of `docs`' postings — plus an optional
-    * tombstone set — to the CURRENT generation: stage under a hidden tmp
-    * dir, publish by ONE atomic rename to `appends/<tag>/` — the tag
+    * tombstone set — to the CURRENT generation, published once to
+    * `appends/<tag>/` ([[graft.sources.Ledger.publishOnce]]) — the tag
     * dir's existence IS the committed marker, so a replayed attempt
     * (driver retry, workflow re-run) skips instead of double-counting
-    * (returns false). The rename's return value is enforced (HDFS-style
-    * filesystems report failure by returning false, not throwing); torn
-    * tmp debris from a crashed attempt is cleared on retry.
+    * (returns false).
     *
     * Batch contract: one posting set per doc_id — a batch that carries
     * the same doc twice duplicates its posting rows, and duplicated
@@ -206,27 +208,17 @@ object Retrieval {
     val s = docs.sparkSession
     val genDir = postingsGenDir(s, dir)
     val nBuckets = readNBuckets(s, genDir)
-    val hfs = hfsOf(s, dir)
-    val committed = new Path(genDir, s"appends/$tag")
-    if (hfs.exists(committed)) return false // replay: already published
-    val tmp = new Path(genDir, s".append_tmp_$tag")
-    if (hfs.exists(tmp)) hfs.delete(tmp, true) // torn-attempt debris
-    bucketedPostings(docs, nBuckets)
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$tmp/data")
-    deletes.foreach { d =>
-      // written only when non-empty: the dir's existence is the probe's
-      // has-tombstones signal, so delete-free appends cost no join
-      val slim = d.select(col("doc_id").cast("long").as("doc_id"))
-      if (!slim.isEmpty)
-        slim.repartition(1).write.mode("overwrite").parquet(s"$tmp/deletes")
+    Ledger.publishOnce(hfsOf(s, dir), new Path(genDir, s"appends/$tag")) { tmp =>
+      bucketedPostings(docs, nBuckets)
+        .write.partitionBy("bucket").parquet(s"$tmp/data")
+      deletes.foreach { d =>
+        // written only when non-empty: the dir's existence is the probe's
+        // has-tombstones signal, so delete-free appends cost no join
+        val slim = d.select(col("doc_id").cast("long").as("doc_id"))
+        if (!slim.isEmpty)
+          slim.repartition(1).write.parquet(s"$tmp/deletes")
+      }
     }
-    hfs.mkdirs(committed.getParent)
-    require(hfs.rename(tmp, committed),
-      s"Retrieval: atomic publish rename failed for append `$tag` at " +
-        s"$dir — the ledger contract (existence = completeness) would " +
-        "be violated by continuing")
-    true
   }
 
   /** Re-post `docs` into a written artifact: appends their postings AND
@@ -284,7 +276,7 @@ object Retrieval {
     // bounded by the append count (driver metadata, never data)
     val appendDirs =
       if (hfs.exists(appendsRoot))
-        hfs.listStatus(appendsRoot).filter(_.isDirectory)
+        hfs.listStatus(appendsRoot).filter(committedLayer)
           .map(_.getPath).toSeq.sortBy(_.getName)
       else Seq.empty[Path]
     // explicit schema so an empty append (no files at all) reads as an
@@ -327,7 +319,7 @@ object Retrieval {
     val hfs = hfsOf(s, dir)
     val appends = new Path(postingsGenDir(s, dir), "appends")
     if (!hfs.exists(appends)) 0
-    else hfs.listStatus(appends).count(_.isDirectory)
+    else hfs.listStatus(appends).count(committedLayer)
   }
 
   /** Compact the artifact: write the next generation's base from the

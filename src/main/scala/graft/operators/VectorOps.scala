@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.sources.Tables
+import graft.sources.{Ledger, Tables}
 import graft.functions.{VectorFns => V}
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.11).
@@ -618,53 +618,28 @@ object VectorOps {
     * sentinel is an empty file — callers fall back to one footer
     * count and [[stampGenCount]] the result, so the fallback is paid
     * once per legacy generation, not per maintenance batch. */
-  private def readGenCount(s: SparkSession, genDir: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$genDir/$OkSentinel")
-    val hfs = hfsOf(s, genDir)
-    if (!hfs.exists(p)) return None
-    val in = hfs.open(p)
-    val raw =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    try { if (raw.isEmpty) None else Some(raw.toLong) }
-    catch { case _: NumberFormatException => None }
-  }
+  private def readGenCount(s: SparkSession, genDir: String): Option[Long] =
+    Ledger.readSmall(hfsOf(s, genDir),
+      new org.apache.hadoop.fs.Path(s"$genDir/$OkSentinel"))
+      .flatMap(_.toLongOption)
 
   /** Restamp a LIVE generation's row count (after an in-place corpus
-    * append, or the one-time legacy upgrade): tmp + atomic
-    * rename-overwrite, so a crash mid-stamp leaves either the old
-    * stamped sentinel or the new one — never a torn file that could
-    * misreport the count. (The sentinel keeps existing throughout —
-    * rename is atomic on the stores GenStore supports — so the
-    * completeness contract is never violated.) */
+    * append, or the one-time legacy upgrade) with
+    * [[Ledger.replaceSmall]]: a crash mid-stamp leaves either the old
+    * stamped sentinel or the new one, and the sentinel keeps existing
+    * throughout, so the completeness contract is never violated. */
   private def stampGenCount(s: SparkSession, genDir: String,
-      rows: Long): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(s"$genDir/.${OkSentinel}_tmp")
-    val hfs = hfsOf(s, genDir)
-    val out = hfs.create(tmp, true)
-    try out.write(rows.toString.getBytes("UTF-8")) finally out.close()
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(new org.apache.hadoop.fs.Path(genDir).toUri,
-        s.sparkContext.hadoopConfiguration)
-      .rename(tmp, new org.apache.hadoop.fs.Path(s"$genDir/$OkSentinel"),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+      rows: Long): Unit =
+    Ledger.replaceSmall(hfsOf(s, genDir),
+      new org.apache.hadoop.fs.Path(s"$genDir/$OkSentinel"), rows.toString)
 
   /** Blank the sentinel's BODY (empty = "no stamped count", the legacy
     * encoding readGenCount already maps to the footer-count fallback)
     * while keeping the file itself — existence is the generation's
-    * completeness manifest and must never lapse. Same tmp + atomic
-    * rename as [[stampGenCount]], so a crash leaves either body. */
-  private def blankGenCount(s: SparkSession, genDir: String): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(s"$genDir/.${OkSentinel}_tmp")
-    val hfs = hfsOf(s, genDir)
-    hfs.create(tmp, true).close()
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(new org.apache.hadoop.fs.Path(genDir).toUri,
-        s.sparkContext.hadoopConfiguration)
-      .rename(tmp, new org.apache.hadoop.fs.Path(s"$genDir/$OkSentinel"),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+    * completeness manifest and must never lapse. */
+  private def blankGenCount(s: SparkSession, genDir: String): Unit =
+    Ledger.replaceSmall(hfsOf(s, genDir),
+      new org.apache.hadoop.fs.Path(s"$genDir/$OkSentinel"), "")
 
   /** Physical corpus row count: the stamped sentinel when present,
     * else one footer count whose result is stamped back — the legacy
@@ -1422,9 +1397,9 @@ object VectorOps {
 
   /** Attach PQ codes to the CURRENT index generation as an optional
     * acceleration artifact: `pq/` inside the gen dir holds the trained
-    * sub-codebooks and the per-vector codes, published atomically
-    * (tmp + rename + sentinel — a torn write leaves the generation
-    * serving exactly as before, with PQ simply unavailable). Codes are
+    * sub-codebooks and the per-vector codes, published once by
+    * [[Ledger.publishOnce]] (a torn write leaves the generation serving
+    * without PQ; a retrain deletes the old codes first). Codes are
     * GENERATION-SCOPED: a retrain/compact publishes a new gen without
     * them (recompute via this call), and an unretrained append grows
     * the corpus past the codes — [[probePqIndex]] guards that
@@ -1449,42 +1424,36 @@ object VectorOps {
         subDim, codewords)
     }.toArray
     val hfs = hfsOf(s, genDir)
-    val tmp = new org.apache.hadoop.fs.Path(s"$genDir/.pq_tmp")
-    hfs.delete(tmp, true)
-    import s.implicits._
-    books.zipWithIndex.flatMap { case (book, mi) =>
-      book.map { case (cw, csum, cn) => (mi, cw, csum.toSeq, cn) }
-    }.toSeq.toDF("m", "cw", "csum", "cn")
-      .coalesce(1).write.parquet(s"$tmp/books")
-    // codes carry — and are PARTITIONED BY — the coarse cell id, so the
-    // IVFADC probe ([[probeIvfPqIndex]]) reads only its probed cells'
-    // code files (directory pruning), never the full codes table.
-    // Persist the coded rows BEFORE the range repartition: range
-    // partitioning runs its child once to sample boundary keys and
-    // again in the shuffle map tasks — uncached, the m·codewords·subDim
-    // argmin per row (and the corpus read) would execute twice per
-    // write, and the cache holds only slim (vec_id, cell, codes) rows
-    val coded = corpus.select(col("vec_id"), col("cell"),
-        pqCodesCol(s, books, subDim)(col("iv")).as("codes"))
-      .persist()
-    try coded.repartitionByRange(col("cell"), col("vec_id"))
-      .write.partitionBy("cell").parquet(s"$tmp/codes")
-    finally coded.unpersist()
-    val sf = hfs.create(
-      new org.apache.hadoop.fs.Path(s"$tmp/source_files"), true)
-    try sf.write(sources.map(_ + "\n").mkString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally sf.close()
-    val ok = hfs.create(
-      new org.apache.hadoop.fs.Path(s"$tmp/$OkSentinel"), true)
-    ok.close()
     val dest = new org.apache.hadoop.fs.Path(s"$genDir/pq")
-    hfs.delete(dest, true)
-    // HDFS-style rename reports failure by returning false, not
-    // throwing — enforce the publish-once contract loudly
-    if (!hfs.rename(tmp, dest) && !hfs.exists(dest))
-      throw new IllegalStateException(
-        s"pq publish failed: rename $tmp -> $dest returned false")
+    hfs.delete(dest, true) // a retrain replaces the generation's codes
+    Ledger.publishOnce(hfs, dest) { tmp =>
+      import s.implicits._
+      books.zipWithIndex.flatMap { case (book, mi) =>
+        book.map { case (cw, csum, cn) => (mi, cw, csum.toSeq, cn) }
+      }.toSeq.toDF("m", "cw", "csum", "cn")
+        .coalesce(1).write.parquet(s"$tmp/books")
+      // codes carry — and are PARTITIONED BY — the coarse cell id, so the
+      // IVFADC probe ([[probeIvfPqIndex]]) reads only its probed cells'
+      // code files (directory pruning), never the full codes table.
+      // Persist the coded rows BEFORE the range repartition: range
+      // partitioning runs its child once to sample boundary keys and
+      // again in the shuffle map tasks — uncached, the m·codewords·subDim
+      // argmin per row (and the corpus read) would execute twice per
+      // write, and the cache holds only slim (vec_id, cell, codes) rows
+      val coded = corpus.select(col("vec_id"), col("cell"),
+          pqCodesCol(s, books, subDim)(col("iv")).as("codes"))
+        .persist()
+      try coded.repartitionByRange(col("cell"), col("vec_id"))
+        .write.partitionBy("cell").parquet(s"$tmp/codes")
+      finally coded.unpersist()
+      val sf = hfs.create(
+        new org.apache.hadoop.fs.Path(s"$tmp/source_files"), true)
+      try sf.write(sources.map(_ + "\n").mkString.getBytes(
+        java.nio.charset.StandardCharsets.UTF_8))
+      finally sf.close()
+      hfs.create(new org.apache.hadoop.fs.Path(s"$tmp/$OkSentinel"), true)
+        .close()
+    }
   }
 
   /** ADC search over the STORED codes of the current generation: the

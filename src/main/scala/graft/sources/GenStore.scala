@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** THE generation lifecycle for on-disk index artifacts — one home for
@@ -16,9 +16,7 @@ import org.apache.spark.sql.SparkSession
   *    exists (writers land the sentinel LAST, so existence ⟹
   *    completeness — the ledger convention);
   *  - `CURRENT` is a one-line pointer naming the served generation,
-  *    flipped by ONE atomic rename-overwrite (FileContext.rename with
-  *    OVERWRITE — never delete-then-rename, whose window would leave
-  *    readers pointer-less);
+  *    flipped by [[Ledger.replaceSmall]];
   *  - [[publish]] GCs old generations EXCEPT the one it just
   *    superseded, which gets a grace of one full publish cycle: a
   *    reader that resolved the pointer an instant before the flip may
@@ -37,16 +35,8 @@ final class GenStore(val sentinel: String, val what: String,
   private def hfsOf(s: SparkSession, path: String) =
     new Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  private def readPointer(s: SparkSession, root: String): Option[String] = {
-    val hfs = hfsOf(s, root)
-    val ptr = new Path(root, pointer)
-    if (!hfs.exists(ptr)) None
-    else {
-      val in = hfs.open(ptr)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
-    }
-  }
+  private def readPointer(s: SparkSession, root: String): Option[String] =
+    Ledger.readSmall(hfsOf(s, root), new Path(root, pointer))
 
   /** Directory of the CURRENT generation. Fails loudly on a missing
     * pointer (not an artifact) or a torn generation (the pointer names
@@ -83,12 +73,7 @@ final class GenStore(val sentinel: String, val what: String,
   def publish(s: SparkSession, root: String, genName: String): Unit = {
     val hfs = hfsOf(s, root)
     val prev = readPointer(s, root) // outgoing generation, pre-flip
-    val tmp = new Path(root, s".$pointer.tmp")
-    val out = hfs.create(tmp, true)
-    try out.write(genName.getBytes("UTF-8")) finally out.close()
-    val fc = FileContext.getFileContext(
-      new Path(root).toUri, s.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, new Path(root, pointer), Options.Rename.OVERWRITE)
+    Ledger.replaceSmall(hfs, new Path(root, pointer), genName)
     hfs.listStatus(new Path(root)).map(_.getPath)
       .filter { p =>
         p.getName.startsWith("gen=") && p.getName != genName &&

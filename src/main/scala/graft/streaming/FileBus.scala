@@ -4,11 +4,12 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
-import org.apache.hadoop.fs.Options
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+
+import graft.sources.Ledger
 
 /** The directory-backed partitioned log under the "graftbus" connector
   * (sources/v2/BusSource.scala) — the broker-less model of the
@@ -94,17 +95,6 @@ object FileBus {
   private def fcOf(p: Path): FileContext =
     FileContext.getFileContext(p.toUri, hadoopConf)
 
-  private def readSmall(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      new String(bytes.toByteArray, UTF_8)
-    } finally in.close()
-  }
-
   // ─── layout ───
 
   private def pdir(path: String, p: Int) = new Path(path, s"p=$p")
@@ -116,21 +106,16 @@ object FileBus {
     val root = new Path(path)
     val fs = fsOf(root)
     (0 until partitions).foreach(p => fs.mkdirs(pdir(path, p)))
-    val tmp = new Path(root, "._PARTITIONS.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(partitions.toString.getBytes(UTF_8)) finally out.close()
-    fcOf(root).rename(tmp, new Path(root, "_PARTITIONS"),
-      Options.Rename.OVERWRITE)
+    Ledger.replaceSmall(fs, new Path(root, "_PARTITIONS"), partitions.toString)
   }
 
   def partitionIds(path: String): Seq[Int] = {
     val m = new Path(path, "_PARTITIONS")
-    val fs = fsOf(m)
-    if (!fs.exists(m))
+    val n = Ledger.readSmall(fsOf(m), m).getOrElse(
       throw new IllegalStateException(
         s"$path is not a graftbus topic (no _PARTITIONS marker); " +
-          "create one with FileBus.createTopic")
-    0 until readSmall(fs, m).trim.toInt
+          "create one with FileBus.createTopic"))
+    0 until n.toInt
   }
 
   /** (firstOffset, count, file) per segment of partition `p`, in offset
@@ -209,9 +194,11 @@ object FileBus {
     (k, readField())
   }
 
-  def readSegment(f: Path): Seq[(String, String)] =
-    readSmall(fsOf(f), f)
-      .split("\n").toSeq.filter(_.nonEmpty).map(parseLine)
+  def readSegment(f: Path): Seq[(String, String)] = {
+    val in = fsOf(f).open(f)
+    val body = try new String(in.readAllBytes(), UTF_8) finally in.close()
+    body.split("\n").toSeq.filter(_.nonEmpty).map(parseLine)
+  }
 
   /** Stable key→partition routing (Kafka's per-key ordering guarantee
     * rests on this being deterministic across JVMs — String.hashCode

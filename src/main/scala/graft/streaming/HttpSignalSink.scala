@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.sources.Ledger
+
 /** S7 — the OTP *signal* sink over real HTTP (reference
   * api/main.py:180-194: `POST {base}/{key}/receive_otp` with
   * `{"otp": ...}`), exactly-once across crash/replay.
@@ -12,8 +14,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   *  1. **BatchId-keyed ledger** (the idempotentParquetSink discipline,
   *     StreamOps.scala): after a batch's POSTs all succeed, an empty
-  *     `batch_<id>` marker is published to `ledgerDir` with tmp-write +
-  *     atomic rename. A replayed batch whose marker exists is skipped
+  *     `batch_<id>` marker is published to `ledgerDir` by
+  *     [[Ledger.publishOnce]]. A replayed batch whose marker exists is skipped
   *     wholesale — zero network traffic, because marker existence ⟹
   *     every POST of that batch already succeeded.
   *  2. **Idempotency-Key header** `graft-<batchId>-<key>` on every POST:
@@ -26,7 +28,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     stable, which is why the token carries the batchId, not a UUID.
   *
   * Scale shape: POSTs run from the EXECUTORS (`foreachPartition`, one
-  * HTTP client per partition) — signal fan-out scales with the cluster,
+  * HTTP client per executor JVM) — signal fan-out scales with the cluster,
   * never through a driver collect. A failed POST throws, failing the
   * task/batch so Spark retries it — at-least-once at the transport,
   * exactly-once end-to-end via the token.
@@ -46,16 +48,59 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object HttpSignalSink {
 
+  /** One client per JVM, so its pool holds one keep-alive connection per
+    * concurrent task. A client per partition kept each batch's idle
+    * connections open until it was garbage-collected; a receiver that
+    * caps idle connections (the JDK HttpServer closes those beyond 200)
+    * then closed them under a client about to reuse one, failing the
+    * POST and with it the batch. */
+  private lazy val client = java.net.http.HttpClient.newHttpClient()
+
   def start(signals: DataFrame, endpointBase: String, ledgerDir: String,
       checkpoint: String,
       afterPost: Long => Unit = _ => ()): StreamingQuery =
     signals.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val conf = batch.sparkSession.sparkContext.hadoopConfiguration
-        val fs = new org.apache.hadoop.fs.Path(ledgerDir).getFileSystem(conf)
         val marker = new org.apache.hadoop.fs.Path(s"$ledgerDir/batch_$batchId")
-        if (fs.exists(marker)) {
+        val fs = marker.getFileSystem(
+          batch.sparkSession.sparkContext.hadoopConfiguration)
+        val posted = Ledger.publishOnce(fs, marker) { tmp =>
+          val base = endpointBase
+          batch.select(col("key").cast("string"), col("otp").cast("string"))
+            .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
+              rows.foreach { r =>
+                val key = r.getString(0)
+                val otp = r.getString(1)
+                // PATH-segment encoding, not form encoding: URLEncoder
+                // is application/x-www-form-urlencoded, which maps a
+                // space to '+' — a URI path does NOT decode '+' back,
+                // so "user 1" would silently signal resource "user+1"
+                val keyEnc = java.net.URLEncoder.encode(key, "UTF-8")
+                  .replace("+", "%20")
+                val body = s"""{"otp":"${otp.replace("\\", "\\\\").replace("\"", "\\\"")}"}"""
+                val req = java.net.http.HttpRequest
+                  .newBuilder(java.net.URI.create(s"$base/$keyEnc/receive_otp"))
+                  .header("Content-Type", "application/json")
+                  // the token carries the ENCODED key: header values
+                  // must be ASCII without CR/LF — a raw key with
+                  // either would throw in the builder and wedge the
+                  // batch as a poison pill; the encoded form is both
+                  // header-safe and still deterministic per (batch, key)
+                  .header("Idempotency-Key", s"graft-$batchId-$keyEnc")
+                  .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
+                  .build()
+                val resp = client.send(req,
+                  java.net.http.HttpResponse.BodyHandlers.ofString())
+                if (resp.statusCode() / 100 != 2)
+                  throw new IllegalStateException(
+                    s"signal POST for key $key failed: HTTP ${resp.statusCode()}")
+              }
+            }
+          afterPost(batchId)
+          fs.mkdirs(tmp)
+        }
+        if (!posted) {
           // Completed on a prior attempt: no replay reaches the wire —
           // but the batch must still be PROCESSED, not just left lazy:
           // when a stateful operator (the monotone guard, the OTP
@@ -65,65 +110,7 @@ object HttpSignalSink {
           // no-op died STATE_STORE_COMMIT_VALIDATION_FAILED on the
           // replay of a torn posted-but-uncommitted batch).
           batch.foreach(_ => ())
-        } else {
-          val base = endpointBase
-          batch.select(col("key").cast("string"), col("otp").cast("string"))
-            .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-              if (rows.nonEmpty) {
-                val client = java.net.http.HttpClient.newHttpClient()
-                rows.foreach { r =>
-                  val key = r.getString(0)
-                  val otp = r.getString(1)
-                  // PATH-segment encoding, not form encoding: URLEncoder
-                  // is application/x-www-form-urlencoded, which maps a
-                  // space to '+' — a URI path does NOT decode '+' back,
-                  // so "user 1" would silently signal resource "user+1"
-                  val keyEnc = java.net.URLEncoder.encode(key, "UTF-8")
-                    .replace("+", "%20")
-                  val body = s"""{"otp":"${otp.replace("\\", "\\\\").replace("\"", "\\\"")}"}"""
-                  val req = java.net.http.HttpRequest
-                    .newBuilder(java.net.URI.create(s"$base/$keyEnc/receive_otp"))
-                    .header("Content-Type", "application/json")
-                    // the token carries the ENCODED key: header values
-                    // must be ASCII without CR/LF — a raw key with
-                    // either would throw in the builder and wedge the
-                    // batch as a poison pill; the encoded form is both
-                    // header-safe and still deterministic per (batch, key)
-                    .header("Idempotency-Key", s"graft-$batchId-$keyEnc")
-                    .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
-                    .build()
-                  val resp = client.send(req,
-                    java.net.http.HttpResponse.BodyHandlers.ofString())
-                  if (resp.statusCode() / 100 != 2)
-                    throw new IllegalStateException(
-                      s"signal POST for key $key failed: HTTP ${resp.statusCode()}")
-                }
-              }
-            }
-          afterPost(batchId)
-          // commit: publish the marker atomically (tmp + rename) — the
-          // ledger transition is all-or-nothing, so a crash mid-commit
-          // just replays into the idempotency-token layer above
-          val tmp = new org.apache.hadoop.fs.Path(s"$ledgerDir/.tmp_batch_$batchId")
-          fs.mkdirs(tmp)
-          commitMarker(fs, tmp, marker)
         }
       }
       .start()
-
-  /** Publish the ledger marker, ENFORCING the rename contract.
-    *
-    * HDFS-style FileSystems report rename failure by returning false,
-    * not throwing. The ledger's contract is "existence ⟹ completeness":
-    * a silently-unrenamed marker would re-POST the batch on every future
-    * replay forever. A false return is acceptable only when the marker
-    * already exists — a concurrent attempt won the commit, same outcome.
-    */
-  private[streaming] def commitMarker(fs: org.apache.hadoop.fs.FileSystem,
-      tmp: org.apache.hadoop.fs.Path,
-      marker: org.apache.hadoop.fs.Path): Unit =
-    if (!fs.rename(tmp, marker) && !fs.exists(marker))
-      throw new IllegalStateException(
-        s"ledger commit failed: rename $tmp -> $marker returned false " +
-          "and the marker does not exist")
 }

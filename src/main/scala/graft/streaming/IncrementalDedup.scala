@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.{TextFns => T}
 import graft.operators.TextOps
+import graft.sources.Ledger
 
 /** Incremental near-dup CLUSTERING — q58's cluster assignment maintained
   * under streaming appends AND deletions, the way [[ViewMaintenance]]
@@ -250,22 +251,16 @@ object IncrementalDedup {
   private def bucketCount(spark: SparkSession, stateDir: String,
       requested: Int): Int =
     readBucketMarker(spark, stateDir).getOrElse {
-      // write-then-rename: a crash mid-write must not leave a torn marker
-      // that bricks every later read of the dir (the version publishes
-      // below use the same discipline for the same reason)
+      // published once: a torn marker would brick every later read of
+      // the dir, and on a (contract-violating) race the first writer wins
       val h = fs(spark, stateDir)
-      h.mkdirs(new Path(stateDir))
-      val tmp = new Path(stateDir, "._BUCKETS.tmp")
-      val out = h.create(tmp, true)
-      try out.write(
-        s"$requested\nhashprobe=$currentHashProbe".getBytes("UTF-8"))
-      finally out.close()
-      if (h.rename(tmp, new Path(stateDir, "_BUCKETS"))) requested
-      else {
-        // lost a (contract-violating) race: trust whoever won
-        h.delete(tmp, false)
-        readBucketMarker(spark, stateDir).getOrElse(requested)
+      Ledger.publishOnce(h, new Path(stateDir, "_BUCKETS")) { tmp =>
+        val out = h.create(tmp, true)
+        try out.write(
+          s"$requested\nhashprobe=$currentHashProbe".getBytes("UTF-8"))
+        finally out.close()
       }
+      readBucketMarker(spark, stateDir).getOrElse(requested)
     }
 
   /** The two bucket formulas, shared by the write-side layout
@@ -861,27 +856,13 @@ object IncrementalDedup {
 
     def publish(kind: String, delta: DataFrame): Unit = {
       val hfs = fs(spark, stateDir)
-      val tmp = s"$stateDir/$kind/.tmp_v_$batchId"
-      val dest = s"$stateDir/$kind/v=$batchId"
-      // PUBLISH-ONCE: dest exists ⟹ a prior attempt's rename completed
-      // (atomic) and this replay derives identical content — skip. The
-      // old delete+re-rename minted new part-file names for the same
-      // rows on every replay, needlessly invalidating any cached listing
-      // and re-running the fold/delta job. GC for this kind runs on the
-      // next batch's publish.
-      if (hfs.exists(new Path(dest))) return
-      val full = wantFull(kind)
-
-      // promote tmp → v=batchId and GC old versions; shared by both
-      // publish shapes so the rename/retention discipline has one home
-      def promote(): Unit = {
-        if (full) hfs.createNewFile(new Path(tmp, "_FULL"))
-        val destPath = new Path(dest)
-        if (hfs.exists(destPath)) hfs.delete(destPath, true)
-        // rename returns false (not throw) on HDFS-style failure — enforce
-        if (!hfs.rename(new Path(tmp), destPath) && !hfs.exists(destPath))
-          throw new IllegalStateException(
-            s"state publish failed: rename $tmp -> $destPath returned false")
+      // PUBLISH-ONCE: a replay derives identical content — skip, and
+      // leave GC for this kind to the next batch's publish. `resume`
+      // keeps a torn bucket-wise compaction's finished buckets (see
+      // below); every other shape overwrites the temp dir whole.
+      val dest = new Path(s"$stateDir/$kind/v=$batchId")
+      if (Ledger.publishOnce(hfs, dest, resume = true)(
+          tmp => stage(kind, delta, tmp.toString))) {
         // GC: keep the two newest fulls and everything after the older
         // one (any replayed batch ≥ the older full can still fold)
         val vs = versions(spark, s"$stateDir/$kind").sorted
@@ -899,7 +880,12 @@ object IncrementalDedup {
           }
         }
       }
+    }
 
+    // write one version of `kind` into the publish temp dir `tmp`
+    def stage(kind: String, delta: DataFrame, tmp: String): Unit = {
+      val hfs = fs(spark, stateDir)
+      val full = wantFull(kind)
       // Bucket-wise only pays when there is a CHAIN to fold — its point
       // is bounding the fold's per-job read. On a chainless full (batch
       // 0 / first publish) the "fold" is just the delta itself, and B
@@ -973,7 +959,6 @@ object IncrementalDedup {
             // markers inside their own `_b=` dirs
             hfs.createNewFile(new Path(tmp, "_SUCCESS"))
           }
-          promote()
         } finally deltaB.unpersist()
       } else {
         // cache before probing emptiness: the probe is an action, and the
@@ -990,9 +975,9 @@ object IncrementalDedup {
             df.write.mode("overwrite").parquet(tmp)
             hfs.createNewFile(new Path(tmp, "_EMPTY"))
           } else df.write.mode("overwrite").partitionBy("_b").parquet(tmp)
-          promote()
         } finally df.unpersist()
       }
+      if (full) hfs.createNewFile(new Path(tmp, "_FULL"))
     }
     publish("labels", labelsOutDelta)
     publish("members", membersOutDelta)

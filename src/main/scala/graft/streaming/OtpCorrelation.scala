@@ -34,6 +34,16 @@ object OtpCorrelation {
     * api/login_workflow.py:117. */
   val OtpTimeoutMs: Long = 300 * 1000L
 
+  /** A key's in-batch events in processing order (micro-batches don't
+    * sort for us): by whole second, then requests before OTPs, then
+    * timestamp. A mail's `Date` header has one-second resolution, so an
+    * OTP sent at 12:00:00.700 for a request at 12:00:00.500 is dated
+    * 12:00:00; raw timestamp order would put it before its request and
+    * drop it. An OTP dated an earlier whole second still sorts first. */
+  def batchOrder(events: Iterator[CorrelationEvent]): Seq[CorrelationEvent] =
+    events.toSeq.sortBy(e =>
+      (Math.floorDiv(e.ts.getTime, 1000L), e.request.isEmpty, e.ts.getTime))
+
   /** The state-transition function (pure, unit-testable). */
   def transition(
       key: String,
@@ -52,8 +62,7 @@ object OtpCorrelation {
       else Iterator.empty
     }
     val out = scala.collection.mutable.ArrayBuffer.empty[LoginOutcome]
-    // Event-time order within the batch (micro-batches don't sort for us).
-    events.toSeq.sortBy(e => (e.ts.getTime, e.otp.isDefined)).foreach { ev =>
+    batchOrder(events).foreach { ev =>
       (ev.request, ev.otp) match {
         case (Some(req), _) if req.platform != "zepto" =>
           // F7 platform whitelist: non-zepto requests are rejected up front

@@ -60,8 +60,7 @@ object OtpCorrelationTws {
         rows: Iterator[CorrelationEvent],
         timers: TimerValues): Iterator[LoginOutcome] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[LoginOutcome]
-      // Event-time order within the batch (micro-batches don't sort for us).
-      rows.toSeq.sortBy(e => (e.ts.getTime, e.otp.isDefined)).foreach { ev =>
+      OtpCorrelation.batchOrder(rows).foreach { ev =>
         (ev.request, ev.otp) match {
           case (Some(r), _) if r.platform != "zepto" =>
             // F7 platform whitelist (login_workflow.py:44-45).

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.sources.Ledger
+
 /** Streaming distinct-count maintenance — the streaming dual of
   * q61_hll_distinct, built on the same two ideas as [[ViewMaintenance]]:
   * per-batch PARTIAL state merged into a stored view, published under
@@ -56,20 +58,12 @@ object SketchMaintenance {
     val merged = base.unionByName(delta)
       .groupBy(col("grp"))
       .agg(hll_union_agg(col("sk"), lit(false)).as("sk")) // same lgK always
-    val tmp = s"$viewDir/.tmp_v_$batchId"
-    val dest = s"$viewDir/v=$batchId"
-    val fs = new Path(viewDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val destPath = new Path(dest)
-    // PUBLISH-ONCE (see ViewMaintenance): dest exists ⟹ complete +
-    // replay-equivalent (HLL register merge is order-independent) — skip
-    // the merge job and keep the published file set stable
-    if (fs.exists(destPath)) return
-    merged.write.mode("overwrite").parquet(tmp)
-    // rename returns false (not throw) on HDFS-style failure — enforce
-    if (!fs.rename(new Path(tmp), destPath) && !fs.exists(destPath))
-      throw new IllegalStateException(
-        s"view publish failed: rename $tmp -> $destPath returned false")
+    val destPath = new Path(s"$viewDir/v=$batchId")
+    val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // PUBLISH-ONCE (see ViewMaintenance): a replay is equivalent (HLL
+    // register merge is order-independent) — skip the merge job
+    if (!Ledger.publishOnce(fs, destPath)(tmp => merged.write.parquet(tmp.toString)))
+      return
     val keep = math.max(2, retainVersions)
     versions(spark, viewDir).sorted.dropRight(keep)
       .foreach(v => fs.delete(new Path(s"$viewDir/v=$v"), true))

@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Hnsw
+import graft.sources.Ledger
 
 /** Streaming maintenance of the sharded HNSW graph index
   * (operators/Hnsw): a fresh-vector stream keeps the graph artifact
@@ -24,8 +25,8 @@ import graft.operators.Hnsw
   *
   * EXACTLY-ONCE: one writer per index dir (the FileBus single-writer
   * convention). Idempotency rides a batchId LEDGER (`_hnsw_applied`, a
-  * one-line max-applied-batchId file flipped by atomic rename — the
-  * GenStore pointer discipline; batchIds are monotone within a
+  * one-line max-applied-batchId file flipped by [[Ledger.replaceSmall]]
+  * — the GenStore pointer discipline; batchIds are monotone within a
   * checkpoint, so one line subsumes the per-tag marker files the LSM
   * maintainers use and never accumulates):
   *
@@ -69,37 +70,23 @@ object StreamHnsw {
     new Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
 
   private def readApplied(s: SparkSession, dir: String): Long = {
-    val hfs = hfsOf(s, dir)
     val p = new Path(dir, LedgerName)
-    if (!hfs.exists(p)) -1L
-    else {
-      val in = hfs.open(p)
-      val raw =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
+    Ledger.readSmall(hfsOf(s, dir), p).fold(-1L) { raw =>
       // a hand-touched/zero-byte ledger must fail with the repair by
       // name, not a bare NumberFormatException (the GenStore torn-
       // artifact message convention)
-      try raw.toLong catch {
-        case _: NumberFormatException => throw new IllegalStateException(
-          s"StreamHnsw: ledger $p is corrupt ('$raw' is not a batch " +
-            "id) — delete the file to re-base the stream (replays " +
-            "repair via the applied-batch probe) or restore it from " +
-            "a backup")
-      }
+      raw.toLongOption.getOrElse(throw new IllegalStateException(
+        s"StreamHnsw: ledger $p is corrupt ('$raw' is not a batch " +
+          "id) — delete the file to re-base the stream (replays " +
+          "repair via the applied-batch probe) or restore it from " +
+          "a backup"))
     }
   }
 
   private def writeApplied(s: SparkSession, dir: String,
-      batchId: Long): Unit = {
-    val hfs = hfsOf(s, dir)
-    val tmp = new Path(dir, s".$LedgerName.tmp")
-    val out = hfs.create(tmp, true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    FileContext.getFileContext(new Path(dir).toUri,
-        s.sparkContext.hadoopConfiguration)
-      .rename(tmp, new Path(dir, LedgerName), Options.Rename.OVERWRITE)
-  }
+      batchId: Long): Unit =
+    Ledger.replaceSmall(hfsOf(s, dir), new Path(dir, LedgerName),
+      batchId.toString)
 
   /** One micro-batch of maintenance; idempotent per (dir, batchId).
     * Returns false iff the batch was a replay (ledger or tear-point-1

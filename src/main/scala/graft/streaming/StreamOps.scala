@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.sources.Ledger
+
 /** Structured Streaming forms of the reference's dataflow semantics
   * (SURVEY.md §2.9): watermark-gated dedup (ST1), late-data drop (ST2),
   * tumbling/sliding/session windows (ST5), and the per-mailbox monotone
@@ -104,43 +106,22 @@ object StreamOps {
         })
   }
 
-  /** ST4/S8 — idempotent `foreachBatch` sink: parquet written to a
-    * batchId-suffixed temp dir, then atomically renamed. Re-running a batch
-    * after a crash overwrites the same path instead of duplicating — the
-    * batch-id journal pattern (Restate's `ctx.run` journaling analog,
-    * login_workflow.py:110,164). */
+  /** ST4/S8 — idempotent `foreachBatch` sink: each batch's parquet is
+    * published once to `batch_<batchId>` by [[graft.sources.Ledger]] —
+    * the batch-id journal pattern (Restate's `ctx.run` journaling analog,
+    * login_workflow.py:110,164). A replay SKIPS instead of rewriting:
+    * rewriting would mint new part-file names for the same rows, and a
+    * DOWNSTREAM file-stream source chained on this directory (the §3.1
+    * handoff) dedups by file name, so it would read the batch twice. */
   def idempotentParquetSink(df: DataFrame, outDir: String,
                             checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // Write to a hidden temp dir, then publish with an atomic rename:
-        // a crash mid-write leaves only the temp dir (invisible to readers
-        // of batch_*); the retry overwrites the temp dir and renames again.
-        // PUBLISH-ONCE: if dest already exists the batch completed its
-        // rename on a previous attempt (rename is atomic, so existence ⟹
-        // completeness) and the replay re-derives identical content —
-        // SKIP instead of delete+re-rename. Rewriting would mint new part
-        // file names for the same rows, and a DOWNSTREAM file-stream
-        // source chained on this directory (the §3.1 handoff) dedups by
-        // file name, so a rename-then-replay would make it read the same
-        // batch twice. Skipping keeps the file set stable across replays,
-        // which is what makes the chained-query pipeline exactly-once
-        // end to end.
-        val conf = batch.sparkSession.sparkContext.hadoopConfiguration
-        val fs = new org.apache.hadoop.fs.Path(outDir)
-          .getFileSystem(conf)
-        val destPath = new org.apache.hadoop.fs.Path(s"$outDir/batch_$batchId")
-        if (!fs.exists(destPath)) {
-          val tmp = s"$outDir/.tmp_batch_$batchId"
-          batch.write.mode("overwrite").parquet(tmp)
-          // rename returns false (not throw) on HDFS-style failure —
-          // a silent false breaks "existence ⟹ completeness"; enforce
-          if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), destPath) &&
-              !fs.exists(destPath))
-            throw new IllegalStateException(
-              s"publish failed: rename $tmp -> $destPath returned false")
-        } else {
+        val dest = new org.apache.hadoop.fs.Path(s"$outDir/batch_$batchId")
+        val fs = dest.getFileSystem(
+          batch.sparkSession.sparkContext.hadoopConfiguration)
+        if (!Ledger.publishOnce(fs, dest)(tmp => batch.write.parquet(tmp.toString))) {
           // Publish is skipped, but the batch must still be PROCESSED:
           // when a stateful operator (e.g. the monotone guard's fMGWS)
           // feeds this sink, its per-partition state commits happen as a

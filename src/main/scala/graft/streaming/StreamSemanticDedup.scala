@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.VectorOps
+import graft.sources.Ledger
 
 /** Ingest-time SEMANTIC dedup over a persistent IVF index — the vector
   * analog of [[IncrementalDedup]] (which maintains MinHash/LSH state):
@@ -98,11 +99,11 @@ object StreamSemanticDedup {
           s"StreamSemanticDedup batch $batchId: vec_id " +
             s"${clash.head.get(0)} carries conflicting vectors")
       val dest = s"${cfg.outDir}/v=$batchId"
-      val fs = new Path(cfg.outDir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      val destPath = new Path(dest)
+      val fs = destPath.getFileSystem(s.sparkContext.hadoopConfiguration)
       val hasIndex = VectorOps.ivfIndexExists(s, cfg.indexPath)
 
-      if (!fs.exists(new Path(dest))) {
+      Ledger.publishOnce(fs, destPath) { tmp =>
         // ---- decide (pure function of batch + pre-batch index) ----
         val (wb, cleanup) =
           if (rows.isEmpty)
@@ -123,21 +124,11 @@ object StreamSemanticDedup {
           .join(drops, Seq("vec_id"), "left")
           .select(col("vec_id"),
             col("dup_of").isNull.as("kept"), col("dup_of"))
-        val tmp = s"${cfg.outDir}/.tmp_v_$batchId"
         // try/finally: cleanup() must run even when the decision write
-        // (or the publish rename) throws — otherwise the persisted
-        // training caches from semanticDropSetWithCleanup leak on every
-        // failed attempt, accumulating across restarts of this batch
-        try {
-          decisions.write.mode("overwrite").parquet(tmp)
-          // rename-failure contract: HDFS-style FileSystems return
-          // false instead of throwing; a silent false would leave the
-          // batch unpublished yet "attempted" — enforce existence
-          if (!fs.rename(new Path(tmp), new Path(dest)) &&
-              !fs.exists(new Path(dest)))
-            throw new IllegalStateException(
-              s"decision publish failed: rename $tmp -> $dest returned false")
-        } finally cleanup()
+        // throws — otherwise the persisted training caches from
+        // semanticDropSetWithCleanup leak on every failed attempt,
+        // accumulating across restarts of this batch
+        try decisions.write.parquet(tmp.toString) finally cleanup()
       }
 
       // ---- append survivors, derived from the PUBLISHED decisions ----

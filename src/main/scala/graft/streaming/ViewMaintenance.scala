@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.Exact.dec
+import graft.sources.Ledger
 
 /** Streaming materialized-view maintenance — the streaming dual of
   * q97_incremental_agg: a per-(status, year) revenue aggregate kept
@@ -16,16 +17,16 @@ import graft.functions.Exact.dec
   * snapshots (the same journal pattern as
   * [[StreamOps.idempotentParquetSink]], cf. the reference's Restate
   * `ctx.run` journaling, login_workflow.py:110): batch N merges the
-  * newest snapshot with version < N and publishes `v=N` by atomic
-  * rename. A crash-and-replay of batch N re-reads the SAME base and
-  * overwrites the SAME destination — the view never double-counts.
+  * newest snapshot with version < N and publishes `v=N` once
+  * ([[graft.sources.Ledger.publishOnce]]). A crash-and-replay of batch N
+  * finds `v=N` published and skips — the view never double-counts.
   *
   * Storage stays bounded: after each successful publish, snapshots older
   * than the newest `retainVersions` are garbage-collected. The retained
   * window must include the newest snapshot's predecessor (a crash between
   * publish and checkpoint-commit replays the LATEST batch, which re-reads
   * the newest version strictly below it), so `retainVersions` ≥ 2 is
-  * enforced. Atomicity caveat: `fs.rename` is atomic on HDFS-like
+  * enforced. Atomicity caveat: the publish rename is atomic on HDFS-like
   * filesystems but NOT on object stores (S3 renames are copy+delete);
   * object-store deployments should publish through a manifest/commit-file
   * protocol (write data, then atomically PUT a small manifest naming the
@@ -76,22 +77,14 @@ object ViewMaintenance {
     val merged = base.unionByName(delta)
       .groupBy(col("o_orderstatus"), col("yr"))
       .agg(sum(col("rev")).as("rev"), sum(col("n")).cast("long").as("n"))
-    val tmp = s"$viewDir/.tmp_v_$batchId"
-    val dest = s"$viewDir/v=$batchId"
-    val fs = new Path(viewDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val destPath = new Path(dest)
-    // PUBLISH-ONCE: dest exists ⟹ a prior attempt completed its rename
-    // (atomic) and a replay re-derives the same relation — skip instead
-    // of delete+re-rename. Rewriting would mint new part-file names for
-    // identical content, which both invalidates any reader's cached file
-    // listing for no reason and wastes the whole merge job.
-    if (fs.exists(destPath)) return
-    merged.write.mode("overwrite").parquet(tmp)
-    // rename returns false (not throw) on HDFS-style failure — enforce
-    if (!fs.rename(new Path(tmp), destPath) && !fs.exists(destPath))
-      throw new IllegalStateException(
-        s"view publish failed: rename $tmp -> $destPath returned false")
+    val destPath = new Path(s"$viewDir/v=$batchId")
+    val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // PUBLISH-ONCE: a replay re-derives the same relation — skip instead
+    // of rewriting, which would mint new part-file names for identical
+    // content, invalidate any reader's cached listing and waste the
+    // whole merge job.
+    if (!Ledger.publishOnce(fs, destPath)(tmp => merged.write.parquet(tmp.toString)))
+      return
     // GC: the view would otherwise grow one full snapshot per batch.
     // Keep the newest `retainVersions` (min 2 — the newest's predecessor
     // must survive for a latest-batch replay to find its base).

@@ -105,42 +105,4 @@ class HttpSignalSinkSpec extends SparkSpecBase {
       assert(receiver.appliesOf(k) == 1, s"$k applied ${receiver.appliesOf(k)} times")
     receiver.stop()
   }
-
-  test("ledger commit enforces the rename contract (HDFS-style false return)") {
-    import org.apache.hadoop.fs.Path
-    val dir = java.nio.file.Files.createTempDirectory("sig_ledger_contract").toString
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    // normal path: tmp exists, marker absent → rename succeeds, marker lands
-    val tmp1 = new Path(s"$dir/.tmp_batch_0"); val m1 = new Path(s"$dir/batch_0")
-    fs.mkdirs(tmp1)
-    HttpSignalSink.commitMarker(fs, tmp1, m1)
-    assert(fs.exists(m1) && !fs.exists(tmp1))
-
-    // HDFS-style false returns (the local FS throws instead of
-    // returning false, so stub rename to the HDFS behavior)
-    val falseFs = new org.apache.hadoop.fs.RawLocalFileSystem() {
-      override def rename(src: Path, dst: Path): Boolean = false
-    }
-    falseFs.initialize(new java.net.URI("file:///"),
-      spark.sparkContext.hadoopConfiguration)
-
-    // concurrent winner: rename reports false but the marker EXISTS (a
-    // concurrent attempt won the commit) — complete, must NOT throw
-    val tmp2 = new Path(s"$dir/.tmp_batch_1"); val m2 = new Path(s"$dir/batch_1")
-    fs.mkdirs(tmp2)
-    fs.mkdirs(m2)
-    HttpSignalSink.commitMarker(falseFs, tmp2, m2) // must not throw
-    assert(fs.exists(m2))
-
-    // silent failure: rename returns false AND no marker — the contract
-    // demands a loud throw, never an unmarked ledger
-    val tmp3 = new Path(s"$dir/.tmp_batch_2"); val m3 = new Path(s"$dir/batch_2")
-    fs.mkdirs(tmp3)
-    val ex = intercept[IllegalStateException] {
-      HttpSignalSink.commitMarker(falseFs, tmp3, m3)
-    }
-    assert(ex.getMessage.contains("ledger commit failed"))
-    assert(!fs.exists(m3))
-  }
 }

@@ -41,6 +41,27 @@ class OtpCorrelationSpec extends SparkSpecBase {
     assert(out.head.otp.contains("9999"))
   }
 
+  test("same-second OTP: a mail dated the request's whole second resolves it") {
+    // request at :00.500; the OTP mail's one-second Date header reads :00
+    val t0 = 1704100000000L
+    val r = CorrelationEvent("zepto_u7", new Timestamp(t0 + 500),
+      Some(LoginRequest("zepto_u7", "zepto", "u7", new Timestamp(t0 + 500))),
+      None)
+    val st = freshState
+    val out = OtpCorrelation.transition("zepto_u7",
+      Iterator(CorrelationEvent("zepto_u7", new Timestamp(t0), None,
+        Some("4321")), r), st).toSeq
+    assert(out == Seq(LoginOutcome("zepto_u7", SessionStatus.Success,
+      Some("4321"), "otp received")))
+    // an OTP dated an EARLIER whole second still precedes its request
+    val st2 = freshState
+    val early = OtpCorrelation.transition("zepto_u7",
+      Iterator(CorrelationEvent("zepto_u7", new Timestamp(t0 - 1000), None,
+        Some("4321")), r), st2).toSeq
+    assert(early.isEmpty)
+    assert(st2.get.status == SessionStatus.WaitingForOtp)
+  }
+
   test("F7: non-zepto platform rejected with error, no session opened (login_workflow.py:44)") {
     val st = freshState
     val badReq = CorrelationEvent("swiggy_u9", ts(0),
