@@ -25,7 +25,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * alert forever: after `maxEscalations` silent intervals the key emits
   * one `terminal = true` alert and its state is REMOVED — alert volume
   * and state size stay bounded even when keys die and never return (a
-  * later heartbeat simply re-registers the key from scratch).
+  * later heartbeat simply re-registers the key from scratch). It runs
+  * under either state-store provider.
   */
 object HeartbeatMonitor {
 

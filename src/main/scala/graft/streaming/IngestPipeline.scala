@@ -78,8 +78,7 @@ object IngestPipeline {
     * (main.py:89-136 semantics: body-derived addresses override headers,
     * OTP nullable, stale mail dropped via the freshness filter). `now` is
     * injectable for deterministic tests (the reference uses wall clock). */
-  def parseEmails(messages: DataFrame, now: org.apache.spark.sql.Column,
-                  freshness: String = "INTERVAL 2 MINUTES"): DataFrame = {
+  def parseEmails(messages: DataFrame, now: org.apache.spark.sql.Column): DataFrame = {
     val m = messages
       .withColumn("mime", MimeParser.parseMime(col("raw_email")))      // E5
       .withColumn("body_text",
@@ -88,7 +87,8 @@ object IngestPipeline {
             .getField("body")))                                        // F8/E8
       .withColumn("email_ts",
         E.rfc2822Date(element_at(col("mime.headers"), "date")))        // E6
-    m.filter(E.isFresh(col("email_ts"), now, freshness))               // F4/ST2
+    m.filter(E.isFresh(col("email_ts"), now,
+        s"INTERVAL ${OtpCorrelation.FreshnessMs / 1000} SECONDS"))     // F4/ST2
       .select(
         E.coalesceAddress(E.forwardedFrom(col("body_text")),
           E.headerAddress(element_at(col("mime.headers"), "from")))

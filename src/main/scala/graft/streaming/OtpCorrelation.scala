@@ -16,8 +16,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    (`api/login_workflow.py:170-175`);
   *  - no OTP within OTP_TIMEOUT → `error` ("timeout", the
   *    `asyncio.wait_for(..., timeout=300)` path);
-  *  - an OTP with no open session is dropped (the reference's HTTP signal
-  *    to a non-existent workflow key, fire-and-forget `api/main.py:187-194`);
+  *  - an OTP with no open session is held for the freshness window
+  *    ([[FreshnessMs]]) and resolves a request that arrives in time; one
+  *    that expires does so silently, like the reference's fire-and-forget
+  *    signal to a non-existent workflow key (`api/main.py:187-194`). The
+  *    reference's workflow exists before its mail is sent; here the two
+  *    bus topics are read independently, so a mail can be read a
+  *    micro-batch ahead of its request;
   *  - terminal states are cached: a re-delivered request for a terminal key
   *    re-emits the cached outcome instead of reopening (idempotent re-entry,
   *    `api/login_workflow.py:71-91`).
@@ -26,13 +31,20 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * state in the HDFS/RocksDB state store — per-key state is O(1) (a status
   * enum + OTP), so state size grows with live keys only; timeouts garbage-
   * collect abandoned sessions. This is the standard design for
-  * million-key correlation on a real cluster.
+  * million-key correlation on a real cluster, and it runs under either
+  * state-store provider.
   */
 object OtpCorrelation {
 
   /** 300 s — `asyncio.wait_for(ctx.promise("otp_wait"), timeout=300)`,
     * api/login_workflow.py:117. */
   val OtpTimeoutMs: Long = 300 * 1000L
+
+  /** 2 min — the mail freshness bound (`main.py:96`), which is also how
+    * long an OTP that arrives before its request is held. */
+  val FreshnessMs: Long = 120 * 1000L
+
+  private def second(ms: Long): Long = Math.floorDiv(ms, 1000L)
 
   /** A key's in-batch events in processing order (micro-batches don't
     * sort for us): by whole second, then requests before OTPs, then
@@ -42,7 +54,7 @@ object OtpCorrelation {
     * drop it. An OTP dated an earlier whole second still sorts first. */
   def batchOrder(events: Iterator[CorrelationEvent]): Seq[CorrelationEvent] =
     events.toSeq.sortBy(e =>
-      (Math.floorDiv(e.ts.getTime, 1000L), e.request.isEmpty, e.ts.getTime))
+      (second(e.ts.getTime), e.request.isEmpty, e.ts.getTime))
 
   /** The state-transition function (pure, unit-testable). */
   def transition(
@@ -53,7 +65,8 @@ object OtpCorrelation {
       // ST3: promise expiry. Only a session still awaiting its OTP is an
       // error; terminal states also arm the timeout (as cache GC, below),
       // and those must expire silently — else every Success would be
-      // followed ~300s later by a spurious timeout Error.
+      // followed ~300s later by a spurious timeout Error. A held OTP that
+      // no request claimed expires silently too.
       val st = state.get
       state.remove()
       return if (st.status == SessionStatus.WaitingForOtp)
@@ -74,10 +87,16 @@ object OtpCorrelation {
             case Some(st) if SessionStatus.terminal(st.status) =>
               // J2: idempotent re-entry — return cached terminal outcome.
               out += LoginOutcome(key, st.status, st.otp, "cached")
-            case Some(_) =>
+            case Some(st) if st.status == SessionStatus.OtpPending &&
+                second(st.startedAtMs) >= second(req.reqTs.getTime) =>
+              // the OTP was read before its request: resolve at once
+              out += succeed(state, st.copy(startedAtMs = req.reqTs.getTime), st.otp.get)
+            case Some(st) if st.status != SessionStatus.OtpPending =>
               // in-flight: do not re-launch (login_workflow.py:84-91).
               ()
-            case None =>
+            case _ =>
+              // no session, or a pending OTP dated before this request
+              // (batchOrder's rule): that OTP is not this login's
               val st = SessionState(key, SessionStatus.WaitingForOtp, None,
                 req.reqTs.getTime, "subprocess created; awaiting otp")
               state.update(st)
@@ -86,22 +105,30 @@ object OtpCorrelation {
         case (None, Some(otp)) =>
           state.getOption match {
             case Some(st) if st.status == SessionStatus.WaitingForOtp =>
-              val done = st.copy(status = SessionStatus.Success,
-                otp = Some(otp), message = "otp received")
-              state.update(done)
-              // Keep terminal state cached for idempotent re-entry; refresh
-              // the timeout so the cache itself is eventually collected.
-              state.setTimeoutDuration(OtpTimeoutMs)
-              out += LoginOutcome(key, SessionStatus.Success, Some(otp),
-                "otp received")
-            case _ =>
-              // OTP for unknown/terminal key: dropped (fire-and-forget).
+              out += succeed(state, st, otp)
+            case Some(st) if SessionStatus.terminal(st.status) =>
+              // OTP for a terminal key: dropped (fire-and-forget).
               ()
+            case _ =>
+              // no session yet: hold the OTP (a later one replaces it)
+              state.update(SessionState(key, SessionStatus.OtpPending,
+                Some(otp), ev.ts.getTime, "otp held; awaiting request"))
+              state.setTimeoutDuration(FreshnessMs)
           }
         case _ => ()
       }
     }
     out.iterator
+  }
+
+  /** Resolve `st` with `otp`. The terminal state stays cached for
+    * idempotent re-entry; the refreshed timeout collects the cache. */
+  private def succeed(state: GroupState[SessionState], st: SessionState,
+      otp: String): LoginOutcome = {
+    state.update(st.copy(status = SessionStatus.Success, otp = Some(otp),
+      message = "otp received"))
+    state.setTimeoutDuration(OtpTimeoutMs)
+    LoginOutcome(st.key, SessionStatus.Success, Some(otp), "otp received")
   }
 
   /** Wire the operator over a (possibly unioned) correlation-event stream. */
@@ -113,32 +140,6 @@ object OtpCorrelation {
       .flatMapGroupsWithState(
         OutputMode.Append(),
         GroupStateTimeout.ProcessingTimeTimeout())(transition)
-  }
-
-  /** J1 option (a) — the pure stream-stream interval join (SURVEY.md §2.3):
-    * a request matches the first OTP for its key arriving within
-    * [reqTs, reqTs + 5 minutes]. Watermarks bound both join-state buffers,
-    * so state is GC'd at any scale. Compared to the state-machine form
-    * ([[correlate]]) this cannot express terminal-state caching or explicit
-    * timeout outcomes — it is the right tool when only the matched pairs
-    * are needed. */
-  def correlateViaJoin(
-      requests: Dataset[LoginRequest],
-      otps: Dataset[ParsedEmail])(implicit spark: SparkSession): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val r = requests.toDF().withWatermark("reqTs", "5 minutes")
-    val o = otps.toDF()
-      .filter(col("otp").isNotNull && col("platform").isNotNull) // F5
-      .select(
-        concat_ws("_", col("platform"),
-          substring_index(col("toEmail"), "@", 1)).as("okey"), // E14/E15
-        col("otp"), col("emailTs"))
-      .withWatermark("emailTs", "2 minutes") // ST2 freshness bound
-    r.join(o,
-      expr("""key = okey AND
-              emailTs >= reqTs AND
-              emailTs <= reqTs + INTERVAL 5 MINUTES"""), "inner")
-      .select(col("key"), col("otp"), col("reqTs"), col("emailTs"))
   }
 
   /** Union helper: merge the two source streams into correlation events

@@ -30,22 +30,17 @@ object StateInspect {
     spark.read.format("state-metadata").load(checkpointDir)
 
   /** Raw state rows (`key` struct, `value` struct, `partition_id`) for one
-    * operator's store at the latest — or a specific — committed batch.
-    *
-    * @param stateVarName for `transformWithState` operators, which keep one
-    *                     store per declared state variable. */
+    * operator's store at the latest — or a specific — committed batch. */
   def stateRows(
       spark: SparkSession,
       checkpointDir: String,
       operatorId: Int = 0,
       storeName: String = "default",
-      batchId: Option[Long] = None,
-      stateVarName: Option[String] = None): DataFrame = {
+      batchId: Option[Long] = None): DataFrame = {
     var reader = spark.read.format("statestore")
       .option("operatorId", operatorId.toString)
       .option("storeName", storeName)
     batchId.foreach(b => reader = reader.option("batchId", b.toString))
-    stateVarName.foreach(v => reader = reader.option("stateVarName", v))
     reader.load(checkpointDir)
   }
 
@@ -60,15 +55,13 @@ object StateInspect {
       startBatchId: Long,
       endBatchId: Option[Long] = None,
       operatorId: Int = 0,
-      storeName: String = "default",
-      stateVarName: Option[String] = None): DataFrame = {
+      storeName: String = "default"): DataFrame = {
     var reader = spark.read.format("statestore")
       .option("operatorId", operatorId.toString)
       .option("storeName", storeName)
       .option("readChangeFeed", "true")
       .option("changeStartBatchId", startBatchId.toString)
     endBatchId.foreach(b => reader = reader.option("changeEndBatchId", b.toString))
-    stateVarName.foreach(v => reader = reader.option("stateVarName", v))
     reader.load(checkpointDir)
   }
 
@@ -94,21 +87,6 @@ object StateInspect {
     raw.select(
       (col(s"key.$keyField").as("group_key") +: stateCols :+
         col("partition_id")): _*)
-  }
-
-  /** Same decode against an [[OtpCorrelationTws.correlate]] checkpoint:
-    * `transformWithState` keeps one store per declared state variable, so
-    * the per-key `session` ValueState is addressed by name (the `timerAt`
-    * variable and the timer registry are separate stores). */
-  def otpSessionsTws(spark: SparkSession, checkpointDir: String,
-      batchId: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.types.StructType
-    val raw = stateRows(spark, checkpointDir, batchId = batchId,
-      stateVarName = Some("session"))
-    val keyField = raw.schema("key").dataType
-      .asInstanceOf[StructType].fieldNames.head
-    raw.select(col(s"key.$keyField").as("group_key"), col("value.*"),
-      col("partition_id"))
   }
 
   /** Only the sessions still awaiting an OTP — the reference's "subprocess

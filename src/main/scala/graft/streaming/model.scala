@@ -45,12 +45,14 @@ final case class CorrelationEvent(
   * → success | error. In the Spark re-expression `browser_ready` and
   * `otp_submitted` are driven by external status events; the correlation
   * operator itself moves waiting_for_otp → success on OTP arrival and
-  * → error("timeout") on state timeout. */
+  * → error("timeout") on state timeout. `otp_pending` has no reference
+  * counterpart: it holds an OTP read before its login request. */
 object SessionStatus {
   val SubprocessCreated = "subprocess_created"
   val BrowserReady = "browser_ready"
   val WaitingForOtp = "waiting_for_otp"
   val OtpSubmitted = "otp_submitted"
+  val OtpPending = "otp_pending"
   val Success = "success"
   val Error = "error"
   val terminal: Set[String] = Set(Success, Error)

@@ -140,14 +140,18 @@ class RetrievalSpec extends SparkSpecBase {
         == asMap(Retrieval.phraseSearch(docs, Seq("a", "b"))),
         "replayed append double-counted")
       // torn debris: a junk tmp dir from a crashed attempt is cleared
-      // (staging lives INSIDE the current generation dir)
-      val tmp = new org.apache.hadoop.fs.Path(
-        Retrieval.postingsGenDir(spark, dir), ".append_tmp_b3")
+      // (staging is the ledger's temp sibling of `appends/<tag>`)
+      val b3 = new org.apache.hadoop.fs.Path(
+        Retrieval.postingsGenDir(spark, dir), "appends/b3")
+      val tmp = graft.sources.Ledger.tmpOf(b3)
       hfs.mkdirs(tmp)
       val junk = hfs.create(new org.apache.hadoop.fs.Path(tmp, "junk"), true)
       try junk.write("x".getBytes) finally junk.close()
       assert(Retrieval.appendPostings(
         docs.limit(0), dir, "b3"), "empty append over debris must publish")
+      assert(hfs.exists(b3) &&
+        !hfs.exists(new org.apache.hadoop.fs.Path(b3, "junk")),
+        "the torn attempt's debris was published")
       assert(asMap(Retrieval.phraseSearchStored(spark, dir, Seq("a", "b")))
         == asMap(Retrieval.phraseSearch(docs, Seq("a", "b"))),
         "empty append changed results")

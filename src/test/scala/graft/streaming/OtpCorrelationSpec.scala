@@ -72,11 +72,51 @@ class OtpCorrelationSpec extends SparkSpecBase {
     assert(!st.exists)
   }
 
-  test("otp with no open session is dropped (fire-and-forget signal)") {
+  test("otp with no open session is held pending for the freshness window") {
     val st = freshState
     val out = OtpCorrelation.transition("zepto_u3", Iterator(otp("zepto_u3", "1111", 0)), st).toSeq
     assert(out.isEmpty)
-    assert(!st.exists)
+    assert(st.get == SessionState("zepto_u3", SessionStatus.OtpPending,
+      Some("1111"), ts(0).getTime, "otp held; awaiting request"))
+    assert(st.getTimeoutTimestampMs.get == 1000L + OtpCorrelation.FreshnessMs)
+  }
+
+  test("early OTP: the OTP's batch, then its request's batch → success with that OTP") {
+    val st = freshState
+    OtpCorrelation.transition("k", Iterator(otp("k", "1111", 3)), st)
+    // a second early OTP replaces the first
+    OtpCorrelation.transition("k", Iterator(otp("k", "2222", 4)), st)
+    val out = OtpCorrelation.transition("k", Iterator(req("k", 4)), st).toSeq
+    assert(out == Seq(LoginOutcome("k", SessionStatus.Success, Some("2222"), "otp received")))
+    assert(st.get.status == SessionStatus.Success)
+    assert(st.get.startedAtMs == ts(4).getTime)
+    // cached under the usual GC timeout, and re-entry reads the cache
+    assert(st.getTimeoutTimestampMs.get == 1000L + OtpCorrelation.OtpTimeoutMs)
+    assert(OtpCorrelation.transition("k", Iterator(req("k", 9)), st).toSeq ==
+      Seq(LoginOutcome("k", SessionStatus.Success, Some("2222"), "cached")))
+  }
+
+  test("early OTP dated an earlier second than the request: discarded, the request waits") {
+    val st = freshState
+    OtpCorrelation.transition("k", Iterator(otp("k", "1111", 3)), st)
+    val out = OtpCorrelation.transition("k", Iterator(req("k", 4)), st).toSeq
+    assert(out.isEmpty)
+    assert(st.get.status == SessionStatus.WaitingForOtp)
+    assert(st.get.otp.isEmpty)
+    assert(st.getTimeoutTimestampMs.get == 1000L + OtpCorrelation.OtpTimeoutMs)
+  }
+
+  test("pending OTP times out silently: no output, state removed") {
+    val st = freshState
+    OtpCorrelation.transition("k", Iterator(otp("k", "1111", 0)), st)
+    val timedOut = TestGroupState.create[SessionState](
+      optionalState = Optional.of(st.get),
+      timeoutConf = GroupStateTimeout.ProcessingTimeTimeout(),
+      batchProcessingTimeMs = 1000L + OtpCorrelation.FreshnessMs + 1,
+      eventTimeWatermarkMs = Optional.empty[Long](), hasTimedOut = true)
+    val out = OtpCorrelation.transition("k", Iterator.empty, timedOut).toSeq
+    assert(out.isEmpty, s"a pending OTP's expiry must emit nothing, got $out")
+    assert(timedOut.isRemoved)
   }
 
   test("in-flight re-entry does not relaunch (login_workflow.py:79-86)") {
@@ -94,6 +134,10 @@ class OtpCorrelationSpec extends SparkSpecBase {
     OtpCorrelation.transition("k", Iterator(otp("k", "4242", 1)), st)
     val out = OtpCorrelation.transition("k", Iterator(req("k", 60)), st).toSeq
     assert(out == Seq(LoginOutcome("k", SessionStatus.Success, Some("4242"), "cached")))
+    // an OTP for the terminal key is dropped, not held
+    val before = st.get
+    assert(OtpCorrelation.transition("k", Iterator(otp("k", "5555", 61)), st).isEmpty)
+    assert(st.get == before)
   }
 
   test("timeout fires → error outcome, state removed (300s promise expiry)") {
@@ -155,7 +199,7 @@ class OtpCorrelationSpec extends SparkSpecBase {
         ParsedEmail("no-reply@zepto.co.in", "carol@example.com",
           Some("5555"), Some("zepto"), ts(20)),
         ParsedEmail("no-reply@zepto.co.in", "dave@example.com",
-          Some("6666"), Some("zepto"), ts(21)), // no session → dropped
+          Some("6666"), Some("zepto"), ts(21)), // no session → held, silent
         ParsedEmail("x@y.com", "carol@example.com",
           None, Some("zepto"), ts(22)))         // F5: no otp → filtered
       val deadline = System.currentTimeMillis() + 60000
@@ -196,50 +240,42 @@ class OtpCorrelationSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
-  test("J1 option (a): stream-stream interval join matches within the window only") {
-    implicit val s = spark
-    import s.implicits._
-    val reqIn = MemoryStream[LoginRequest](spark)
-    val otpIn = MemoryStream[ParsedEmail](spark)
-    val q = OtpCorrelation.correlateViaJoin(reqIn.toDS(), otpIn.toDS())
-      .writeStream.format("memory").queryName("join_out")
-      .outputMode("append").start()
-    try {
-      reqIn.addData(LoginRequest("zepto_erin", "zepto", "erin", ts(0)))
-      otpIn.addData(
-        ParsedEmail("a@b.c", "erin@example.com", Some("1111"), Some("zepto"), ts(60)),   // in window
-        ParsedEmail("a@b.c", "erin@example.com", Some("2222"), Some("zepto"), ts(600))) // outside 5 min
-      q.processAllAvailable()
-      val rows = spark.table("join_out").select("key", "otp").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-      assert(rows == Set(("zepto_erin", "1111")))
-    } finally q.stop()
-  }
-
   test("end-to-end: unioned MemoryStream through flatMapGroupsWithState") {
     implicit val s = spark
     import s.implicits._
-    val input = MemoryStream[CorrelationEvent](spark)
     // NOTE: with ProcessingTimeTimeout the engine schedules timeout-check
     // batches continuously, so processAllAvailable() never observes
     // quiescence — poll the sink with a deadline instead.
-    val q = OtpCorrelation.correlate(input.toDS())
-      .writeStream.format("memory").queryName("otp_out")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
-      .start()
-    def awaitRows(n: Long): Unit = {
-      val deadline = System.currentTimeMillis() + 60000
-      while (spark.table("otp_out").count() < n &&
-             System.currentTimeMillis() < deadline) Thread.sleep(200)
+    StateProviders.zipWithIndex.foreach { case (provider, i) =>
+      val sink = s"otp_out_$i"
+      withConfs(ProviderConf -> provider) {
+        val input = MemoryStream[CorrelationEvent](spark)
+        val q = OtpCorrelation.correlate(input.toDS())
+          .writeStream.format("memory").queryName(sink)
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
+          .start()
+        def awaitRows(n: Long): Unit = {
+          val deadline = System.currentTimeMillis() + 60000
+          while (spark.table(sink).count() < n &&
+                 System.currentTimeMillis() < deadline) Thread.sleep(200)
+        }
+        try {
+          input.addData(req("zepto_alice", 0), req("zepto_bob", 0))
+          input.addData(otp("zepto_alice", "7777", 30), otp("zepto_nobody", "0000", 31),
+            otp("zepto_carol", "8888", 32))
+          awaitRows(1)
+          // carol's OTP was read a batch before her request; this batch
+          // also completes after any wrong output for bob or nobody
+          input.addData(req("zepto_carol", 32))
+          awaitRows(2)
+          val rows = spark.table(sink).as[LoginOutcome].collect()
+          assert(rows.toSet == Set(
+            LoginOutcome("zepto_alice", SessionStatus.Success, Some("7777"), "otp received"),
+            LoginOutcome("zepto_carol", SessionStatus.Success, Some("8888"), "otp received")),
+            s"under $provider")
+        } finally q.stop()
+      }
     }
-    try {
-      input.addData(req("zepto_alice", 0), req("zepto_bob", 0))
-      input.addData(otp("zepto_alice", "7777", 30), otp("zepto_nobody", "0000", 31))
-      awaitRows(1)
-      val rows = spark.table("otp_out").as[LoginOutcome].collect()
-      assert(rows.toSet == Set(
-        LoginOutcome("zepto_alice", SessionStatus.Success, Some("7777"), "otp received")))
-    } finally q.stop()
   }
 }

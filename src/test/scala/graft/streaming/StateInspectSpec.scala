@@ -91,15 +91,10 @@ class StateInspectSpec extends SparkSpecBase {
     // readChangeFeed needs the RocksDB provider WITH changelog
     // checkpointing — each batch then persists its mutation log, which is
     // exactly what the feed replays
-    val confs = Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    withConfs(ProviderConf -> StateProviders.last,
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    val ckpt = Files.createTempDirectory("si_cdc_ckpt").toString
-    try {
+        "true") {
+      val ckpt = Files.createTempDirectory("si_cdc_ckpt").toString
       implicit val s = spark
       import s.implicits._
       val input = MemoryStream[CorrelationEvent](spark)
@@ -138,45 +133,6 @@ class StateInspectSpec extends SparkSpecBase {
         .map(_.getAs[String]("status")).toSeq
       assert(puts == Seq(SessionStatus.WaitingForOtp, SessionStatus.Success),
         s"unexpected change feed: ${changes.mkString(", ")}")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  test("tws variant: the session ValueState store is readable by name") {
-    val k = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(k)
-    spark.conf.set(k,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ckpt = Files.createTempDirectory("si_tws_ckpt").toString
-    try {
-      implicit val s = spark
-      import s.implicits._
-      val input = MemoryStream[CorrelationEvent](spark)
-      val q = OtpCorrelationTws.correlate(input.toDS())
-        .writeStream.format("memory").queryName("si_tws_out")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.ProcessingTime("500 milliseconds"))
-        .start()
-      try {
-        input.addData(req("zepto_x", 0), req("zepto_y", 1))
-        input.addData(otp("zepto_x", "4242", 10))
-        val deadline = System.currentTimeMillis() + 60000
-        while (spark.table("si_tws_out").count() < 1 &&
-               System.currentTimeMillis() < deadline) Thread.sleep(200)
-        assert(spark.table("si_tws_out").count() == 1)
-      } finally q.stop()
-      val byKey = StateInspect.otpSessionsTws(spark, ckpt).collect()
-        .map(r => r.getAs[String]("group_key") -> r.getAs[String]("status"))
-        .toMap
-      assert(byKey == Map(
-        "zepto_x" -> SessionStatus.Success,
-        "zepto_y" -> SessionStatus.WaitingForOtp))
-    } finally prev match {
-      case Some(v) => spark.conf.set(k, v)
-      case None => spark.conf.unset(k)
     }
   }
 }

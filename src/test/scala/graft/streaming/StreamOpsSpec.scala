@@ -28,6 +28,29 @@ class StreamOpsSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
+  test("monotone guard also runs under RocksDB (provider is a config, not a code change)") {
+    withConfs(ProviderConf -> StateProviders.last) {
+      implicit val s = spark
+      import s.implicits._
+      val input = MemoryStream[HistoryEvent](s)
+      val q = StreamOps.monotoneWatermarkGuard(input.toDS())
+        .writeStream.format("memory").queryName("rocksdb_guard_out")
+        .outputMode("append").start()
+      try {
+        input.addData(HistoryEvent("m1", 10))
+        q.processAllAvailable()
+        // 7 arrives AFTER 10 was committed to the state store → stale
+        input.addData(HistoryEvent("m1", 7), HistoryEvent("m1", 12))
+        q.processAllAvailable()
+        input.addData(HistoryEvent("m1", 11)) // stale vs stored 12
+        q.processAllAvailable()
+        val out = s.table("rocksdb_guard_out").as[MailboxWatermark]
+          .collect().map(_.historyId).sorted
+        assert(out.toSeq == Seq(10L, 12L))
+      } finally q.stop()
+    }
+  }
+
   test("B6 property: any shuffled/duplicated id sequence → final watermark = max, each id ≤ once") {
     implicit val s = spark
     import s.implicits._

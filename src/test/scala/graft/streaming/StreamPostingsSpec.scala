@@ -77,10 +77,15 @@ class StreamPostingsSpec extends SparkSpecBase {
       // torn attempt: staged-but-unpublished debris for batch 2, then
       // the replay publishes cleanly
       val gen = Retrieval.postingsGenDir(spark, dir)
-      val tmp = new org.apache.hadoop.fs.Path(gen, ".append_tmp_b000000000002")
+      val b2 = new org.apache.hadoop.fs.Path(gen, "appends/b000000000002")
+      val tmp = graft.sources.Ledger.tmpOf(b2)
       hfs.mkdirs(tmp)
+      hfs.create(new org.apache.hadoop.fs.Path(tmp, "junk"), true).close()
       assert(StreamPostings.maintainBatch(
         Seq(3L -> "a b").toDF("doc_id", "text"), 2L, dir))
+      assert(hfs.exists(b2) &&
+        !hfs.exists(new org.apache.hadoop.fs.Path(b2, "junk")),
+        "the torn attempt's debris was published")
       checkAll(dir, Seq(1L -> "z z", 2L -> "x y", 3L -> "a b"))
     } finally hfs.delete(hp, true)
   }

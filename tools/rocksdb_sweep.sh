@@ -5,9 +5,10 @@
 # The default suite runs on the HDFS-backed in-memory provider; production
 # deployments at 100 TB state run RocksDB, whose semantics differ in ways
 # that have bitten real pipelines (value iterator invalidation, changelog
-# checkpointing, native memory). The TWS and StateInspect specs already
-# pin RocksDB locally; this sweep pushes the REMAINING stateful operators
-# (OTP correlation fMGWS, funnel, heartbeat, stream dedup, view/sketch
+# checkpointing, native memory). The default suite already pins RocksDB
+# for a few tests (the OTP correlation end-to-end test, the monotone
+# guard, StateInspect's change feed); this sweep pushes every stateful
+# operator (OTP correlation, funnel, heartbeat, stream dedup, view/sketch
 # maintenance, the full §3.1 connector lifecycle) through it.
 #
 # Mechanism: GRAFT_STATE_PROVIDER is forwarded by build.sbt into the
@@ -22,10 +23,8 @@ cd "$(dirname "$0")/.."
 GRAFT_STATE_PROVIDER=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider \
 exec sbt -batch "testOnly \
   graft.streaming.OtpCorrelationSpec \
-  graft.streaming.OtpCorrelationTwsSpec \
   graft.streaming.FunnelStreamSpec \
   graft.streaming.HeartbeatMonitorSpec \
-  graft.streaming.HeartbeatMonitorTwsSpec \
   graft.streaming.StreamDedupSpec \
   graft.streaming.StreamOpsSpec \
   graft.streaming.StateInspectSpec \
