@@ -76,6 +76,9 @@ object StreamOps {
   /** A (mailboxId, historyId) pair for the watermark guard. */
   final case class HistoryEvent(mailbox: String, historyId: Long)
   final case class MailboxWatermark(mailbox: String, historyId: Long)
+  /** A [[HistoryEvent]] with the file it was read from ("" for a source
+    * without files). */
+  final case class ArrivedEvent(mailbox: String, historyId: Long, arrival: String)
 
   /** F2/A1 exact semantics — per-mailbox monotone watermark: emit only
     * events that *advance* the per-key running max, exactly the reference's
@@ -84,18 +87,27 @@ object StreamOps {
     * instead of `last_history_id.txt` (main.py:257-290).
     *
     * Unlike `dropDuplicates` this also drops *reordered* (smaller) ids, and
-    * its state is O(1) per mailbox forever — it never needs watermark GC. */
+    * its state is O(1) per mailbox forever — it never needs watermark GC.
+    *
+    * Within a micro-batch the ids are checked in arrival order, as the
+    * reference checks each push: a stale id that shares a batch with the
+    * larger id before it is dropped. Arrival is the source file's name
+    * (`input_file_name`, read in the scan stage before the shuffle), which
+    * for [[HttpPushReceiver]]'s zero-padded `msg_<seq>.json` spool sorts
+    * in arrival order. A source without files gives "" for every row, so
+    * its ids are checked in ascending order. */
   def monotoneWatermarkGuard(events: Dataset[HistoryEvent])
                             (implicit spark: SparkSession): Dataset[MailboxWatermark] = {
     import spark.implicits._
-    events.groupByKey(_.mailbox)
+    events.withColumn("arrival", input_file_name()).as[ArrivedEvent]
+      .groupByKey(_.mailbox)
       .flatMapGroupsWithState(
         OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (mailbox: String, evs: Iterator[HistoryEvent],
+        (mailbox: String, evs: Iterator[ArrivedEvent],
          state: GroupState[Long]) => {
           var last = state.getOption.getOrElse(Long.MinValue)
           val out = scala.collection.mutable.ArrayBuffer.empty[MailboxWatermark]
-          evs.toSeq.sortBy(_.historyId).foreach { e =>
+          evs.toSeq.sortBy(e => (e.arrival, e.historyId)).foreach { e =>
             if (e.historyId > last) {
               last = e.historyId
               out += MailboxWatermark(mailbox, e.historyId)

@@ -6,12 +6,12 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{DelegateToFileSystem, FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The local filesystem with HDFS-style rename failure: `rename` reports
   * failure by returning false instead of throwing. */
-class FalseRenameLocalFs extends RawLocalFileSystem {
+class FalseRenameLocalFs extends NioRawLocalFileSystem {
   override def getUri: URI = URI.create(s"${FalseRenameFs.Scheme}:///")
   override def getScheme: String = FalseRenameFs.Scheme
   override def rename(src: Path, dst: Path): Boolean = false

@@ -57,12 +57,11 @@ class HttpPushReceiverSpec extends SparkSpecBase {
       val q1 = run()
       q1.processAllAvailable()
       q1.stop()
-      // one micro-batch: within-batch ordering sorts ascending (3 then 5
-      // both advance — the documented guard semantics); the REDELIVERED
-      // 5 is the one that must die, and exactly one 5 survives
+      // one micro-batch, checked in arrival order as the reference
+      // checks each push: 3 after 5 is stale, and the REDELIVERED 5 dies
+      // too, so exactly one 5 survives
       import scala.jdk.CollectionConverters._
-      assert(out.asScala.toSeq.sortBy(_.historyId)
-        == Seq(MailboxWatermark("m1", 3), MailboxWatermark("m1", 5)))
+      assert(out.asScala.toSeq == Seq(MailboxWatermark("m1", 5)))
       out.clear()
 
       // restart: the file-source checkpoint must not re-admit old spool
@@ -75,6 +74,37 @@ class HttpPushReceiverSpec extends SparkSpecBase {
       q2.stop()
       assert(out.asScala.toSeq == Seq(MailboxWatermark("m1", 9)),
         "restart must process only new spool files, and 4 < 9 is stale")
+    } finally rcv.stop()
+  }
+
+  test("a stale id in the same micro-batch as the larger id before it is dropped") {
+    implicit val s = spark
+    import s.implicits._
+    val spool = java.nio.file.Files.createTempDirectory("push_order").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("push_order_ckpt").toString
+    val rcv = new HttpPushReceiver(spool)
+    def envelope(historyId: Long): String = {
+      val data = java.util.Base64.getEncoder.encodeToString(
+        s"""{"emailAddress":"m1","historyId":$historyId}""".getBytes("UTF-8"))
+      s"""{"message":{"data":"$data"}}"""
+    }
+    try {
+      // all three are spooled before the one trigger: 7 arrives after 10
+      Seq(10L, 7L, 12L).foreach(id => assert(post(rcv.endpoint, envelope(id)) == 200))
+      // the deployed shape: decode behind a projection, then the guard
+      val envelopes = HttpPushReceiver.stream(spark, spool,
+        StructType.fromDDL("message STRUCT<data: STRING>"))
+        .select(org.apache.spark.sql.functions.col("message.data").as("data_b64"))
+      val q = IngestPipeline.notifications(envelopes)
+        .writeStream.format("memory").queryName("push_order_out")
+        .option("checkpointLocation", ckpt).start()
+      try {
+        q.processAllAvailable()
+        assert(q.recentProgress.count(_.numInputRows > 0) == 1, "one micro-batch")
+        val ids = spark.table("push_order_out").as[MailboxWatermark]
+          .collect().map(_.historyId).sorted
+        assert(ids.toSeq == Seq(10L, 12L), "7 arrived after 10 and is stale")
+      } finally q.stop()
     } finally rcv.stop()
   }
 
