@@ -20,8 +20,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     `spark.graft.iterate.checkpointDir`). Each iteration lands on
   *     the cluster FS and is recomputable after any executor loss —
   *     the honest answer for a multi-hour 100 TB PageRank, bought with
-  *     one distributed write per iteration (priced by GraphProbe's
-  *     ckpt leg; see SURVEY round-13 notes).
+  *     one distributed write per iteration (priced in the SURVEY
+  *     round-13 notes).
   *
   * Both modes truncate lineage identically, so plans stay
   * constant-depth at any iteration count, and both return

@@ -238,7 +238,7 @@ object LangModelOps {
     // guide's §8 fingerprint table; model and scorer both read its
     // blocks. Bit-identical by algebra: cnt = Σ_docs c, n_tri = Σ c,
     // sum_bw = Σ bw·c — all integer sums regrouped, no float anywhere
-    // (QuickExp paired A/B: equal rows, ~wash at sf0.1 where the
+    // (paired A/B in one process: equal rows, ~wash at sf0.1 where the
     // corpus is 500 docs; at scale this is one corpus pass, not two).
     val dg = docs.select(col("doc_id"),
         explode(charNgrams(col("text"), 3)).as("g"))

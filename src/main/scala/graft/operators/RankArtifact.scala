@@ -495,7 +495,7 @@ object RankArtifact {
       // distinct pipeline otherwise re-evaluates under BOTH of
       // appendEdges' per-delta localCheckpoints (adds and dels are two
       // consumers), paying the subgraph derivation twice per timed
-      // maintenance batch. QuickExp paired A/B (one process): 2 evals
+      // maintenance batch. Paired A/B in one process: 2 evals
       // 0.84/0.40 s vs ckpt+2 reads 0.58/0.20 s.
       val und = GraphOps.copurchaseEdgesFor(s, d)
         .select(least(col("src"), col("dst")).as("a"),

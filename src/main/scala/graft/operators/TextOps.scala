@@ -133,8 +133,8 @@ object TextOps {
     // lazy + immediate count: the size-gate count is a full scan, so it
     // doubles as the checkpoint materializer (one job, the CC loop's own
     // checksum-fusion discipline)
-    val canonEdges = loopCheckpoint(
-      canon(edges.select(col("a").as("u"), col("b").as("v"))), eager = false)
+    val canonEdges = canon(edges.select(col("a").as("u"), col("b").as("v")))
+      .transform(Iterate.ckptFused)
     if (canonEdges.count() <= localMaxEdges)
       return localUnionFind(canonEdges)
     var e = canonEdges
@@ -166,7 +166,7 @@ object TextOps {
     var converged = false
     var iter = 0
     while (!converged && iter < 60) {
-      val e2 = loopCheckpoint(smallStar(largeStar(e)), eager = false)
+      val e2 = smallStar(largeStar(e)).transform(Iterate.ckptFused)
       val c2 = checksum(e2) // materializes e2's checkpoint in the same job
       converged = c2 == prev
       prev = c2
@@ -181,31 +181,6 @@ object TextOps {
     e.select(col("u").as("node"), col("v").as("label"))
       .union(e.select(col("v").as("node"), col("v").as("label")))
       .groupBy(col("node")).agg(min(col("label")).as("label"))
-  }
-
-  /** Iteration checkpoint for the CC loop. localCheckpoint blocks live on
-    * executors — an executor loss mid-loop kills the query on a real
-    * cluster — so the loop honors the engine-wide
-    * `spark.graft.iterate.checkpointMode=reliable` knob ([[Iterate]]),
-    * plus the legacy `spark.graft.cc.reliableCheckpoint=true` (+
-    * checkpoint dir) switch this loop shipped with first (spec-pinned
-    * on the forced-distributed path). Default stays local: right for
-    * local[] and for clusters that prefer retry-over-HA. */
-  private def loopCheckpoint(df: DataFrame, eager: Boolean): DataFrame = {
-    val s = df.sparkSession
-    val legacyReliable =
-      s.conf.getOption("spark.graft.cc.reliableCheckpoint").contains("true") &&
-        s.sparkContext.getCheckpointDir.isDefined
-    // lazy is a local-mode-only fusion (Iterate.ckptFused semantics): a
-    // lazy RELIABLE checkpoint re-executes the whole plan when the
-    // checkpoint file is written — double-compute that costs strictly
-    // more at cluster scale than the one fused job it saves. Force
-    // eager whenever the effective mode is reliable/legacyReliable.
-    val reliableMode = legacyReliable ||
-      s.conf.getOption(Iterate.ModeKey).contains("reliable")
-    val eff = eager || reliableMode
-    if (legacyReliable) df.checkpoint(eff)
-    else Iterate.checkpoint(df, eff)
   }
 
   /** Driver-side union-find over a collected canonical edge list — the

@@ -1204,31 +1204,23 @@ object VectorOps {
     // rewrites `row_number <= k` into a partial WindowGroupLimit BEFORE
     // the qid exchange, so only ≤ k rows per (qid, task) reach the
     // wire, not the ≈ nprobe·N²/cells candidate set. Measured at the
-    // 64× corpus (graft.KnnProbe / ShufProbe): the qid exchange carries
-    // exactly 384k = k·N records (identical to a hand-built native
-    // partial-top-k plan, graft.plans.TopKPerKey, which re-measured
-    // SLOWER end-to-end: 27-28 s vs the window's 21-26 s — the native
-    // iterator pays a non-codegen projection per candidate row the
-    // WindowGroupLimitExec doesn't). The earlier typed-Aggregator form
-    // was slower still (185-189 s pre-array-fix). PlanAuditSpec pins
-    // the partial WindowGroupLimit so an optimizer-conf regression
-    // can't silently restore the full-candidate shuffle.
-    // -Dgraft.knn.topk=native re-plans through TopKPerKey for A/B.
-    val scored = a2
+    // 64× corpus: the qid exchange carries exactly 384k = k·N records
+    // (identical to a hand-built native partial-top-k plan,
+    // graft.plans.TopKPerKey, which measured SLOWER end-to-end:
+    // 27-28 s vs the window's 21-26 s — the native iterator pays a
+    // non-codegen projection per candidate row the WindowGroupLimitExec
+    // doesn't). The earlier typed-Aggregator form was slower still
+    // (185-189 s pre-array-fix). PlanAuditSpec pins the partial
+    // WindowGroupLimit so an optimizer-conf regression can't silently
+    // restore the full-candidate shuffle.
+    val w = Window.partitionBy(col("qid"))
+      .orderBy(col("dot").desc, col("vec_id"))
+    a2
       .join(probes, col("cell") === col("pcell") && col("vec_id") =!= col("qid"))
       .withColumn("dot", dotExactIvUdf(col("qiv"), col("iv")))
       .select(col("qid"), col("vec_id"), col("dot"))
-    val ranked =
-      if (sys.props.get("graft.knn.topk").contains("native"))
-        graft.plans.TopKPerKey(scored, Seq("qid"),
-          Seq(col("dot").desc, col("vec_id")), k, rankName = "rank")
-      else {
-        val w = Window.partitionBy(col("qid"))
-          .orderBy(col("dot").desc, col("vec_id"))
-        scored.withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-      }
-    ranked
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
       .select(col("qid"), col("vec_id"), col("dot"),
         col("rank").cast("long").as("rank"))
       .orderBy(col("qid"), col("rank"))

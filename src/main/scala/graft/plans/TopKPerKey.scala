@@ -24,9 +24,9 @@ import org.apache.spark.sql.types.IntegerType
   * Catalyst's own InferWindowGroupLimit (Spark 3.5+) already inserts a
   * partial WindowGroupLimit below the key exchange, so this plan's
   * map-side take-k matches — not beats — the built-in wire volume
-  * (identical 384k-record exchanges at the 64× k-NN corpus, ShufProbe)
-  * and loses 10-25% end-to-end to WindowGroupLimitExec's codegen-
-  * friendlier scan (graft.KnnProbe: window 21-26 s, native 27-28 s).
+  * (identical 384k-record exchanges at the 64× k-NN corpus) and loses
+  * 10-25% end-to-end to WindowGroupLimitExec's codegen-friendlier scan
+  * (the k-NN join at that corpus: window 21-26 s, native 27-28 s).
   * Production paths therefore keep the window form; this operator is
   * the mechanism proof + insurance where the rewrite can't fire. The
   * plan shape: each task locally sorts (Spark's spillable SortExec, no

@@ -687,7 +687,7 @@ object IncrementalDedup {
     //    the bucket's min doc_id yields the identical components in
     //    O(bucket) edges where the x<y self-join paid O(bucket²) — on a
     //    dup-heavy bulk batch (64 copies per doc) the clique was the
-    //    64× ScaleSmoke's super-linear term (8× data → 30× time)
+    //    super-linear term at 8× inflation (8× data → 30× time)
     val newBucketHubs = newBands.groupBy(col("band"), col("bkey"))
       .agg(min(col("doc_id")).as("hub"))
     val newNew = newBands

@@ -2,14 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.TextOps
+import graft.operators.{Iterate, TextOps}
 
 /** Direct property tests for the large-star/small-star connected-
-  * components core (the engine under q58, IncrementalDedup, and
-  * ScaleSmoke) against a driver-side union-find ground truth — on the
-  * graph shapes that break weaker algorithms: long permuted chains (the
-  * shape that silently truncated the old min-label loop), stars,
-  * cliques, and seeded random graphs. */
+  * components core (the engine under q58 and IncrementalDedup) against
+  * a driver-side union-find ground truth — on the graph shapes that
+  * break weaker algorithms: long permuted chains (the shape that
+  * silently truncated the old min-label loop), stars, cliques, and
+  * seeded random graphs. */
 class ConnectedComponentsSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -78,7 +78,7 @@ class ConnectedComponentsSpec extends SparkSpecBase {
   test("reliable checkpoints: the distributed loop writes to the checkpoint dir when asked") {
     val ckptDir = java.nio.file.Files.createTempDirectory("cc_ckpt").toString
     spark.sparkContext.setCheckpointDir(ckptDir)
-    spark.conf.set("spark.graft.cc.reliableCheckpoint", "true")
+    spark.conf.set(Iterate.ModeKey, "reliable")
     try {
       val rnd = new scala.util.Random(5L)
       val perm = rnd.shuffle((0L until 300L).toVector)
@@ -88,12 +88,14 @@ class ConnectedComponentsSpec extends SparkSpecBase {
       edges.flatMap(e => Seq(e._1, e._2)).toSet.foreach { (v: Long) =>
         assert(got(v) == truth(v), s"reliable-ckpt path: node $v")
       }
-      // the loop really used the reliable dir (one subdir per rdd)
-      val files = new java.io.File(ckptDir).listFiles()
-      assert(files != null && files.nonEmpty,
-        "no reliable checkpoint data written")
+      // the loop really used the reliable dir: one rdd-<id> subdir per
+      // checkpointed rdd, under the uuid dir setCheckpointDir creates
+      val rdds = new java.io.File(ckptDir).listFiles().toSeq
+        .flatMap(d => Option(d.listFiles()).toSeq.flatten)
+        .filter(_.getName.startsWith("rdd-"))
+      assert(rdds.nonEmpty, "no reliable checkpoint data written")
     } finally {
-      spark.conf.unset("spark.graft.cc.reliableCheckpoint")
+      spark.conf.unset(Iterate.ModeKey)
     }
   }
 

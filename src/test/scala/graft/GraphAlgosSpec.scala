@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.GraphAlgos
+import graft.operators.{GraphAlgos, GraphOps}
 
 /** The q132-q135 graph leg (operators/GraphAlgos.scala): each
   * distributed recurrence must reproduce a straight-line
@@ -370,10 +371,50 @@ class GraphAlgosSpec extends SparkSpecBase {
     }
   }
 
+  // ---------------------------------------------- disjoint-copy invariance
+
+  test("disjoint id-offset copies: every copy-0 answer ≡ the 1× answer") {
+    // copies never touch, PageRank's teleport and dangling shares are
+    // per-node (n and the dangling mass both scale by the copy count),
+    // HITS's global rescale max equals each identical copy's max, and a
+    // walk's md5 pick keys on ids that copy 0 keeps — so every row with
+    // a copy-0 key must come back bit for bit at any copy count
+    val off = 1000L
+    def inflate(df: DataFrame, m: Int, ids: String*): DataFrame =
+      (0 until m).map(i => df.select(df.columns.toSeq.map(c =>
+          if (ids.contains(c)) (col(c) + i * off).as(c) else col(c)): _*))
+        .reduce(_ union _)
+    // two triangles sharing an edge with a dangling tail, and a square
+    val g = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L), (4L, 2L),
+      (3L, 9L), (9L, 10L), (11L, 12L), (12L, 13L), (13L, 14L), (14L, 11L))
+      .toDF("src", "dst")
+    val labels = Seq((1L, "a"), (10L, "b"), (13L, "b")).toDF("node", "label")
+    val seeds = Seq(1L, 12L).toDF("node")
+    def check(name: String, key: String)(run: Int => DataFrame): Unit = {
+      val one = run(1).collect().toSet
+      val copy0 = run(3).filter(col(key) < off).collect().toSet
+      assert(one.nonEmpty && copy0 == one, s"$name: copy 0 diverged from 1×")
+    }
+    check("pagerank", "node")(m =>
+      GraphOps.pagerank(inflate(g, m, "src", "dst"), 5))
+    check("triangleCounts", "node")(m =>
+      GraphOps.triangleCounts(inflate(g, m, "src", "dst")))
+    check("kCore", "node")(m =>
+      GraphAlgos.kCore(inflate(g, m, "src", "dst"), 2))
+    check("hits", "node")(m => GraphAlgos.hits(inflate(g, m, "src", "dst"), 5))
+    check("labelSpread", "node")(m => GraphAlgos.labelSpread(
+      inflate(g, m, "src", "dst"), inflate(labels, m, "node"), 3))
+    check("bfsLayers", "node")(m => GraphAlgos.bfsLayers(
+      inflate(g, m, "src", "dst"), inflate(seeds, m, "node"), 3))
+    check("edgeEmbeddedness", "a")(m =>
+      GraphAlgos.edgeEmbeddedness(inflate(g, m, "src", "dst")))
+    check("randomWalks", "seed")(m => GraphAlgos.randomWalks(
+      inflate(g, m, "src", "dst"), inflate(seeds, m, "node"), 2, 4))
+  }
+
   // ------------------------------------------------------- memo contract
 
   test("memoized edge derivations serve until invalidateMemos, then rebuild") {
-    import graft.operators.GraphOps
     val dir = java.nio.file.Files
       .createTempDirectory("graft_memo_").toString
     def writeLineitem(parts: Seq[Long]): Unit =

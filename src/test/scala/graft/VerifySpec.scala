@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Pins the loud-failure contract of the correctness dump: a throwing
@@ -21,5 +25,24 @@ class VerifySpec extends SparkSpecBase {
     assert(!new java.io.File(s"$out/broken_query").exists())
     // and a fully-green map reports no failures
     assert(Verify.run(spark, sf, out, qs - "broken_query").isEmpty)
+  }
+
+  test("audit: Bench, Verify and EntrySmoke are the only mains in main code") {
+    val root = new java.io.File("src/main/scala").toPath
+    assert(Files.isDirectory(root), s"run from the repository root ($root)")
+    val Obj = """.*\bobject\s+(\w+).*""".r
+    val mains = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        val code = Files.readAllLines(f).asScala.map(_.trim).filterNot(l =>
+          l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
+        code.indices.filter(code(_).contains("def main(")).map { i =>
+          code.take(i).reverseIterator.collectFirst { case Obj(n) => n }
+            .getOrElse(root.relativize(f).toString)
+        }
+      }
+    assert(mains.sorted == Seq("Bench", "EntrySmoke", "Verify"),
+      "measure through perfbench or a spec instead of a new main: " +
+        mains.mkString(", "))
   }
 }
