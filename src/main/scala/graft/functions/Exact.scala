@@ -26,10 +26,6 @@ object Exact {
   def dsum(c: Column, scale: Int = 4): Column =
     sum(dec(c, scale)).cast(DoubleType)
 
-  /** Order-independent sum of a product of two double columns. */
-  def dsumProd(a: Column, b: Column, scale: Int = 4): Column =
-    sum(dec(a, scale) * dec(b, scale)).cast(DoubleType)
-
   /** Order-independent average (exact decimal sum / count). */
   def davg(c: Column, scale: Int = 4): Column =
     sum(dec(c, scale)).cast(DoubleType) / count(c)

@@ -51,22 +51,6 @@ object TextFns {
           (0 until rowsPerBand).map(r =>
             element_at(sig, b * rowsPerBand + r + 1)): _*)).as("bkey")))
 
-  /** Band key computed directly from the shingle set for ONE band index —
-    * use after `explode(sequence(0, bands-1))` so each (doc, band) row
-    * evaluates exactly `rowsPerBand` minhashes. Computing the full
-    * signature array in a projection and then plucking elements looks
-    * equivalent, but CollapseProject inlines the whole signature expression
-    * into every element_at — an O(bands · rowsPerBand · n) recompute blowup
-    * (measured 60× on q35). Identical values to
-    * `bandKeys(minhashSignature(...))`. */
-  def bandKeyAt(shingleSet: Column, band: Column, rowsPerBand: Int): Column =
-    md5(concat_ws("#",
-      (0 until rowsPerBand).map { r =>
-        val j = band * rowsPerBand + r
-        array_min(transform(shingleSet,
-          sh => md5(concat(j.cast("string"), lit("|"), sh))))
-      }: _*))
-
   /** Kirsch-Mitzenmacher MinHash signature: ONE md5 per shingle, split into
     * two 56-bit integers (h1, h2); permutation j is `h1 + j*h2` (max value
     * 2^59 — no overflow, no modulo needed). ~8× less hashing than the
@@ -206,11 +190,6 @@ object TextFns {
         Some(fp)
       }
     })
-
-  /** Fast 64-bit MinHash signature (performance path, not oracle-matched). */
-  def minhashSignature64(shingleSet: Column, n: Int): Column =
-    transform(sequence(lit(0), lit(n - 1)),
-      j => array_min(transform(shingleSet, sh => xxhash64(j, sh))))
 
   /** SimHash-64 over a token set: per bit, sign of Σ(+1/-1) weighted by
     * whether that bit of xxhash64(token) is set. Bits are unrolled at plan

@@ -68,7 +68,7 @@ import graft.sources.Tables
   * fails LOUDLY past `spark.graft.hnsw.maxShardRows` (default 2M)
   * instead of letting an undersized `nShards` die as a task OOM.
   *
-  * LIFECYCLE (the IVF discipline, [[VectorOps.appendToIvfIndex]]):
+  * LIFECYCLE:
   *  - [[appendToHnswIndex]]: new vectors hash to their shards; ONLY
   *    the affected shards rebuild (ascending-vec_id insertion makes
   *    append ≡ full rebuild, row-for-row — spec-pinned), untouched

@@ -218,9 +218,8 @@ object TextOps {
   }
 
   /** Near-dup cluster assignment over an arbitrary (doc_id, text) corpus —
-    * the q58 engine, reusable by the batch query and by the streaming
-    * incremental maintainer ([[graft.streaming.IncrementalDedup]]'s
-    * ground truth). Returns (doc_id, cluster), unordered.
+    * the q58 engine, shared by the batch queries that cluster documents.
+    * Returns (doc_id, cluster), unordered.
     *
     * PRE-DEDUP BY SIGNATURE GROUP before the band join: identical
     * signatures (exact copies, and near-dups that collide on all 8

@@ -453,7 +453,6 @@ object VectorOps {
   // numbering never reuses its name, the pointer still serves the old
   // generation, and the next successful publish garbage-collects it.
 
-  private val Pointer = "CURRENT"
   private val OkSentinel = "_GRAFT_INDEX_OK"
 
   private def hfsOf(s: SparkSession, path: String) =
@@ -493,13 +492,7 @@ object VectorOps {
     gens.expire(s, path)
 
   /** Write one full generation (corpus partitioned by cell + centroid
-    * table + manifest) under `genDir` — no pointer change. The centroid
-    * table carries `qerr`, each cell's mean quantization key (member-mean
-    * [[distKey]] to its own centroid) at train time: one map-side pass
-    * now, and [[appendToIvfIndex]] gets a DISTRIBUTION-shift drift
-    * signal later — vectors from a region the quantizer never saw land
-    * far from every centroid relative to their assigned cell's trained
-    * error, even when their mass is small. */
+    * table + manifest) under `genDir` — no pointer change. */
   private def writeGen(corpus: DataFrame, genDir: String, cells: Int): Unit = {
     val s = corpus.sparkSession
     val (a2, c2, base) = trainAssign(corpus, cells)
@@ -511,14 +504,9 @@ object VectorOps {
     // splits across tasks by vec_id instead of serializing on one
     a2.repartitionByRange(col("cell"), col("vec_id"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$genDir/corpus")
-    val qerr = a2.join(broadcast(c2), "cell")
-      .withColumn("dkey", distKey(col("iv"), col("csum"), col("cn")))
-      .groupBy(col("cell")).agg(avg(col("dkey")).as("qerr"))
-    c2.join(qerr, Seq("cell"), "left")
-      .write.mode("overwrite").parquet(s"$genDir/centroids")
-    // id sidecar, hash-bucketed (guide §6 partition pruning — the
-    // StreamHnsw shard-filter discipline ported to the cell-partitioned
-    // store): the corpus is laid out by CELL, so an id-keyed read (the
+    c2.write.mode("overwrite").parquet(s"$genDir/centroids")
+    // id sidecar, hash-bucketed (guide §6 partition pruning): the
+    // corpus is laid out by CELL, so an id-keyed read (the
     // delete path's present-only invariant check) cannot prune — it
     // scanned every cell's vec_id column per delete batch, O(corpus)
     // at 100 TB. The sidecar re-keys JUST the id column by id hash;
@@ -536,10 +524,10 @@ object VectorOps {
     c2.unpersist()
     // the sentinel doubles as the generation's exact physical row count
     // (the Hnsw meta-count discipline, round-16 VERDICT missing #1):
-    // delete's rewrite threshold and append's mass-drift check read this
-    // ONE number instead of paying an O(corpus-footers) count() per
-    // maintenance batch. Exact here by construction: the written corpus
-    // is a2 row-for-row, and a2 is already materialized in cache.
+    // delete's rewrite threshold reads this ONE number instead of
+    // paying an O(corpus-footers) count() per maintenance batch. Exact
+    // here by construction: the written corpus is a2 row-for-row, and
+    // a2 is already materialized in cache.
     val ok = hfsOf(s, genDir)
       .create(new org.apache.hadoop.fs.Path(s"$genDir/$OkSentinel"), true)
     try ok.write(rows.toString.getBytes("UTF-8")) finally ok.close()
@@ -581,22 +569,11 @@ object VectorOps {
     }
   }
 
-  /** Blank the sidecar stamp (tmp-free: an empty overwrite) — called
-    * BEFORE an in-place corpus append so a crash mid-append degrades to
-    * the honest corpus-scan fallback instead of a silently stale
-    * sidecar. */
-  private def blankIdsStamp(s: SparkSession, genDir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$genDir/ids/$IdsSentinel")
-    val hfs = hfsOf(s, genDir)
-    if (hfs.exists(p)) { val o = hfs.create(p, true); o.close() }
-  }
-
   /** The corpus id column for the delete path's presence check, pruned
     * to `incoming`'s hash buckets when the generation's id sidecar is
     * provably complete (stamp present AND its row count equals the
-    * generation's physical count — a crash between the corpus append
-    * and the sidecar append leaves them unequal, which falls back to
-    * the full corpus scan, never to a stale answer). Returns the read
+    * generation's physical count — anything else falls back to the full
+    * corpus scan, never to a stale answer). Returns the read
     * plus whether the sidecar was used (spec hook). */
   private[graft] def presenceIds(s: SparkSession, genDir: String,
       incoming: DataFrame): (DataFrame, Boolean) =
@@ -623,8 +600,8 @@ object VectorOps {
       new org.apache.hadoop.fs.Path(s"$genDir/$OkSentinel"))
       .flatMap(_.toLongOption)
 
-  /** Restamp a LIVE generation's row count (after an in-place corpus
-    * append, or the one-time legacy upgrade) with
+  /** Restamp a LIVE generation's row count (the one-time legacy
+    * upgrade) with
     * [[Ledger.replaceSmall]]: a crash mid-stamp leaves either the old
     * stamped sentinel or the new one, and the sentinel keeps existing
     * throughout, so the completeness contract is never violated. */
@@ -632,14 +609,6 @@ object VectorOps {
       rows: Long): Unit =
     Ledger.replaceSmall(hfsOf(s, genDir),
       new org.apache.hadoop.fs.Path(s"$genDir/$OkSentinel"), rows.toString)
-
-  /** Blank the sentinel's BODY (empty = "no stamped count", the legacy
-    * encoding readGenCount already maps to the footer-count fallback)
-    * while keeping the file itself — existence is the generation's
-    * completeness manifest and must never lapse. */
-  private def blankGenCount(s: SparkSession, genDir: String): Unit =
-    Ledger.replaceSmall(hfsOf(s, genDir),
-      new org.apache.hadoop.fs.Path(s"$genDir/$OkSentinel"), "")
 
   /** Physical corpus row count: the stamped sentinel when present,
     * else one footer count whose result is stamped back — the legacy
@@ -694,10 +663,10 @@ object VectorOps {
   private def retrainInPlace(s: SparkSession, path: String, cells: Int): Unit = {
     val genDir = indexGenDir(s, path)
     val corpus = liveCorpus(s, genDir).select(col("vec_id"), col("embedding"))
-    // loud empty-store guard (the compactHnswIndex convention): a
-    // hand-written full-coverage ledger must not publish a generation
-    // whose corpus holds no rows — every later probe would silently
-    // serve zero neighbors instead of a contract message
+    // loud empty-store guard: a hand-written full-coverage ledger must
+    // not publish a generation whose corpus holds no rows — every later
+    // probe would silently serve zero neighbors instead of a contract
+    // message
     if (corpus.isEmpty) throw new IllegalStateException(
       s"compactIvfIndex: every row of the index at $path is " +
         "tombstoned — a retrain would publish an empty index; " +
@@ -712,9 +681,7 @@ object VectorOps {
   }
 
   /** Apply tombstones physically and re-optimize the quantizer — the
-    * explicit form of the rewrite the deletion threshold triggers. Also
-    * the prerequisite for RE-USING a deleted vec_id (see
-    * [[appendToIvfIndex]]'s id contract). */
+    * explicit form of the rewrite the deletion threshold triggers. */
   def compactIvfIndex(s: SparkSession, path: String, cells: Int = 0): Unit =
     retrainInPlace(s, path, cells)
 
@@ -727,19 +694,14 @@ object VectorOps {
     * as the dedup maintainer's delta-then-compact cycle). Returns true
     * iff the physical rewrite ran.
     *
-    * LEDGER INVARIANT (the round-16 Hnsw discipline): only ids
-    * PHYSICALLY PRESENT in the corpus enter the ledger — a typo'd
-    * delete of a never-indexed id used to "tombstone harmlessly" but
-    * then poisoned that id's future append (the clash check refuses
-    * tombstoned ids) until a FULL RETRAIN, the most expensive
-    * maintenance op the index has. The presence check reads the
-    * hash-bucketed id SIDECAR (`ids/idb=K/`, maintained at
-    * write/append/retrain) pruned to the batch's own buckets — the
-    * shard-keyed HNSW delete discipline ported to the cell-partitioned
-    * store, O(batch-buckets) instead of every cell's id column per
-    * delete batch. Legacy generations (or a generation whose sidecar a
-    * crashed append left provably incomplete) fall back to the corpus
-    * id-column scan.
+    * LEDGER INVARIANT: only ids PHYSICALLY PRESENT in the corpus enter
+    * the ledger, so a typo'd delete of a never-indexed id is a no-op and
+    * the row-count arithmetic below stays exact. The presence check
+    * reads the hash-bucketed id SIDECAR (`ids/idb=K/`, written with
+    * each generation) pruned to the batch's own buckets —
+    * O(batch-buckets) instead of every cell's id column per delete
+    * batch. Legacy generations (or one whose sidecar stamp does not
+    * match its row count) fall back to the corpus id-column scan.
     *
     * LOUD all-dead guard, BEFORE the ledger write: a batch that would
     * tombstone every physical row refuses with the fix by name — the
@@ -768,11 +730,9 @@ object VectorOps {
       val nDead = existingDead + novelN
       if (nDead == 0L) return false
       // threshold denominator is the PHYSICAL corpus row count — from
-      // the stamped sentinel (exact at write/append/retrain; one-time
-      // footer-count upgrade for legacy generations), not the trained
-      // cn mass: after unretrained appends the trained mass undercounts
-      // the corpus the tombstones actually hide rows of, firing
-      // rewrites early. Metadata-only: no per-batch corpus listing.
+      // the stamped sentinel (exact at write/retrain; one-time
+      // footer-count upgrade for legacy generations). Metadata-only:
+      // no per-batch corpus listing.
       val total = corpusCount(s, genDir)
       // all-dead refusal, count-gated then EXACTLY confirmed by a
       // first-live-row probe: a legacy (pre-present-only-invariant)
@@ -792,202 +752,13 @@ object VectorOps {
       }
       // skip the write when nothing novel is tombstoned: an empty append
       // would materialize a zero-row ledger whose mere existence taxes
-      // every later probe (anti-join) and append (clash scan) forever
+      // every later probe (anti-join) forever
       if (novelN > 0)
         novel.write.mode("append").parquet(s"$genDir/tombstones")
       val rewrite = nDead.toDouble / total > rewriteThreshold
       if (rewrite) retrainInPlace(s, path, retrainCells)
       rewrite
     } finally { novel.unpersist(); () }
-  }
-
-  /** (mean ratio, fraction of batch vectors over `errFactor`) of the
-    * assigned batch against its generation's centroid table, or None
-    * when the table carries no usable `qerr` (pre-qerr index). Each
-    * vector's [[distKey]] is normalized by its ASSIGNED cell's trained
-    * mean error — trained cells are heterogeneous, so a global-mean
-    * ratio both false-fires on conforming appends to the loosest cell
-    * and misses shifts hiding under a loose global mean. Cells with
-    * null/zero qerr fall back to the cn-weighted global mean; an
-    * all-zero-error (degenerate) train treats ANY nonzero batch error
-    * as infinite drift. */
-  private def errRatios(c2: DataFrame, assigned: DataFrame,
-      errFactor: Double): Option[(Double, Double)] = {
-    if (!c2.columns.contains("qerr")) return None
-    val g = c2.filter(col("qerr").isNotNull)
-      .agg(sum(col("qerr") * col("cn")) / sum(col("cn"))).head()
-    if (g.isNullAt(0)) return None
-    val gm = g.getDouble(0)
-    val scored = assigned.join(broadcast(c2), "cell")
-      .withColumn("dkey", distKey(col("iv"), col("csum"), col("cn")))
-    if (gm == 0.0) {
-      val r = scored.agg(max(col("dkey"))).head()
-      if (!r.isNullAt(0) && r.getDouble(0) > 0.0)
-        Some((Double.PositiveInfinity, 1.0))
-      else Some((0.0, 0.0))
-    } else {
-      val r = scored
-        .withColumn("ratio", col("dkey") /
-          coalesce(nullif(col("qerr"), lit(0.0)), lit(gm)))
-        .agg(avg(col("ratio")),
-          avg((col("ratio") > errFactor).cast("double"))).head()
-      if (r.isNullAt(0)) None
-      else Some((r.getDouble(0), r.getDouble(1)))
-    }
-  }
-
-  /** Test hook: the (mean ratio, over-errFactor fraction) drift
-    * statistics [[appendToIvfIndex]] would compute for `batch` against
-    * the CURRENT index generation, without writing anything — lets a
-    * spec prove a dilution scenario (mean under the factor, fraction
-    * over) exercises the fraction trigger specifically. */
-  private[graft] def driftStats(s: SparkSession, path: String,
-      batch: DataFrame, errFactor: Double = 4.0): (Double, Double) = {
-    val genDir = indexGenDir(s, path)
-    val c2 = s.read.parquet(s"$genDir/centroids")
-    val assigned = assignWithCentroids(
-      batch.select(col("vec_id").cast("long").as("vec_id"), col("embedding"),
-        intVec(col("embedding")).as("iv")), c2)
-    errRatios(c2, assigned, errFactor).getOrElse((0.0, 0.0))
-  }
-
-  /** Append new (vec_id, embedding) vectors to a WRITTEN index without
-    * retraining: assign each to its nearest STORED centroid (the same
-    * fused argmin the trainer uses, against the persisted c2 table) and
-    * append into the matching `cell=` partitions — an O(batch) operation,
-    * the growing-corpus lifecycle a 100 TB index needs (full retrain +
-    * rewrite per arrival batch would re-read the corpus every time).
-    *
-    * Because appended vectors use the same assignment function as
-    * training, a probe at nprobe = cells is EXHAUSTIVE over old + new
-    * rows (spec-pinned against brute force), and cluster-structured
-    * appends land in their home cells so recall at small nprobe is
-    * preserved (spec-pinned on the planted-cluster fixture).
-    *
-    * DRIFT, two signals (either triggers):
-    *  - MASS: sum(cn) in the centroid table is the trained row count, so
-    *    (current − trained)/trained is the fraction added since training
-    *    with zero extra metadata; above `retrainThreshold` the quantizer
-    *    no longer represents most of the corpus it serves.
-    *  - DISTRIBUTION: a small append from a region the quantizer never
-    *    saw keeps mass low but quantizes badly. Each appended vector's
-    *    [[distKey]] is normalized by its ASSIGNED cell's trained mean
-    *    error (`qerr`, persisted at write time — see [[errRatios]] for
-    *    the per-cell rationale), and EITHER trigger fires a retrain:
-    *    batch mean ratio above `errFactor` (a wholesale shift), or the
-    *    fraction of batch vectors individually above `errFactor` at
-    *    least `driftFrac` (a small shifted SUB-batch inside a large
-    *    conforming append — the mean alone dilutes below the factor
-    *    when 98% of the batch conforms, which is exactly how a new
-    *    data source sneaks into a corpus). Conforming vectors sit ~27σ
-    *    below the factor on the trained error's concentration, so the
-    *    fraction trigger doesn't false-fire on ordinary growth.
-    *    Indexes written before `qerr` existed fall back to mass-only
-    *    (migration safe — the column reads as null).
-    * A retrain rebuilds over the full corpus as a NEW generation and
-    * publishes it with one atomic pointer flip (see the layout note
-    * above — never read-and-overwrite the live dirs in one job).
-    * `retrainCells = 0` re-derives √N so the quantizer granularity grows
-    * with the corpus; pass the original cell count to keep a pinned
-    * layout. Returns true iff a retrain ran. */
-  def appendToIvfIndex(s: SparkSession, path: String, newVecs: DataFrame,
-      retrainThreshold: Double = 0.5, retrainCells: Int = 0,
-      errFactor: Double = 4.0, driftFrac: Double = 0.02): Boolean = {
-    val genDir = indexGenDir(s, path)
-    val batch = newVecs.select(col("vec_id").cast("long").as("vec_id"),
-      col("embedding"))
-    // ID CONTRACT: vec_ids are append-once. Appending a TOMBSTONED id
-    // would leave two physical rows for it after the tombstone clears at
-    // the next rewrite (duplicate top-k entries, silently) — fail loudly
-    // instead; the check is cheap (the ledger is threshold-bounded).
-    // Re-using a deleted id is supported AFTER compactIvfIndex has
-    // applied the deletion physically. Appending an id that is LIVE in
-    // the corpus is the caller's contract to avoid (checking it would
-    // cost an O(corpus) scan per append).
-    tombstonesOf(s, genDir).foreach { t =>
-      val clashes = batch.select(col("vec_id"))
-        .join(t, Seq("vec_id"), "left_semi").limit(1).collect()
-      if (clashes.nonEmpty)
-        throw new IllegalArgumentException(
-          s"appendToIvfIndex: vec_id ${clashes.head.get(0)} is " +
-            "tombstoned in this index; run compactIvfIndex first to " +
-            "apply deletions physically, then re-add the id")
-    }
-    val c2 = s.read.parquet(s"$genDir/centroids")
-    // old physical total BEFORE the write (stamped sentinel; one-time
-    // footer-count upgrade for legacy generations) — the post-append
-    // total is then exact ARITHMETIC (old + batch rows: every batch row
-    // is one new physical row, appends are physical regardless of id),
-    // replacing the per-append O(corpus-footers) count()
-    val oldTotal = corpusCount(s, genDir)
-    // persisted: the assignment (fused argmin UDF over all K centroids
-    // per row) feeds BOTH the corpus write and the drift scoring —
-    // recomputing it would double every append's assignment cost
-    val assigned = assignWithCentroids(
-      batch.withColumn("iv", intVec(col("embedding"))), c2)
-      .select(col("vec_id"), col("embedding"), col("iv"), col("cell"))
-      .persist()
-    // batch size AND drift ratios are taken BEFORE the corpus write:
-    // appending into $genDir/corpus makes Spark recache-by-path every
-    // cached plan that READS that path — and a streaming append's batch
-    // is derived from the index's own id ledger (an anti-join against
-    // this corpus), so the post-write recache re-executes it to EMPTY.
-    // The count doubles as the persist's materializer, so the write
-    // below reads the cached pre-write snapshot. (The old order also
-    // silently disabled the qerr drift signal for exactly those
-    // index-derived batches — errRatios ran on the recached frame.)
-    val batchN = assigned.count()
-    val errStats = errRatios(c2, assigned, errFactor)
-    // CRASH DISCIPLINE for the in-place append: blank both stamps
-    // BEFORE touching the stores, restamp after all writes land. A
-    // crash anywhere in the window then degrades to the honest
-    // fallbacks — footer count for the total (the old order left a
-    // stale stamped count that readGenCount trusted forever,
-    // undercounting until a retrain), corpus scan for the presence
-    // check — instead of a silently wrong answer. The sidecar is only
-    // restamped when it was provably complete BEFORE this append (its
-    // stamped rows == the pre-append total); a generation degraded by
-    // an earlier crash stays honestly degraded until a retrain
-    // rebuilds the sidecar.
-    val prevIdsStamp = readIdsStamp(s, genDir)
-    val sidecarWasValid = prevIdsStamp.exists(_._1 == oldTotal)
-    blankIdsStamp(s, genDir)
-    blankGenCount(s, genDir)
-    val total = oldTotal + batchN
-    // maintain the id sidecar FIRST (append is physical: every batch
-    // row is one new id): the corpus append below recaches-by-path
-    // every cached plan reading $genDir/corpus — including `assigned`
-    // itself when the batch derives from this index's own ledger (the
-    // streaming-append shape) — so an ids write placed after it would
-    // read the RECACHED (post-append, possibly empty) batch and
-    // silently stamp an incomplete sidecar as complete. Written here
-    // it consumes the cached pre-write snapshot; a crash between the
-    // two writes leaves blank stamps, i.e. the honest fallbacks.
-    if (sidecarWasValid) {
-      val nIdB = prevIdsStamp.get._2
-      assigned.select(col("vec_id"))
-        .withColumn(IdBucketCol, pmod(xxhash64(col("vec_id")), lit(nIdB)))
-        .repartitionByRange(col(IdBucketCol), col("vec_id"))
-        .write.mode("append").partitionBy(IdBucketCol)
-        .parquet(s"$genDir/ids")
-    }
-    // range the append too: a small batch otherwise scatters up to
-    // n·touchedCells tiny files into the generation per append
-    assigned.repartitionByRange(col("cell"), col("vec_id"))
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"$genDir/corpus")
-    val trained = c2.agg(sum(col("cn"))).head().getLong(0)
-    if (sidecarWasValid)
-      stampIds(s, genDir, total, prevIdsStamp.get._2)
-    stampGenCount(s, genDir, total)
-    val massDrift = (total - trained).toDouble / trained > retrainThreshold
-    val errDrift = errStats.exists {
-      case (mean, frac) => mean > errFactor || frac >= driftFrac
-    }
-    assigned.unpersist()
-    val drifted = massDrift || errDrift
-    if (drifted) retrainInPlace(s, path, retrainCells)
-    drifted
   }
 
   /** Search a written index: rank cells per query against the stored
@@ -1016,8 +787,7 @@ object VectorOps {
   }
 
   private def probeStored(s: SparkSession, genDir: String, corpus: DataFrame,
-      q: DataFrame, k: Int, nprobe: Int, excludeSelf: Boolean,
-      withCos: Boolean = false): DataFrame = {
+      q: DataFrame, k: Int, nprobe: Int, excludeSelf: Boolean): DataFrame = {
     val c2 = s.read.parquet(s"$genDir/centroids")
     val wq = Window.partitionBy(col("qid")).orderBy(col("dkey"), col("cell"))
     val probes = q.join(broadcast(c2))
@@ -1034,23 +804,14 @@ object VectorOps {
       if (excludeSelf) col("cell") === col("pcell") && col("vec_id") =!= col("qid")
       else col("cell") === col("pcell")
     val w = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("vec_id"))
-    val ranked = corpus.filter(col("cell").isin(probedCells: _*))
+    corpus.filter(col("cell").isin(probedCells: _*))
       .join(broadcast(probes), joinCond)
       .withColumn("dot", V.dotExact(col("qv"), col("embedding")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-    // cosine only for the surviving N·k rows (exact self-dots + one
-    // correctly-rounded division — the same formula, and therefore the
-    // same threshold decisions, as the batch semanticDedup pipeline)
-    val out =
-      if (withCos) ranked.withColumn("cos",
-        col("dot") / (sqrt(V.dotExact(col("qv"), col("qv"))) *
-          sqrt(V.dotExact(col("embedding"), col("embedding")))))
-        .select(col("qid"), col("vec_id"), col("dot"), col("cos"),
-          col("rank").cast("long").as("rank"))
-      else ranked.select(col("qid"), col("vec_id"), col("dot"),
+      .select(col("qid"), col("vec_id"), col("dot"),
         col("rank").cast("long").as("rank"))
-    out.orderBy(col("qid"), col("rank"))
+      .orderBy(col("qid"), col("rank"))
   }
 
   /** Embedding near-dup detection via random-hyperplane LSH bucketing,
@@ -1180,18 +941,6 @@ object VectorOps {
       cells: Int = 0): DataFrame = {
     val (a2, c2, _) = trainAssign(corpus, cells)
     knnJoinAssigned(a2, c2, k, nprobe)
-  }
-
-  /** [[ivfKnnJoin]] against a WRITTEN index: the assignment and the
-    * quantizer are read back from the current generation (corpus rows
-    * already carry iv + cell — zero retraining, zero re-assignment), so
-    * the join is pay-per-query over a train-once artifact, the economics
-    * a recurring dedup/clustering pipeline needs. */
-  def ivfKnnJoinStored(s: SparkSession, path: String, k: Int = 3,
-      nprobe: Int = 2): DataFrame = {
-    val genDir = indexGenDir(s, path)
-    knnJoinAssigned(liveCorpus(s, genDir),
-      s.read.parquet(s"$genDir/centroids"), k, nprobe)
   }
 
   private def knnJoinAssigned(a2: DataFrame, c2: DataFrame, k: Int,
@@ -1332,60 +1081,23 @@ object VectorOps {
         val planted = e.filter(pmod(col("vec_id"), lit(10)) === 0)
           .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
         val corpus = e.select(col("vec_id"), col("embedding")).union(planted)
-        val (gatedPlan, cleanup) =
-          gatedKnnEdges(corpus, k, nprobe, cells, threshold)
-        val gated = gatedPlan.localCheckpoint(true)
-        cleanup()
+        // train → k-NN join → self-norms → cosine gate; the gated
+        // DIRECTED edges (qid, vec_id) are checkpointed before the
+        // training caches are released (the plan is lazy)
+        val (a2, c2, base) = trainAssign(corpus, cells)
+        val knn = knnJoinAssigned(a2, c2, k, nprobe)
+        val norms = a2.select(col("vec_id"),
+          dotExactIv(col("iv"), col("iv")).as("sq"))
+        val gated = knn
+          .join(norms.select(col("vec_id").as("qid"), col("sq").as("qsq")), "qid")
+          .join(norms.select(col("vec_id"), col("sq").as("csq")), "vec_id")
+          .withColumn("cos", col("dot") / (sqrt(col("qsq")) * sqrt(col("csq"))))
+          .filter(col("cos") >= threshold)
+          .select(col("qid"), col("vec_id"))
+          .localCheckpoint(true)
+        a2.unpersist(); base.unpersist(); c2.unpersist()
         gated
       }).asInstanceOf[DataFrame]
-
-  /** The [[semanticDedup]] drop rule over ANY (vec_id, embedding)
-    * corpus: (vec_id, dup_of) for every row with a smaller-id k-NN
-    * neighbor at cosine ≥ threshold. Caches follow the operator
-    * convention (session-cleared); the streaming ingest path uses
-    * [[semanticDropSetWithCleanup]] to release them per micro-batch. */
-  def semanticDropSet(corpus: DataFrame, k: Int = 3, nprobe: Int = 2,
-      cells: Int = 0, threshold: Double = 0.99): DataFrame =
-    semanticDropSetWithCleanup(corpus, k, nprobe, cells, threshold)._1
-
-  /** [[semanticDropSet]] plus a cleanup thunk that unpersists the
-    * training caches — call it AFTER materializing the returned plan
-    * (it is lazy). Per-batch callers (the streaming dedup sink) would
-    * otherwise leak one cached corpus per micro-batch forever. */
-  private[graft] def semanticDropSetWithCleanup(corpus: DataFrame,
-      k: Int, nprobe: Int, cells: Int,
-      threshold: Double): (DataFrame, () => Unit) = {
-    val (gated, cleanup) = gatedKnnEdges(corpus, k, nprobe, cells, threshold)
-    val drops = gated
-      .filter(col("vec_id") < col("qid"))
-      .groupBy(col("qid"))
-      .agg(min(col("vec_id")).as("dup_of"))
-      .select(col("qid").as("vec_id"), col("dup_of"))
-    (drops, cleanup)
-  }
-
-  /** The cosine-gated k-NN edge pipeline over ANY corpus — ONE home for
-    * the train → k-NN join → self-norms → cosine gate chain, shared by
-    * the batch memo ([[plantedGatedEdges]], q110/q113) and the
-    * per-micro-batch streaming path ([[semanticDropSetWithCleanup]]):
-    * a gate-semantics change in one consumer cannot silently diverge
-    * the other. Returns the gated DIRECTED edges (qid, vec_id) and the
-    * training-cache cleanup thunk (call only after materializing —
-    * the returned plan is lazy). */
-  private def gatedKnnEdges(corpus: DataFrame, k: Int, nprobe: Int,
-      cells: Int, threshold: Double): (DataFrame, () => Unit) = {
-    val (a2, c2, base) = trainAssign(corpus, cells)
-    val knn = knnJoinAssigned(a2, c2, k, nprobe)
-    val norms = a2.select(col("vec_id"),
-      dotExactIv(col("iv"), col("iv")).as("sq"))
-    val gated = knn
-      .join(norms.select(col("vec_id").as("qid"), col("sq").as("qsq")), "qid")
-      .join(norms.select(col("vec_id"), col("sq").as("csq")), "vec_id")
-      .withColumn("cos", col("dot") / (sqrt(col("qsq")) * sqrt(col("csq"))))
-      .filter(col("cos") >= threshold)
-      .select(col("qid"), col("vec_id"))
-    (gated, () => { a2.unpersist(); base.unpersist(); c2.unpersist() })
-  }
 
   /** Attach PQ codes to the CURRENT index generation as an optional
     * acceleration artifact: `pq/` inside the gen dir holds the trained
@@ -1393,14 +1105,14 @@ object VectorOps {
     * [[Ledger.publishOnce]] (a torn write leaves the generation serving
     * without PQ; a retrain deletes the old codes first). Codes are
     * GENERATION-SCOPED: a retrain/compact publishes a new gen without
-    * them (recompute via this call), and an unretrained append grows
-    * the corpus past the codes — [[probePqIndex]] guards that
+    * them (recompute via this call), and a delete shrinks the live
+    * corpus under the codes — [[probePqIndex]] guards that
     * staleness loudly instead of silently scoring a partial corpus. */
   def writePqCodes(s: SparkSession, path: String, m: Int = 4,
       subDim: Int = 16, codewords: Int = 16): Unit = {
     val genDir = indexGenDir(s, path)
-    // snapshot the source file set BEFORE reading anything: if an
-    // append races this write, the listing diverges and later probes
+    // snapshot the source file set BEFORE reading anything: if a
+    // delete races this write, the listing diverges and later probes
     // correctly report the artifact stale
     val sources = sourceListing(s, genDir)
     val corpus = liveCorpus(s, genDir)
@@ -1453,8 +1165,8 @@ object VectorOps {
     * from the stored books, one map pass over the (vec_id, codes)
     * table, rank-only top-k (the q111 policy, pay-per-query against a
     * written artifact). Fails loudly when the generation has no PQ
-    * artifact, a torn one, or codes STALER than the corpus (unretrained
-    * appends after [[writePqCodes]]). */
+    * artifact, a torn one, or codes STALER than the corpus (deletes
+    * after [[writePqCodes]]). */
   def probePqIndex(s: SparkSession, path: String, queries: DataFrame,
       k: Int = 5): DataFrame = {
     val genDir = indexGenDir(s, path)
@@ -1786,40 +1498,6 @@ object VectorOps {
         coalesce(col("label"), col("vec_id")).as("cluster"))
       .orderBy(col("vec_id"))
   }
-
-  /** Drop witnesses for `batch` against a WRITTEN index — the streaming
-    * half of the [[semanticDedup]] policy: a batch row is reported iff
-    * some STORED (already-kept, earlier-arrived) vector clears the
-    * cosine threshold among its probed k-NN; `dup_of` is the smallest
-    * such witness. Rows of the batch itself are EXCLUDED from the
-    * candidate set (same-batch witnesses are the within-batch
-    * [[semanticDropSet]]'s job) — which also makes the result a pure
-    * function of the pre-batch index state, so a crash-replay that
-    * already half-appended this batch recomputes identical decisions. */
-  def semanticIndexDrops(s: SparkSession, path: String, batch: DataFrame,
-      k: Int = 3, nprobe: Int = 2, threshold: Double = 0.99): DataFrame = {
-    val genDir = indexGenDir(s, path)
-    val corpus = liveCorpus(s, genDir)
-      .join(broadcast(batch.select(col("vec_id"))), Seq("vec_id"), "left_anti")
-    val probed = probeStored(s, genDir, corpus,
-      externalQ(batch.select(col("vec_id").as("qid"), col("embedding"))),
-      k, nprobe, excludeSelf = false, withCos = true)
-    probed.filter(col("cos") >= threshold)
-      .groupBy(col("qid"))
-      .agg(min(col("vec_id")).as("dup_of"))
-      .select(col("qid").as("vec_id"), col("dup_of"))
-  }
-
-  /** Live vec_ids of the current index generation (tombstones applied) —
-    * the id ledger the streaming append path anti-joins for replay
-    * idempotency. One-column parquet read, no vector data. */
-  def ivfIndexIds(s: SparkSession, path: String): DataFrame =
-    liveCorpus(s, indexGenDir(s, path)).select(col("vec_id"))
-
-  /** True iff `path` holds a published graft IVF index (pointer file
-    * present) — the streaming ingest path's bootstrap test. */
-  def ivfIndexExists(s: SparkSession, path: String): Boolean =
-    hfsOf(s, path).exists(new org.apache.hadoop.fs.Path(s"$path/$Pointer"))
 
   // ---------------------------------------------------------------------
   // Product quantization (PQ) with asymmetric-distance (ADC) scoring

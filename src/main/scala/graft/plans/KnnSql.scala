@@ -34,9 +34,7 @@ import graft.sources.Tables
   *
   * Note the quantizer TRAINS when the query is ANALYZED (ivfKnnJoin's
   * contract — training is an eager two-pass Lloyd over the corpus),
-  * exactly the cost the DataFrame caller pays at call time. For
-  * pay-per-query economics over a train-once artifact, use
-  * [[VectorOps.writeIvfIndex]] + [[VectorOps.ivfKnnJoinStored]].
+  * exactly the cost the DataFrame caller pays at call time.
   */
 case class UnresolvedKnnTvf(k: Int, nprobe: Int, cells: Int,
     child: LogicalPlan) extends UnaryNode {

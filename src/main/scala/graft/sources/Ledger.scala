@@ -37,14 +37,12 @@ object Ledger {
     * `write(tmp)`, and renames tmp to `dest` without replacing: a
     * rename that fails counts as success only when `dest` now exists
     * (a concurrent attempt won; its content is equivalent by the
-    * replay contract) and throws otherwise. `resume` keeps the debris
-    * for a writer that reuses finished parts of a torn attempt (it
-    * then owns the completeness check of each part). */
-  def publishOnce(fs: FileSystem, dest: Path, resume: Boolean = false)(
+    * replay contract) and throws otherwise. */
+  def publishOnce(fs: FileSystem, dest: Path)(
       write: Path => Unit): Boolean = {
     if (fs.exists(dest)) return false
     val tmp = tmpOf(dest)
-    if (!resume) fs.delete(tmp, true)
+    fs.delete(tmp, true)
     write(tmp)
     try FileContext.getFileContext(fs.getUri, fs.getConf)
       .rename(fs.makeQualified(tmp), fs.makeQualified(dest))

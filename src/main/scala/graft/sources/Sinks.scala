@@ -4,9 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Batch write-side surface (SURVEY.md §2.1 sinks S7-S10), layout-first:
   * at 100 TB the write layout IS the read plan — a table partitioned on the
-  * predicate column turns a full scan into a directory listing, and a
-  * bucketed table turns every equi-join on the bucket key into a
-  * shuffle-free sort-merge join (see BucketedJoinSpec).
+  * predicate column turns a full scan into a directory listing.
   */
 object Sinks {
 
@@ -20,20 +18,6 @@ object Sinks {
                        partitionCols: Seq[String],
                        mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).partitionBy(partitionCols: _*).parquet(path)
-
-  /** Bucketed + sorted managed table: co-locates and pre-sorts rows by the
-    * join/agg key so repeated joins on `bucketCols` skip both the shuffle
-    * and the sort. Requires saveAsTable (bucket metadata lives in the
-    * catalog). `numBuckets` should approximate the cluster's target task
-    * count for the table's size — too few buckets caps parallelism. */
-  def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
-                    numBuckets: Int,
-                    mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode)
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
 
   /** JDBC sink (S10 — the reference declares a Postgres egress; verified
     * end-to-end in SinksSpec against the embedded Derby that ships with

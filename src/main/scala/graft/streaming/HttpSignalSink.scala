@@ -29,9 +29,13 @@ import graft.sources.Ledger
   *
   * Scale shape: POSTs run from the EXECUTORS (`foreachPartition`, one
   * HTTP client per executor JVM) — signal fan-out scales with the cluster,
-  * never through a driver collect. A failed POST throws, failing the
-  * task/batch so Spark retries it — at-least-once at the transport,
-  * exactly-once end-to-end via the token.
+  * never through a driver collect. A POST that fails at the transport
+  * (reset, or a connection closed with no answer) is resent up to
+  * `SendRetries` times with the same Idempotency-Key; a local-mode task
+  * is not retried by Spark, so without this one reset would stop the
+  * query. A POST that still fails, or gets a non-2xx answer, throws and
+  * fails the batch — at-least-once at the transport, exactly-once
+  * end-to-end via the token.
   *
   * '''Upgrade note (token format):''' as of round 11 the Idempotency-Key
   * carries the percent-ENCODED key (`graft-<batchId>-<keyEnc>`), where
@@ -55,6 +59,20 @@ object HttpSignalSink {
     * then closed them under a client about to reuse one, failing the
     * POST and with it the batch. */
   private lazy val client = java.net.http.HttpClient.newHttpClient()
+
+  private val SendRetries = 2
+  private val RetryBackoffMs = 100L
+
+  /** `client.send`, resent after an IOException (the request, and so
+    * its Idempotency-Key, is the same each time). */
+  private def send(req: java.net.http.HttpRequest,
+      retriesLeft: Int = SendRetries): java.net.http.HttpResponse[String] =
+    try client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
+    catch {
+      case _: java.io.IOException if retriesLeft > 0 =>
+        Thread.sleep(RetryBackoffMs)
+        send(req, retriesLeft - 1)
+    }
 
   def start(signals: DataFrame, endpointBase: String, ledgerDir: String,
       checkpoint: String,
@@ -90,8 +108,7 @@ object HttpSignalSink {
                   .header("Idempotency-Key", s"graft-$batchId-$keyEnc")
                   .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
                   .build()
-                val resp = client.send(req,
-                  java.net.http.HttpResponse.BodyHandlers.ofString())
+                val resp = send(req)
                 if (resp.statusCode() / 100 != 2)
                   throw new IllegalStateException(
                     s"signal POST for key $key failed: HTTP ${resp.statusCode()}")

@@ -29,7 +29,7 @@ import graft.operators.GraphArtifact
   * superseded generation's grace cycle); only a FULL rebuild is legal
   * mid-stream — batch tags die with the old generation.
   *
-  * AUTO-compaction (the IncrementalDedup `compactEvery` discipline):
+  * AUTO-compaction (`compactEvery`):
   * without it the chain grows one append per micro-batch FOREVER, and
   * every resolve unions base + all of them — read amplification linear
   * in stream age, the one scale liability of a long-maintained store.

@@ -7,9 +7,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.sources.Ledger
 
 /** Structured Streaming forms of the reference's dataflow semantics
-  * (SURVEY.md §2.9): watermark-gated dedup (ST1), late-data drop (ST2),
-  * tumbling/sliding/session windows (ST5), and the per-mailbox monotone
-  * watermark guard (F2/A1) as an exact stateful operator.
+  * (SURVEY.md §2.9): watermark-gated dedup (ST1), tumbling windows
+  * (ST5), and the per-mailbox monotone watermark guard (F2/A1) as an
+  * exact stateful operator.
   *
   * All operators take and return unbounded DataFrames/Datasets — they run
   * identically over `MemoryStream` (tests), file streams (this repo's
@@ -41,13 +41,6 @@ object StreamOps {
     df.withWatermark(eventTimeCol, lateness)
       .dropDuplicatesWithinWatermark(idCols)
 
-  /** ST2 — event-time freshness: rows older than the watermark are dropped
-    * by any downstream stateful op; this is the streaming form of the
-    * reference's 2-minute cutoff (main.py:94-97). */
-  def withFreshness(df: DataFrame, eventTimeCol: String = "ts",
-                    window: String = "2 minutes"): DataFrame =
-    df.withWatermark(eventTimeCol, window)
-
   /** ST5 — tumbling-window counts/sums over the event stream. */
   def tumblingCounts(df: DataFrame, eventTimeCol: String = "ts",
                      width: String = "10 minutes",
@@ -55,23 +48,6 @@ object StreamOps {
     df.withWatermark(eventTimeCol, lateness)
       .groupBy(window(col(eventTimeCol), width), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-
-  /** ST5 — sliding-window variant. */
-  def slidingCounts(df: DataFrame, eventTimeCol: String = "ts",
-                    width: String = "10 minutes", slide: String = "5 minutes",
-                    lateness: String = "2 minutes"): DataFrame =
-    df.withWatermark(eventTimeCol, lateness)
-      .groupBy(window(col(eventTimeCol), width, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-
-  /** ST3 — session windows (gap-based), the built-in analog of the
-    * reference's per-key session lifecycle. */
-  def sessionCounts(df: DataFrame, eventTimeCol: String = "ts",
-                    gap: String = "30 minutes",
-                    lateness: String = "2 minutes"): DataFrame =
-    df.withWatermark(eventTimeCol, lateness)
-      .groupBy(session_window(col(eventTimeCol), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
 
   /** A (mailboxId, historyId) pair for the watermark guard. */
   final case class HistoryEvent(mailbox: String, historyId: Long)

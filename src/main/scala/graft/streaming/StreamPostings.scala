@@ -7,8 +7,7 @@ import graft.operators.Retrieval
 
 /** Streaming maintenance of the positional posting-table artifact
   * (operators/Retrieval): the streaming dual of q123's build-then-probe —
-  * an always-fresh phrase-search index over a document stream, the text
-  * analog of StreamSemanticDedup's persistent IVF maintenance.
+  * an always-fresh phrase-search index over a document stream.
   *
   * Each micro-batch UPSERTS its docs into the artifact
   * ([[Retrieval.upsertPostings]]): new docs append their postings,
@@ -38,9 +37,9 @@ import graft.operators.Retrieval
   * the superseded generation for the grace cycle — after which
   * maintenance continues; earlier batch tags are gone with the old
   * generation, so ONLY a full rebuild (never a partial one) is legal
-  * mid-stream, same as IncrementalDedup's compaction contract.
+  * mid-stream.
   *
-  * AUTO-compaction (the IncrementalDedup `compactEvery` discipline):
+  * AUTO-compaction (`compactEvery`):
   * without it the chain grows one append per micro-batch forever and
   * every probe scans base + all of them — read amplification linear in
   * stream age. When the committed-tag count reaches `compactEvery`, the
@@ -64,7 +63,7 @@ object StreamPostings {
     * slots) and a present phrase silently stops matching. The SAME id
     * with DIFFERENT text inside one batch has no deterministic winner
     * (no arrival order within a batch) and fails loudly BEFORE any
-    * publish — the StreamSemanticDedup conflict convention. Both
+    * publish. Both
     * checks are batch-sized (deltas), never corpus-sized. */
   def maintainBatch(batch: DataFrame, batchId: Long, dir: String,
       nBuckets: Int = 64, compactEvery: Int = 8): Boolean = {

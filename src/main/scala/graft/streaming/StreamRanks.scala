@@ -23,10 +23,9 @@ import graft.operators.{GraphArtifact, RankArtifact}
   *  - crash AFTER the refresh → replay skips the append AND the
   *    refresh no-ops (coverage already recorded).
   *
-  * Refresh cost per batch is O(dirty ball) — the IncrementalDedup
-  * pricing discipline — with the [[RankArtifact.MaxDeltaBallNodes]]
-  * recompute fallback for batches whose blast radius approaches the
-  * graph. Bootstrap: the first batch of fresh dirs creates the empty
+  * Refresh cost per batch is O(dirty ball), with the
+  * [[RankArtifact.MaxDeltaBallNodes]] recompute fallback for batches
+  * whose blast radius approaches the graph. Bootstrap: the first batch of fresh dirs creates the empty
   * edge generation, then a full (tiny) rank compute pinned to it.
   * An edge-artifact REBUILD mid-stream (the only legal compaction,
   * per StreamGraph) is absorbed automatically: the next refresh sees

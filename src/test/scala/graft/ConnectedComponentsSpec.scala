@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Iterate, TextOps}
 
 /** Direct property tests for the large-star/small-star connected-
-  * components core (the engine under q58 and IncrementalDedup) against
+  * components core (the engine under q58) against
   * a driver-side union-find ground truth — on the graph shapes that
   * break weaker algorithms: long permuted chains (the shape that
   * silently truncated the old min-label loop), stars, cliques, and

@@ -144,108 +144,6 @@ class IvfIndexSpec extends SparkSpecBase {
       s"held-out queries must land in their home cells: recall $recall")
   }
 
-  test("append path: stored-centroid assignment, exhaustive parity, recall kept, drift retrain") {
-    val rnd = new scala.util.Random(13L)
-    val centers = Array.fill(8)(Array.fill(64)(rnd.nextFloat() * 2f - 1f))
-    def mk(ids: Range): Seq[(Long, Seq[Float])] = ids.map { i =>
-      val c = centers(i % 8)
-      (i.toLong, c.map(x => x + (rnd.nextFloat() - 0.5f) * 0.02f).toSeq)
-    }
-    val initial = mk(0 until 320)
-    val path = java.nio.file.Files.createTempDirectory("ivf_append").toString
-    VectorOps.writeIvfIndex(initial.toDF("vec_id", "embedding"), path,
-      cells = 8)
-    // small append: 40/320 = 12.5% added mass, under the 50% threshold —
-    // assigned to STORED centroids, appended into cell partitions only
-    val extra = mk(1000 until 1040)
-    val retrained = VectorOps.appendToIvfIndex(spark, path,
-      extra.toDF("vec_id", "embedding"), retrainThreshold = 0.5,
-      retrainCells = 8)
-    assert(!retrained, "12.5% added mass must not trigger a retrain")
-    val queries = mk(5000 until 5012)
-      .map { case (id, v) => (id - 5000L, v) }.toDF("qid", "embedding")
-    val all = (initial ++ extra).toDF("vec_id", "embedding")
-    val brute = topkSet(VectorOps.dotTopKWith(all, queries, k = 5))
-    // probing EVERY cell is exhaustive over old + new rows: append must
-    // have placed each new vector somewhere a full probe can see
-    val exhaustive = topkSet(VectorOps.probeIvfIndex(spark, path, queries,
-      k = 5, nprobe = 8))
-    assert(exhaustive == brute,
-      "search-after-append at nprobe=cells must equal brute force")
-    // cluster-structured appends land in their home cells, so low-nprobe
-    // recall is preserved
-    val low = topkSet(VectorOps.probeIvfIndex(spark, path, queries,
-      k = 5, nprobe = 2))
-    val recall = (brute & low).size.toDouble / brute.size
-    assert(recall >= 0.9, s"recall after append degraded: $recall")
-    // big append: 340/320 > 50% added mass → drift-triggered retrain
-    val big = mk(2000 until 2300)
-    val retrained2 = VectorOps.appendToIvfIndex(spark, path,
-      big.toDF("vec_id", "embedding"), retrainThreshold = 0.5,
-      retrainCells = 8)
-    assert(retrained2, "106% added mass must trigger a retrain")
-    // the swapped-in retrained index is complete and consistent
-    val all2 = (initial ++ extra ++ big).toDF("vec_id", "embedding")
-    val brute2 = topkSet(VectorOps.dotTopKWith(all2, queries, k = 5))
-    val ex2 = topkSet(VectorOps.probeIvfIndex(spark, path, queries,
-      k = 5, nprobe = 8))
-    assert(ex2 == brute2, "retrained index must still match brute force")
-    // and the retrained centroid table reflects the full corpus mass
-    val trained = spark.read
-      .parquet(s"${VectorOps.indexGenDir(spark, path)}/centroids")
-      .agg(sum($"cn")).head().getLong(0)
-    assert(trained == 660L, s"retrained cn mass must be 660, got $trained")
-  }
-
-  test("append path: distribution shift below the mass threshold still retrains (qerr drift)") {
-    val rnd = new scala.util.Random(17L)
-    val centers = Array.fill(8)(Array.fill(64)(rnd.nextFloat() * 2f - 1f))
-    def mk(ids: Range, shift: Float = 0f): Seq[(Long, Seq[Float])] =
-      ids.map { i =>
-        val c = centers(i % 8)
-        (i.toLong,
-          c.map(x => x + shift + (rnd.nextFloat() - 0.5f) * 0.02f).toSeq)
-      }
-    val path = java.nio.file.Files.createTempDirectory("ivf_qerr").toString
-    VectorOps.writeIvfIndex(mk(0 until 320).toDF("vec_id", "embedding"),
-      path, cells = 8)
-    // same-distribution small append: neither mass (12.5%) nor error
-    // drift — the qerr signal must not fire on ordinary growth
-    assert(!VectorOps.appendToIvfIndex(spark, path,
-      mk(1000 until 1040).toDF("vec_id", "embedding"),
-      retrainThreshold = 0.5, retrainCells = 8),
-      "same-distribution append must not retrain")
-    // NEW-REGION small append: every coordinate shifted +10 puts the
-    // batch ~64·10² away from every centroid (trained mean error is the
-    // ±0.01 perturbation scale) — mass is still 12.5%, but the
-    // quantization-error ratio is astronomical → retrain
-    assert(VectorOps.appendToIvfIndex(spark, path,
-      mk(3000 until 3040, shift = 10f).toDF("vec_id", "embedding"),
-      retrainThreshold = 0.5, retrainCells = 9),
-      "a distribution-shifting append must trigger the qerr retrain")
-    // the retrained quantizer now has a cell for the new region: the
-    // shifted vectors quantize well again, and search stays exact at
-    // nprobe=cells over the whole grown corpus
-    val corpusNow = spark.read
-      .parquet(s"${VectorOps.indexGenDir(spark, path)}/corpus")
-      .select($"vec_id", $"embedding")
-    val queries = mk(5000 until 5004, shift = 10f)
-      .map { case (id, v) => (id - 5000L, v) }.toDF("qid", "embedding")
-    def tk(df: DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val brute = tk(VectorOps.dotTopKWith(corpusNow, queries, k = 5))
-    val ex = tk(VectorOps.probeIvfIndex(spark, path, queries, k = 5,
-      nprobe = 9))
-    assert(ex == brute, "post-qerr-retrain index must match brute force")
-    // and a LOW-nprobe probe of shifted queries is now accurate too:
-    // the new region got its own cell(s), so nprobe=2 finds the
-    // shifted vectors (pre-retrain they shared cells with everything)
-    val low = tk(VectorOps.probeIvfIndex(spark, path, queries, k = 5,
-      nprobe = 2))
-    val recall = (brute & low).size.toDouble / brute.size
-    assert(recall >= 0.9, s"shifted-region recall after retrain: $recall")
-  }
-
   test("delete path: tombstones hide rows exactly; compaction + threshold rewrite apply them physically") {
     val rnd = new scala.util.Random(19L)
     val centers = Array.fill(8)(Array.fill(64)(rnd.nextFloat() * 2f - 1f))
@@ -275,14 +173,6 @@ class IvfIndexSpec extends SparkSpecBase {
       nprobe = 8))
     assert(ex == brute, "probe must serve exactly the live corpus")
     assert(ex.forall(_._2 >= 30L), "a tombstoned row surfaced in a probe")
-    // re-using a tombstoned id before compaction fails LOUDLY (silently
-    // accepting it would leave two physical rows after the next rewrite)
-    val re5 = mk(5 until 6)
-    val exn = intercept[IllegalArgumentException] {
-      VectorOps.appendToIvfIndex(spark, path,
-        re5.toDF("vec_id", "embedding"), retrainCells = 8)
-    }
-    assert(exn.getMessage.contains("compactIvfIndex"))
     // explicit compaction: tombstones applied physically and cleared —
     // the ledger dies with the superseded generation
     VectorOps.compactIvfIndex(spark, path, cells = 8)
@@ -291,14 +181,6 @@ class IvfIndexSpec extends SparkSpecBase {
     assert(spark.read.parquet(s"$gen2/corpus").count() == 290L)
     assert(tk(VectorOps.probeIvfIndex(spark, path, queries, k = 5,
       nprobe = 8)) == brute, "compaction changed the served relation")
-    // the freed id is appendable now
-    assert(!VectorOps.appendToIvfIndex(spark, path,
-      re5.toDF("vec_id", "embedding"), retrainCells = 8))
-    val live2 = live ++ re5
-    assert(tk(VectorOps.probeIvfIndex(spark, path, queries, k = 5,
-        nprobe = 8)) ==
-      tk(VectorOps.dotTopKWith(live2.toDF("vec_id", "embedding"),
-        queries, k = 5)))
     // 80/290 = 27.6% tombstoned: crosses the threshold → auto-rewrite
     val rewrote2 = VectorOps.deleteFromIvfIndex(spark, path,
       (100L until 180L).toSeq.toDF("vec_id"), rewriteThreshold = 0.2,
@@ -306,8 +188,8 @@ class IvfIndexSpec extends SparkSpecBase {
     assert(rewrote2, "27.6% deletion must trigger the physical rewrite")
     val gen3 = VectorOps.indexGenDir(spark, path)
     assert(!new java.io.File(s"$gen3/tombstones").exists())
-    assert(spark.read.parquet(s"$gen3/corpus").count() == 211L)
-    val live3 = live2.filterNot(r => r._1 >= 100L && r._1 < 180L)
+    assert(spark.read.parquet(s"$gen3/corpus").count() == 210L)
+    val live3 = live.filterNot(r => r._1 >= 100L && r._1 < 180L)
     assert(tk(VectorOps.probeIvfIndex(spark, path, queries, k = 5,
         nprobe = 8)) ==
       tk(VectorOps.dotTopKWith(live3.toDF("vec_id", "embedding"),
@@ -315,12 +197,11 @@ class IvfIndexSpec extends SparkSpecBase {
   }
 
   test("delete guards: all-dead refuses before the ledger; absent ids no-op") {
-    // the round-16 Hnsw parity pass: (a) a batch that would tombstone
-    // every physical row refuses BEFORE any write — the old order left
-    // a published index whose probes silently served zero rows below
-    // the threshold; (b) a typo'd delete of a never-indexed id used to
-    // enter the ledger and block that id's future append until a FULL
-    // RETRAIN — the ledger now holds only physically-present ids
+    // (a) a batch that would tombstone every physical row refuses
+    // BEFORE any write — the old order left a published index whose
+    // probes silently served zero rows below the threshold; (b) a
+    // typo'd delete of a never-indexed id is a no-op — the ledger
+    // holds only physically-present ids
     val rnd = new scala.util.Random(23L)
     val rows = (0 until 40).map { i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() * 2f - 1f).toSeq)
@@ -329,22 +210,17 @@ class IvfIndexSpec extends SparkSpecBase {
     VectorOps.writeIvfIndex(rows.toDF("vec_id", "embedding"), path,
       cells = 4)
     val genDir = VectorOps.indexGenDir(spark, path)
-    // (b) absent id: no ledger, and the id appends cleanly afterwards
+    // (b) absent id: no ledger
     assert(!VectorOps.deleteFromIvfIndex(spark, path,
       Seq(9999L).toDF("vec_id"), rewriteThreshold = 0.01))
     assert(!new java.io.File(s"$genDir/tombstones").exists(),
       "an absent id entered the ledger")
-    assert(!VectorOps.appendToIvfIndex(spark, path,
-      Seq((9999L, rows.head._2)).toDF("vec_id", "embedding")))
-    // (a) deleting every row (plus strays) refuses loudly, pre-ledger
+    // (a) deleting every row (plus strays) refuses loudly, pre-ledger:
     // ids 0..49 cover the 40 built rows (40..49 are strays the
-    // presence filter drops); 9999 covers the appended row → all 41
-    // physical rows dead
+    // presence filter drops) → all 40 physical rows dead
     val e = intercept[IllegalStateException](
       VectorOps.deleteFromIvfIndex(spark, path,
-        (0L until 50L).toSeq.toDF("vec_id")
-          .union(Seq(9999L).toDF("vec_id")),
-        rewriteThreshold = 0.2))
+        (0L until 50L).toSeq.toDF("vec_id"), rewriteThreshold = 0.2))
     assert(e.getMessage.contains("every row"), e.getMessage)
     val gen2 = VectorOps.indexGenDir(spark, path)
     assert(!new java.io.File(s"$gen2/tombstones").exists(),
@@ -407,45 +283,6 @@ class IvfIndexSpec extends SparkSpecBase {
       VectorOps.probeIvfIndex(spark, path, nprobe = 2).collect()
     }
     assert(ex.getMessage.contains("torn"), s"wrong error: ${ex.getMessage}")
-  }
-
-  test("qerr drift: a 2% shifted sub-batch inside a conforming append still retrains") {
-    // the dilution hole the whole-batch-mean signal had: 196 conforming
-    // vectors + 4 moderately-shifted ones (per-vector error ratio ≈ 50,
-    // not astronomical) pull the batch MEAN ratio well under errFactor,
-    // but the over-factor FRACTION (4/200 = 2%) fires the retrain — a
-    // new data source sneaking into a corpus looks exactly like this
-    val rnd = new scala.util.Random(23L)
-    val centers = Array.fill(8)(Array.fill(64)(rnd.nextFloat() * 2f - 1f))
-    def mk(ids: Range, shift: Float = 0f): Seq[(Long, Seq[Float])] =
-      ids.map { i =>
-        val c = centers(i % 8)
-        (i.toLong,
-          c.map(x => x + shift + (rnd.nextFloat() - 0.5f) * 0.02f).toSeq)
-      }
-    val path = java.nio.file.Files.createTempDirectory("ivf_dilut").toString
-    VectorOps.writeIvfIndex(mk(0 until 320).toDF("vec_id", "embedding"),
-      path, cells = 8)
-    // conforming-only append: neither signal fires (ratio tails sit ~27σ
-    // under the factor on this noise scale)
-    val conforming = mk(1000 until 1196).toDF("vec_id", "embedding")
-    val (mc, fc) = VectorOps.driftStats(spark, path, conforming)
-    assert(mc < 4.0 && fc == 0.0, s"conforming batch scored mean=$mc frac=$fc")
-    assert(!VectorOps.appendToIvfIndex(spark, path, conforming,
-      retrainThreshold = 10.0, retrainCells = 8),
-      "conforming append must not retrain")
-    // mixed append: shift +0.04/coordinate ⇒ per-vector ratio ≈ 64·0.04²
-    // / (64·0.02²/12) ≈ 48 — over the factor individually, but diluted
-    // to ≈ 1.9 in the batch mean. The stats prove this batch exercises
-    // the FRACTION trigger specifically (mean alone would miss it).
-    val mixed = (mk(2000 until 2196) ++ mk(3000 until 3004, shift = 0.04f))
-      .toDF("vec_id", "embedding")
-    val (mm, fm) = VectorOps.driftStats(spark, path, mixed)
-    assert(mm < 4.0, s"calibration broken: batch mean ratio $mm not diluted")
-    assert(fm >= 0.02, s"calibration broken: over-factor fraction $fm < 2%")
-    assert(VectorOps.appendToIvfIndex(spark, path, mixed,
-      retrainThreshold = 10.0, retrainCells = 9),
-      "a diluted 2% shifted sub-batch must still trigger the qerr retrain")
   }
 
   test("ivfKnnJoin: exhaustive at nprobe=cells, cell-bounded and accurate below") {
@@ -539,8 +376,8 @@ class IvfIndexSpec extends SparkSpecBase {
   test("meta count: maintenance decisions are metadata-only (stamped sentinel)") {
     // Round-17 parity with the Hnsw meta count (round-16 VERDICT missing
     // #1): the OK sentinel carries the generation's exact physical row
-    // count, so delete's rewrite threshold and append's mass-drift check
-    // stop paying an O(corpus-footers) count() per maintenance batch.
+    // count, so delete's rewrite threshold stops paying an
+    // O(corpus-footers) count() per maintenance batch.
     // The forged-stamp leg PROVES the decision reads the sentinel (a
     // footer count would see the true total and rewrite); the
     // empty-sentinel leg covers pre-round-17 generations (one fallback
@@ -559,11 +396,7 @@ class IvfIndexSpec extends SparkSpecBase {
       try src.mkString.trim finally src.close()
     }
     assert(stamp() == "40", "build must stamp the exact written row count")
-    // append: exact arithmetic (old + batch), restamped in place
-    assert(!VectorOps.appendToIvfIndex(spark, path,
-      mk(40 until 50).toDF("vec_id", "embedding"), retrainCells = 4))
-    assert(stamp() == "50", "append must restamp old + batch")
-    // FORGE the stamp high: 15/50 = 30% would cross the 20% threshold,
+    // FORGE the stamp high: 15/40 = 37.5% would cross the 20% threshold,
     // but against the forged 5000 it reads as 0.3% — no rewrite proves
     // the threshold consumed the sentinel, never a corpus footer count
     val genDir = VectorOps.indexGenDir(spark, path)
@@ -581,17 +414,17 @@ class IvfIndexSpec extends SparkSpecBase {
       "threshold decision must be metadata-only (read the forged stamp)")
     // LEGACY sentinel (pre-round-17: empty file): one footer-count
     // fallback, honest decision, and the result is stamped back; the
-    // 15 existing + 5 novel tombstones now cross 20/50 = 40% → rewrite,
+    // 15 existing + 5 novel tombstones now cross 20/40 = 50% → rewrite,
     // and the retrained generation stamps its own fresh count
     forge("")
     assert(VectorOps.deleteFromIvfIndex(spark, path,
       (15L until 20L).toSeq.toDF("vec_id"), rewriteThreshold = 0.2,
       retrainCells = 4),
       "legacy (empty) sentinel must fall back to one footer count")
-    assert(stamp() == "30",
+    assert(stamp() == "20",
       "retrained generation must stamp its live row count")
     assert(spark.read.parquet(
-      s"${VectorOps.indexGenDir(spark, path)}/corpus").count() == 30L)
+      s"${VectorOps.indexGenDir(spark, path)}/corpus").count() == 20L)
   }
 
   test("delete presence check: id sidecar is bucket-pruned; crash window falls back") {
@@ -637,22 +470,14 @@ class IvfIndexSpec extends SparkSpecBase {
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
     assert(ledger == Set(7L),
       s"only the physically-present id may enter the ledger, got $ledger")
-    // an append keeps the sidecar complete (ids written + restamped)
-    assert(!VectorOps.appendToIvfIndex(spark, path,
-      mk(100 until 110).toDF("vec_id", "embedding"), retrainCells = 4))
-    val (p2, via2) = VectorOps.presenceIds(spark, genDir,
-      Seq(105L).toDF("vec_id"))
-    assert(via2, "sidecar must stay authoritative across appends")
-    assert(p2.filter(col("vec_id") === 105L).count() == 1L,
-      "an appended id must be visible to the pruned presence check")
-    // CRASH WINDOW: a blanked ids stamp (what a crash mid-append
-    // leaves) must fall back to the corpus scan, never serve stale
+    // CRASH WINDOW: a blanked ids stamp must fall back to the corpus
+    // scan, never serve stale
     val sp = new org.apache.hadoop.fs.Path(s"$genDir/ids/_GRAFT_IDS_OK")
     val hfs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     hfs.create(sp, true).close()
     val (p3, via3) = VectorOps.presenceIds(spark, genDir,
-      Seq(105L).toDF("vec_id"))
+      Seq(30L).toDF("vec_id"))
     assert(!via3, "an unprovable sidecar must fall back to the corpus")
-    assert(p3.filter(col("vec_id") === 105L).count() == 1L)
+    assert(p3.filter(col("vec_id") === 30L).count() == 1L)
   }
 }

@@ -137,15 +137,6 @@ class LedgerSpec extends AnyFunSuite {
     assert(w.calls == 2)
   }
 
-  test("resume keeps a torn attempt's finished parts for the writer") {
-    val dest = new Path(freshDir(), "v=2")
-    touch(new Path(Ledger.tmpOf(dest), "_b=0/_SUCCESS"))
-    assert(Ledger.publishOnce(fs, dest, resume = true) { tmp =>
-      touch(new Path(tmp, "_b=1/_SUCCESS"))
-    })
-    assert(listing(dest) == Set("_b=0/_SUCCESS", "_b=1/_SUCCESS"))
-  }
-
   test("replaceSmall torn before its flip: readers still see the old body") {
     val p = new Path(freshDir(), "CURRENT")
     assert(Ledger.readSmall(fs, p).isEmpty)

@@ -17,23 +17,27 @@ class HttpSignalSinkSpec extends SparkSpecBase {
 
   /** In-JVM receiver: counts raw POSTs, applies a signal only the first
     * time its Idempotency-Key is seen (the reference's Restate workflow
-    * endpoint journals signals the same way). */
-  private class Receiver {
+    * endpoint journals signals the same way). The first `dropFirst` POSTs
+    * are applied but their connection closes without an answer. */
+  private class Receiver(dropFirst: Int = 0) {
     val applied = new ConcurrentHashMap[String, AtomicInteger]()
     val raw = new AtomicInteger(0)
     private val seen = ConcurrentHashMap.newKeySet[String]()
     val server = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/login_workflow", { exchange =>
-      raw.incrementAndGet()
+      val n = raw.incrementAndGet()
       val path = exchange.getRequestURI.getPath // /login_workflow/<key>/receive_otp
       val key = path.stripPrefix("/login_workflow/").stripSuffix("/receive_otp")
       val token = exchange.getRequestHeaders.getFirst("Idempotency-Key")
       if (token != null && seen.add(token))
         applied.computeIfAbsent(key, _ => new AtomicInteger(0)).incrementAndGet()
-      val resp = "{\"ok\":true}".getBytes("UTF-8")
-      exchange.sendResponseHeaders(200, resp.length)
-      exchange.getResponseBody.write(resp)
+      if (n > dropFirst) {
+        val resp = "{\"ok\":true}".getBytes("UTF-8")
+        exchange.sendResponseHeaders(200, resp.length)
+        exchange.getResponseBody.write(resp)
+      }
+      // with no response headers sent, close() drops the connection
       exchange.close()
     })
     server.start()
@@ -104,5 +108,25 @@ class HttpSignalSinkSpec extends SparkSpecBase {
     for (k <- Seq("zepto_alice", "zepto_bob", "blinkit_carol", "zepto_dave"))
       assert(receiver.appliesOf(k) == 1, s"$k applied ${receiver.appliesOf(k)} times")
     receiver.stop()
+  }
+
+  test("a POST whose connection closes without an answer is resent with the same Idempotency-Key") {
+    implicit val s = spark
+    import s.implicits._
+    val receiver = new Receiver(dropFirst = 1)
+    val ckpt = java.nio.file.Files.createTempDirectory("sig_ckpt").toString
+    val ledger = java.nio.file.Files.createTempDirectory("sig_ledger").toString
+    val input = MemoryStream[(String, String)](spark)
+    val q = HttpSignalSink.start(input.toDS().toDF("key", "otp"),
+      receiver.base, ledger, ckpt)
+    try {
+      input.addData(("zepto_alice", "1234"), ("zepto_bob", "5678"))
+      q.processAllAvailable()
+    } finally { q.stop(); receiver.stop() }
+    assert(receiver.raw.get() == 3,
+      s"2 POSTs plus one resend, got ${receiver.raw.get()}")
+    for (k <- Seq("zepto_alice", "zepto_bob"))
+      assert(receiver.appliesOf(k) == 1, s"$k applied ${receiver.appliesOf(k)} times")
+    assert(new java.io.File(s"$ledger/batch_0").exists(), "ledger commit landed")
   }
 }

@@ -8,7 +8,7 @@
 # checkpointing, native memory). The default suite already pins RocksDB
 # for a few tests (the OTP correlation end-to-end test, the monotone
 # guard, StateInspect's change feed); this sweep pushes every stateful
-# operator (OTP correlation, funnel, heartbeat, stream dedup, view/sketch
+# operator (OTP correlation, funnel, heartbeat, stream dedup, view
 # maintenance, the full §3.1 connector lifecycle) through it.
 #
 # Mechanism: GRAFT_STATE_PROVIDER is forwarded by build.sbt into the
@@ -29,7 +29,6 @@ exec sbt -batch "testOnly \
   graft.streaming.StreamOpsSpec \
   graft.streaming.StateInspectSpec \
   graft.streaming.ViewMaintenanceSpec \
-  graft.streaming.SketchMaintenanceSpec \
   graft.streaming.IngestPipelineSpec \
   graft.streaming.GrafteventsLifecycleSpec \
   graft.streaming.HttpLoopSpec"
