@@ -13,14 +13,15 @@ import graft.sources.Ledger
   * the centrality/cohesion operators read instead of re-deriving the
   * graph from raw interactions per run.
   *
-  * Layout (the `gen=`/CURRENT discipline of Retrieval.scala:79-99,
+  * Layout (the `gen=`/CURRENT discipline of [[graft.sources.GenStore]],
   * applied to adjacency): `gen=N/base/bucket=K/` holds the bootstrap
   * adjacency, `gen=N/appends/<tag>/` the committed deltas (`data/` =
   * added edges, `deletes/` = tombstoned edges), `CURRENT` the atomic
   * generation pointer. Each undirected edge is stored as BOTH
   * orientations, bucketed by `pmod(xxhash64(src), nBuckets)`, so a
-  * neighbor probe reads exactly ONE bucket directory (partition
-  * filter), the adjacency-list convention at 2× the storage.
+  * node-set restriction ([[adjacencyFor]]) reads only the bucket
+  * directories its nodes hash to (partition filter), the
+  * adjacency-list convention at 2× the storage.
   *
   * Merge semantics are LSM: appends never look at the accumulated
   * corpus — per-batch publish cost is O(batch), NOT O(graph), which is
@@ -46,11 +47,6 @@ object GraphArtifact {
   /** Directory of the CURRENT generation (public: specs and probes
     * resolve it to assert pruning and grace behavior). */
   def edgesGenDir(s: SparkSession, dir: String): String = gens.genDir(s, dir)
-
-  /** Drop every generation except CURRENT (the explicit end of the
-    * reader grace window). Returns the number reclaimed. */
-  def expireEdgeGenerations(s: SparkSession, dir: String): Int =
-    gens.expire(s, dir)
 
   /** Normalize (src, dst) rows to the stored shape: undirected simple
     * (self-loops dropped, exact duplicates collapsed), BOTH
@@ -101,7 +97,7 @@ object GraphArtifact {
     *
     * Conflict contract: the SAME edge in both `adds` and `deletes` of
     * one call has no deterministic winner and is refused loudly before
-    * any publish (the StreamPostings convention). */
+    * any publish. */
   def appendEdges(adds: DataFrame, dir: String, tag: String,
       deletes: Option[DataFrame] = None): Boolean = {
     require(tag.nonEmpty && tag.matches("[A-Za-z0-9_\\-]+"),
@@ -188,56 +184,12 @@ object GraphArtifact {
       .filter(col("src") < col("dst"))
       .select(col("src").as("a"), col("dst").as("b"))
 
-  /** Resolved neighbors of `node`, reading ONLY the one bucket its hash
-    * lands in — every layer's scan carries the partition filter
-    * (probe-pinned), so the read is O(artifact/nBuckets), not
-    * O(artifact). */
-  def neighborsStored(s: SparkSession, dir: String, node: Long): DataFrame = {
-    val genDir = edgesGenDir(s, dir)
-    val nBuckets = readNBuckets(s, genDir)
-    resolve(
-      layered(s, genDir)
-        .filter(col("bucket") ===
-          pmod(xxhash64(lit(node)), lit(nBuckets.toLong)))
-        .filter(col("src") === node))
-      .select(col("dst").as("neighbor"))
-  }
-
-  /** Per-node degrees of the resolved graph (both orientations stored,
-    * so a plain count by src IS the undirected degree). */
-  def degreesStored(s: SparkSession, dir: String): DataFrame =
-    resolve(layered(s, edgesGenDir(s, dir)))
-      .groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-
   /** Committed append tags of the CURRENT generation — the overlay
     * chain length a maintenance policy bounds (every [[readEdges]]
     * resolve unions base + ALL committed appends, so read amplification
-    * grows linearly with this number until a compaction). */
+    * grows linearly with this number until a [[writeEdges]] rebuild). */
   def chainLength(s: SparkSession, dir: String): Int =
     coverage(s, dir)._2.length
-
-  /** Compact the artifact: rebuild the next generation from the
-    * RESOLVED edge set at the stored bucket count — appended history
-    * and tombstones are gone, the chain length resets to zero. One
-    * resolve scan + one bucketed write, O(artifact); publish is the
-    * atomic pointer flip, and the superseded generation keeps the
-    * one-cycle reader grace ([[graft.sources.GenStore]]).
-    *
-    * Mid-stream legality: compaction destroys the batch-tag ledger, so
-    * a crash AFTER it but before the stream checkpoint commits makes
-    * the replayed batch re-append — which is SAFE, because edge ops are
-    * idempotent on the resolved state (re-adding a present edge keeps
-    * it present; re-tombstoning an absent edge keeps it absent; adds
-    * and deletes of one batch are disjoint by the append conflict
-    * contract). Exactly-once therefore holds on CONTENT across the
-    * compaction boundary even though the physical ledger restarts —
-    * the contract [[graft.streaming.StreamGraph]] relies on. */
-  def compactEdges(s: SparkSession, dir: String): Unit = {
-    val nBuckets = readNBuckets(s, edgesGenDir(s, dir))
-    writeEdges(
-      readEdges(s, dir).select(col("a").as("src"), col("b").as("dst")),
-      dir, nBuckets)
-  }
 
   /** Coverage snapshot: (generation name, committed append tags in
     * layer order). A derived artifact ([[RankArtifact]]) records this to

@@ -69,16 +69,8 @@ import graft.sources.Tables
   * instead of letting an undersized `nShards` die as a task OOM.
   *
   * LIFECYCLE:
-  *  - [[appendToHnswIndex]]: new vectors hash to their shards; ONLY
-  *    the affected shards rebuild (ascending-vec_id insertion makes
-  *    append ≡ full rebuild, row-for-row — spec-pinned), untouched
-  *    shards byte-copy into the next generation. New ids must exceed
-  *    their shard's current max (loud contract — an out-of-order id
-  *    would silently break the append ≡ rebuild equivalence).
-  *  - [[deleteFromHnswIndex]]: O(deleted) tombstone ledger; probes
-  *    keep walking through dead nodes (connectivity) but never emit
-  *    them, with the beam widened by the shard's dead count; past
-  *    `rewriteThreshold` the affected shards rebuild over live rows.
+  *  - [[writeIndex]] builds the next generation from the whole corpus;
+  *    a grown or shrunk corpus is a rebuild.
   *  - [[requireFresh]] / `searchStored(verifyCorpus = ...)`: LOUD
   *    staleness guard — a probe against a corpus that grew past the
   *    index refuses with the fix by name instead of silently serving
@@ -87,9 +79,12 @@ import graft.sources.Tables
   * Layout (the [[graft.sources.GenStore]] `gen=/CURRENT` discipline):
   * `gen=N/nodes/shard=K/` parquet rows (node, vec, levels) — levels =
   * array of per-level neighbor-id arrays — plus the meta sidecar
-  * (nShards, m, efC) written LAST as the completeness sentinel; an
-  * optional `gen=N/tombstones/` deletion ledger rides inside its
-  * generation (append copies it forward; compaction drops it).
+  * (nShards, m, efC, rows) written LAST as the completeness sentinel.
+  * Probes also honour an optional `gen=N/tombstones/` deletion ledger
+  * inside the generation: they keep walking through dead nodes
+  * (connectivity) but never emit them, with the beam widened by the
+  * shard's dead count. No writer in this library produces that ledger
+  * any more; stores written by an earlier release may carry one.
   */
 object Hnsw {
   private val MetaName = "_graft_hnsw_meta"
@@ -342,12 +337,9 @@ object Hnsw {
 
   /** Meta sidecar (the generation's completeness sentinel, written
     * LAST): nShards, m, efC, and — since round 16 — the store's exact
-    * PHYSICAL row count, so the delete path's rewrite-threshold
-    * decision is metadata-only instead of a full-corpus `count()` per
-    * delete batch (an O(index) scan deciding an O(deleted) operation).
-    * The count is exact at every write point: build counts the written
-    * store's footers once, append adds the validated batch size,
-    * compact re-counts the rebuilt store's footers. */
+    * PHYSICAL row count (the build counts the written store's footers
+    * once), so the probe's all-dead guard is metadata-only instead of
+    * a full-corpus `count()` per probe. */
   private def writeMeta(s: SparkSession, genDir: String, nShards: Int,
       m: Int, efC: Int, rows: Long): Unit = {
     val out = hfsOf(s, genDir).create(new Path(genDir, MetaName), true)
@@ -369,17 +361,12 @@ object Hnsw {
 
   /** Exact physical row count of a generation's nodes store — a
     * parquet FOOTER count (no row materialization), the legacy-meta
-    * fallback and the post-build/compact stamp. */
+    * fallback and the post-build stamp. */
   private def countNodes(s: SparkSession, genDir: String): Long =
     s.read.parquet(s"$genDir/nodes").count()
 
-  /** nShards of a generation's meta (internal: the streaming
-    * maintainer prunes its repair probes to the one hash shard). */
-  private[graft] def nShardsOf(s: SparkSession, genDir: String): Int =
-    readMeta(s, genDir)._1
-
-  // A PUBLISHED generation's nodes store is immutable (append/compact
-  // write a NEW generation; tombstones live beside the nodes, never in
+  // A PUBLISHED generation's nodes store is immutable (a build writes
+  // a NEW generation; tombstones live beside the nodes, never in
   // them), so a legacy sidecar's footer count can be memoized per
   // generation dir instead of re-paid by every probe (round-16 ADVICE:
   // a pre-round-16 store with tombstones paid a full-store countNodes
@@ -432,11 +419,6 @@ object Hnsw {
   /** Directory of the CURRENT generation (specs assert layout). */
   def indexGenDir(s: SparkSession, dir: String): String = gens.genDir(s, dir)
 
-  /** Drop every generation except CURRENT — the explicit end of the
-    * one-publish-cycle reader grace (the IVF convention). */
-  def expireHnswGenerations(s: SparkSession, dir: String): Int =
-    gens.expire(s, dir)
-
   /** The generation's deletion ledger, if any rows are tombstoned. */
   private def tombstonesOf(s: SparkSession, genDir: String)
       : Option[DataFrame] = {
@@ -468,287 +450,7 @@ object Hnsw {
     if (missing.nonEmpty) throw new IllegalStateException(
       s"Hnsw index at $dir is STALE: corpus vec_id " +
         s"${missing.head.get(0)} is not in the index — " +
-        "appendToHnswIndex the new vectors (or rebuild with " +
-        "writeIndex) before probing")
-  }
-
-  /** Carry `names` (shard dirs / the tombstone ledger) from the
-    * current generation into the next WITHOUT moving bytes where the
-    * filesystem allows: on local (`file:`) stores every file HARD-LINKS
-    * into the new generation (`link(2)` — the FileBus publish
-    * precedent), so an append/compact's IO is O(affected shards) plus
-    * O(file count) of metadata for the untouched ones, never O(index
-    * bytes) through the driver (the round-15 verdict's #1 "what's
-    * wrong": a 1-of-64-shard append used to byte-copy the other 63).
-    * Linked bytes survive the old generation's GC — `link(2)` keeps
-    * the inode alive after the source directory is deleted — so
-    * GenStore's publish/expire lifecycle needs no carve-outs, and a
-    * compaction/expire that physically deletes the LAST link is where
-    * bytes actually die (the "physical consolidation only at expire"
-    * discipline). Non-POSIX stores (HDFS-class, object stores) fall
-    * back to the physical copy; on HDFS the right analog would be
-    * snapshot/rename-based layouts, out of scope for a local-FS test
-    * bed but isolated here behind one function. */
-  private def copyForward(s: SparkSession, fromGen: String, toGen: String,
-      names: Seq[String]): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val hfs = hfsOf(s, fromGen)
-    val local = hfs.getUri.getScheme == "file"
-    def linkTree(src: Path, dst: Path): Unit = {
-      val st = hfs.getFileStatus(src)
-      if (st.isDirectory) {
-        hfs.mkdirs(dst)
-        hfs.listStatus(src).foreach(c =>
-          linkTree(c.getPath, new Path(dst, c.getPath.getName)))
-      } else {
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(dst.toUri.getPath),
-          java.nio.file.Paths.get(src.toUri.getPath))
-        // the enumeration above goes through the ChecksumFileSystem,
-        // which HIDES the .crc sidecars — link each file's sidecar too,
-        // or carried-forward generations silently lose local-FS
-        // checksum verification (the copy path used to regenerate
-        // them). Same bytes, same name ⇒ the linked sidecar stays valid.
-        val crcSrc = java.nio.file.Paths.get(
-          new Path(src.getParent, s".${src.getName}.crc").toUri.getPath)
-        if (java.nio.file.Files.exists(crcSrc)) {
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(
-              new Path(dst.getParent, s".${dst.getName}.crc").toUri.getPath),
-            crcSrc)
-          ()
-        }
-      }
-    }
-    names.foreach { n =>
-      val src = new Path(s"$fromGen/$n")
-      if (hfs.exists(src)) {
-        if (local) linkTree(src, new Path(s"$toGen/$n"))
-        else org.apache.hadoop.fs.FileUtil.copy(
-          hfs, src, hfs, new Path(s"$toGen/$n"), false, true, conf)
-      }
-    }
-  }
-
-  /** Physical shard partition dirs of a generation's nodes store. */
-  private def shardDirs(s: SparkSession, genDir: String): Seq[Long] =
-    hfsOf(s, genDir).listStatus(new Path(s"$genDir/nodes"))
-      .map(_.getPath.getName).toSeq
-      .collect { case d if d.startsWith("shard=") =>
-        d.stripPrefix("shard=").toLong }
-
-  /** Append new (vec_id, embedding) vectors WITHOUT a full rebuild:
-    * each lands in its hash shard, ONLY the affected shards rebuild
-    * (old physical rows + batch, in ascending-vec_id insertion order —
-    * so append ≡ a full writeIndex of the grown corpus, row-for-row,
-    * spec-pinned), and untouched shards byte-copy into the next
-    * generation, published with one atomic pointer flip.
-    *
-    * ID CONTRACT (what makes append ≡ rebuild an identity, not a
-    * heuristic): every appended vec_id must exceed its shard's current
-    * max — ascending ids append to the END of the deterministic
-    * insertion sequence, so the incremental build replays exactly what
-    * a from-scratch build would do. An out-of-order id fails LOUDLY
-    * (it would have to be inserted mid-sequence — that IS a rebuild;
-    * the error says so). A tombstoned id likewise refuses (the IVF
-    * rule: compact first, then re-add). */
-  def appendToHnswIndex(s: SparkSession, dir: String,
-      newVecs: DataFrame): Unit = {
-    val genDir = indexGenDir(s, dir)
-    val (nShards, m, efC, oldCount) = readMeta(s, genDir)
-    val batch = newVecs
-      .select(col("vec_id").cast("long").as("node"),
-        col("embedding").as("vec"))
-      .filter(col("node").isNotNull && col("vec").isNotNull)
-      .withColumn("shard", pmod(xxhash64(col("node")), lit(nShards.toLong)))
-      .persist()
-    try {
-      if (batch.isEmpty) return // nothing to do — don't churn a gen
-      tombstonesOf(s, genDir).foreach { t =>
-        val clash = batch.select(col("node").as("vec_id"))
-          .join(t, Seq("vec_id"), "left_semi").limit(1).collect()
-        if (clash.nonEmpty) throw new IllegalArgumentException(
-          s"appendToHnswIndex: vec_id ${clash.head.get(0)} is " +
-            "tombstoned in this index; run compactHnswIndex first to " +
-            "apply deletions physically, then re-add the id")
-      }
-      val affected = batch.select(col("shard")).distinct()
-        .collect().map(_.getLong(0)).toSet
-      // max only over the shards the batch touches — the partition
-      // filter prunes the read to those directories (an unfiltered max
-      // would scan every shard of the store, violating the append's
-      // own pay-only-for-affected contract)
-      val shardMax = s.read.parquet(s"$genDir/nodes")
-        .filter(col("shard").isin(affected.toSeq: _*))
-        .groupBy(col("shard").cast("long").as("shard"))
-        .agg(max(col("node")).as("max_node"))
-      val bad = batch.join(shardMax, Seq("shard"), "left")
-        .filter(col("max_node").isNotNull &&
-          col("node") <= col("max_node"))
-        .limit(1).collect()
-      if (bad.nonEmpty) throw new IllegalArgumentException(
-        s"appendToHnswIndex: vec_id ${bad.head.getAs[Long]("node")} " +
-          s"does not exceed shard ${bad.head.getAs[Long]("shard")}'s " +
-          "current max — appends must use fresh, increasing ids (the " +
-          "deterministic insertion order is ascending vec_id; an " +
-          "out-of-order id means a rebuild: writeIndex)")
-      val old = s.read.parquet(s"$genDir/nodes")
-        .filter(col("shard").isin(affected.toSeq: _*))
-        .select(col("node").as("vec_id"), col("vec").as("embedding"))
-      val add = batch.select(col("node").as("vec_id"),
-        col("vec").as("embedding"))
-      val genName = gens.nextGenName(s, dir)
-      val newGen = s"$dir/$genName"
-      buildRows(old.union(add), nShards, m, efC)
-        .repartitionByRange(col("shard"), col("node"))
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(s"$newGen/nodes")
-      val untouched = shardDirs(s, genDir).filterNot(affected)
-      copyForward(s, genDir, newGen,
-        untouched.map(k => s"nodes/shard=$k") :+ "tombstones")
-      // exact metadata arithmetic: the batch passed the novelty and
-      // in-build duplicate guards, so every row is a NEW physical row
-      // (legacy sidecar without a count → one footer count, once)
-      writeMeta(s, newGen, nShards, m, efC,
-        oldCount.map(_ + batch.count()).getOrElse(countNodes(s, newGen)))
-      gens.publish(s, dir, genName)
-    } finally batch.unpersist()
-  }
-
-  /** Delete vectors by id: O(deleted) work + an O(affected-shards) id
-    * read — a tombstone ledger every probe filters (dead nodes stay in
-    * the graph for CONNECTIVITY, the walk just never emits them and
-    * widens its beam by the dead count); past `rewriteThreshold` of
-    * the physical corpus the affected shards rebuild over live rows
-    * ([[compactHnswIndex]] — one shard rewrite amortized over many
-    * deletes, the IVF economics). Returns true iff the rewrite ran.
-    *
-    * LEDGER INVARIANT: only ids PHYSICALLY PRESENT in the store enter
-    * the ledger — incoming ids anti-join the affected shards' node ids
-    * (partition-pruned to the shard directories the batch hashes into,
-    * never a corpus scan). A typo'd delete of a never-indexed id used
-    * to "tombstone harmlessly" but then poisoned that id's future
-    * append (the clash check refuses tombstoned ids) until a full
-    * compaction; now it is a no-op. The invariant is also what makes
-    * the meta row count's delete arithmetic exact.
-    *
-    * The rewrite-threshold decision is METADATA-ONLY: physical total
-    * from the meta sidecar (exact at build/append/compact), dead count
-    * from the delta-bounded ledger — the round-15 full-corpus
-    * `count()` per delete batch is gone.
-    *
-    * LOUD all-dead guard: a batch that would tombstone EVERY physical
-    * row refuses BEFORE touching the ledger. The old order wrote the
-    * ledger first and let compactHnswIndex throw its empty-store
-    * refusal after — leaving a published index whose probes silently
-    * returned zero rows, exactly the state the guard exists to
-    * prevent.
-    *
-    * The ledger appends IN PLACE into the current generation (the IVF
-    * ledger convention — a delete must not pay a generation publish):
-    * a crash mid-append can leave the batch PARTIALLY applied.
-    * Deletes are idempotent (the novel-only filter converges), so the
-    * repair is simply re-issuing the same delete. */
-  def deleteFromHnswIndex(s: SparkSession, dir: String, ids: DataFrame,
-      rewriteThreshold: Double = 0.2): Boolean = {
-    val genDir = indexGenDir(s, dir)
-    val (nShards, _, _, metaCount) = readMeta(s, genDir)
-    val incoming = ids.select(col("vec_id").cast("long").as("vec_id"))
-      .filter(col("vec_id").isNotNull).distinct()
-    // shards the batch hashes into — delta-sized driver set, bounds
-    // the presence check's read to those partition directories
-    val touched = incoming
-      .select(pmod(xxhash64(col("vec_id")), lit(nShards.toLong))
-        .as("shard"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    if (touched.isEmpty) return false
-    val present = incoming.join(
-      s.read.parquet(s"$genDir/nodes")
-        .filter(col("shard").isin(touched: _*))
-        .select(col("node").as("vec_id")),
-      Seq("vec_id"), "left_semi")
-    val novel = tombstonesOf(s, genDir)
-      .fold(present)(t => present.join(t, Seq("vec_id"), "left_anti"))
-      .persist()
-    try {
-      val novelN = novel.count()
-      val ledger = tombstonesOf(s, genDir)
-      val existingDead = ledger.map(_.count()).getOrElse(0L)
-      val nDead = existingDead + novelN
-      if (nDead == 0L) return false
-      val total = metaCount.getOrElse(countNodesCached(s, genDir))
-      // all-dead refusal, count-gated then EXACTLY confirmed: a legacy
-      // (pre-present-only-invariant) ledger can hold never-indexed ids
-      // that inflate nDead past total on a healthy index — so the
-      // count only arms the check, and a first-live-row probe (nodes
-      // anti-join ledger∪batch, O(first surviving row)) decides it
-      if (novelN > 0 && nDead >= total) {
-        val wouldDead = ledger.fold(novel)(novel.union(_)).distinct()
-        val anyLive = s.read.parquet(s"$genDir/nodes")
-          .select(col("node").as("vec_id"))
-          .join(wouldDead, Seq("vec_id"), "left_anti")
-          .limit(1).collect()
-        if (anyLive.isEmpty) throw new IllegalStateException(
-          s"deleteFromHnswIndex: this batch would tombstone every " +
-            s"row ($nDead of $total) of the index at $dir — an " +
-            "all-dead index would silently serve zero neighbors; " +
-            "delete the index directory (or writeIndex a new corpus) " +
-            "instead")
-      }
-      // skip empty appends: a zero-row ledger would tax every later
-      // probe's broadcast and every append's clash scan forever
-      if (novelN > 0)
-        novel.write.mode("append").parquet(s"$genDir/tombstones")
-      val rewrite = nDead.toDouble / total > rewriteThreshold
-      if (rewrite) compactHnswIndex(s, dir)
-      rewrite
-    } finally { novel.unpersist(); () }
-  }
-
-  /** Apply tombstones physically: shards holding dead nodes rebuild
-    * from their LIVE rows (≡ a fresh build over the live corpus,
-    * row-for-row — the same determinism argument as append), untouched
-    * shards byte-copy, and the new generation carries NO ledger. Also
-    * the prerequisite for re-using a deleted vec_id. No-op without a
-    * ledger. */
-  def compactHnswIndex(s: SparkSession, dir: String): Unit = {
-    val genDir = indexGenDir(s, dir)
-    val dead = tombstonesOf(s, genDir).getOrElse(return)
-    val (nShards, m, efC, _) = readMeta(s, genDir)
-    val nodes = s.read.parquet(s"$genDir/nodes")
-    val affected = nodes.join(dead, col("node") === dead("vec_id"),
-        "left_semi")
-      .select(col("shard").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    val genName = gens.nextGenName(s, dir)
-    val newGen = s"$dir/$genName"
-    val untouched = shardDirs(s, genDir).filterNot(affected)
-    if (affected.nonEmpty) {
-      val live = nodes.filter(col("shard").isin(affected.toSeq: _*))
-        .join(dead, col("node") === dead("vec_id"), "left_anti")
-        .select(col("node").as("vec_id"), col("vec").as("embedding"))
-      // loud empty-store guard: compacting away EVERY row would publish
-      // a generation whose nodes dir holds no parquet at all — every
-      // later read would die with an opaque schema-inference error
-      // instead of a contract message
-      if (untouched.isEmpty && live.isEmpty)
-        throw new IllegalStateException(
-          s"compactHnswIndex: every row of the index at $dir is " +
-            "tombstoned — compaction would publish an empty store; " +
-            "delete the index directory (or writeIndex a new corpus) " +
-            "instead")
-      buildRows(live, nShards, m, efC)
-        .repartitionByRange(col("shard"), col("node"))
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(s"$newGen/nodes")
-    }
-    copyForward(s, genDir, newGen,
-      untouched.map(k => s"nodes/shard=$k"))
-    // re-stamp from the rebuilt store's footers (cheap, exact — the
-    // ledger-arithmetic alternative would trust a legacy ledger that
-    // predates the present-only invariant)
-    writeMeta(s, newGen, nShards, m, efC, countNodes(s, newGen))
-    gens.publish(s, dir, genName)
+        "rebuild it with writeIndex before probing")
   }
 
   /** Search the stored index: for each (qid, qvec) in `queries` —
@@ -801,12 +503,11 @@ object Hnsw {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     require(qRows.nonEmpty, "Hnsw: empty query set")
     val qB = s.sparkContext.broadcast(qRows)
-    // tombstones: bounded by the rewrite threshold (the IVF contract),
-    // so a broadcast set is delta-sized
+    // tombstones: an earlier release's writer capped the ledger at a
+    // rewrite threshold, so the set is delta-sized and broadcasts
     val deadSet = tombstonesOf(s, genDir)
       .map(_.collect().map(_.getLong(0)).toSet)
       .getOrElse(Set.empty[Long])
-    // defense in depth behind deleteFromHnswIndex's all-dead refusal:
     // a hand-torn store where EVERY physical row is tombstoned must
     // refuse loudly, not silently return zero neighbors. Count-gated
     // (free on healthy stores) then EXACTLY confirmed by a first-

@@ -211,32 +211,16 @@ object RankArtifact {
   def chainLength(s: SparkSession, rankDir: String): Int =
     deltaNames(s, gens.genDir(s, rankDir)).length
 
-  /** (edge generation, edge tags) the stored ranks currently cover —
-    * what [[refreshRanks]] would diff against; public so a joint
-    * edge+rank compaction can verify completeness before restamping. */
-  def coverage(s: SparkSession, rankDir: String): (String, Seq[String]) = {
-    val genDir = gens.genDir(s, rankDir)
-    val meta = readMeta(s, genDir)
-    (meta.edgeGen, coveredTags(s, genDir, meta))
-  }
-
   /** Fold-compact the overlay chain: materialize every iteration's
     * RESOLVED table (base + overlays, latest-layer-wins) as the next
     * generation's base — ZERO rank computation, exact by definition of
     * resolution, O(artifact · iters) reads instead of the O(graph ·
     * iters) joins a [[writeRanks]] recompute pays. The chain length
     * resets to zero; publish is the atomic pointer flip with the
-    * one-cycle reader grace.
-    *
-    * `newCoverage`, when given, restamps the folded base's edge lineage
-    * — the edge-compaction handoff: legal ONLY when the chain's covered
-    * tags are complete for the OLD edge generation and the new one
-    * resolves to the same edge set (which a just-compacted edge
-    * artifact does by construction — [[GraphArtifact.compactEdges]]
-    * rebuilds from the resolved edges). The caller owns that
-    * precondition ([[graft.streaming.StreamRanks]] checks it). */
-  def compactRanks(s: SparkSession, rankDir: String,
-      newCoverage: Option[(String, Seq[String])] = None): Unit = {
+    * one-cycle reader grace. The folded base keeps the chain's edge
+    * lineage (generation + covered tags), so the next refresh diffs
+    * against exactly what the overlays had covered. */
+  def compactRanks(s: SparkSession, rankDir: String): Unit = {
     val genDir = gens.genDir(s, rankDir)
     val meta = readMeta(s, genDir)
     val deltas = deltaNames(s, genDir)
@@ -253,9 +237,9 @@ object RankArtifact {
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$newDir/base/iter=$i")
     })
-    val (eg, tags) = newCoverage.getOrElse((meta.edgeGen, covered))
     writeSmall(s, new Path(newDir, MetaName),
-      metaBody(Meta(meta.iters, meta.scale, meta.nBuckets, eg, tags)))
+      metaBody(Meta(meta.iters, meta.scale, meta.nBuckets, meta.edgeGen,
+        covered)))
     gens.publish(s, rankDir, genName)
   }
 

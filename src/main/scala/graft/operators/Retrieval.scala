@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.sources.{Ledger, Tables}
+import graft.sources.Tables
 
 /** Positional-postings phrase search (SURVEY.md §2.11 extension).
   *
@@ -78,9 +78,9 @@ object Retrieval {
   // Versioned-generation layout (the IVF-index discipline,
   // VectorOps.scala `gen=`/CURRENT, applied to text — closing the
   // round-12d "no generation scheme" caveat): a generation directory
-  // `gen=N/` holds the bucketed base postings, its committed appends,
-  // and the bucket-count meta TOGETHER; `CURRENT` is a one-line pointer
-  // file naming the live generation. A rebuild writes the next
+  // `gen=N/` holds the bucketed base postings and the bucket-count
+  // meta TOGETHER; `CURRENT` is a one-line pointer file naming the live
+  // generation. A rebuild writes the next
   // `gen=N+1/` fully — its meta sidecar last, so the meta IS the
   // completeness manifest — then publishes by atomically renaming a
   // fresh pointer over `CURRENT`. Readers resolve the pointer first, so
@@ -90,10 +90,9 @@ object Retrieval {
   // superseded generation gets a deletion grace of one publish cycle
   // (a reader that resolved the pointer just before the flip may still
   // be opening its files — at cluster scale that window is a whole
-  // probe job); [[expirePostingsGenerations]] is the explicit
-  // drain-time end of the grace. Crashed partial builds are
-  // unreferenced (max+1 numbering never reuses a name) and GC'd by the
-  // next successful publish.
+  // probe job), and the publish after that reclaims it. Crashed partial
+  // builds are unreferenced (max+1 numbering never reuses a name) and
+  // GC'd by the next successful publish.
 
   private val MetaName = "_graft_postings_nbuckets"
   // generation lifecycle lives in the shared GenStore (one home for the
@@ -117,29 +116,18 @@ object Retrieval {
   def postingsGenDir(s: SparkSession, dir: String): String =
     gens.genDir(s, dir)
 
-  /** Drop every generation except the CURRENT one — the explicit end of
-    * the one-cycle grace [[writePostings]]'s publish grants the
-    * generation it supersedes. Call when in-flight probes of the old
-    * generation have provably drained. Returns generations deleted. */
-  def expirePostingsGenerations(s: SparkSession, dir: String): Int =
-    gens.expire(s, dir)
-
   /** Persist the postings as a term-hash-bucketed parquet artifact: the
     * production home of phrase search at 100 TB — built once, probed by
     * every query, and a probe READS ONLY its phrase terms' buckets
     * (partition pruning on `bucket=` dirs; the IVF-index discipline
     * applied to text). Layout inside the generation dir:
-    * `base/bucket=N/` for the build, `appends/<tag>/data/bucket=N/`
-    * (+ optional `deletes/`) per committed [[appendPostings]] batch.
-    * `repartitionByRange(bucket, term)` keeps each layout at
+    * `base/bucket=N/`. `repartitionByRange(bucket, term)` keeps it at
     * ~nBuckets + tasks part-files instead of nBuckets × tasks (the q12b
     * index-layout lesson). The bucket count travels WITH the generation
     * (meta sidecar written last = completeness manifest) — a probe can
     * never silently prune with the wrong modulus. A rebuild writes a
     * fresh generation and atomically flips the pointer — concurrent
-    * readers keep the old one for a grace cycle — which also makes
-    * rebuild the compaction story: it resets committed appends and
-    * deletes, while the append count stays a bounded driver listing. */
+    * readers keep the old one for a grace cycle. */
   def writePostings(docs: DataFrame, dir: String, nBuckets: Int = 64): Unit = {
     require(nBuckets > 0 && nBuckets <= (1 << 20),
       s"Retrieval: bad nBuckets $nBuckets")
@@ -174,61 +162,6 @@ object Retrieval {
     finally in.close()
   }
 
-  /** Exactly-once append of `docs`' postings — plus an optional
-    * tombstone set — to the CURRENT generation, published once to
-    * `appends/<tag>/` ([[graft.sources.Ledger.publishOnce]]) — the tag
-    * dir's existence IS the committed marker, so a replayed attempt
-    * (driver retry, workflow re-run) skips instead of double-counting
-    * (returns false).
-    *
-    * Batch contract: one posting set per doc_id — a batch that carries
-    * the same doc twice duplicates its posting rows, and duplicated
-    * (doc, pos) pairs break the anchor law (`count(*) = k` sees 2k
-    * slots), so a present phrase silently stops matching. The
-    * streaming entry (StreamPostings.maintainBatch) absorbs exact-row
-    * redeliveries and refuses same-id conflicts; batch callers own the
-    * same invariant.
-    *
-    * `deletes` (a `doc_id` column, delta-sized) tombstones those docs'
-    * rows in all EARLIER layers — the base build and previously
-    * committed appends — while rows appended by THIS batch survive,
-    * which is exactly upsert when the batch re-posts the same ids (see
-    * [[upsertPostings]]). Tombstones are logical until the next rebuild
-    * compacts them away. Layer order is TAG sort order, so tags must
-    * sort in batch order — zero-padded batch ids, the streaming
-    * convention (a lexicographically-earlier tag committed later would
-    * invert who shadows whom). Appends are generation-scoped: one that
-    * resolves the pointer just before a rebuild flips it lands in the
-    * superseded generation, which the rebuild (by definition a fresh
-    * full corpus) already accounts for. */
-  def appendPostings(docs: DataFrame, dir: String, tag: String,
-      deletes: Option[DataFrame] = None): Boolean = {
-    require(tag.nonEmpty && tag.matches("[A-Za-z0-9_\\-]+"),
-      s"Retrieval: append tag must be [A-Za-z0-9_-]+, got `$tag`")
-    val s = docs.sparkSession
-    val genDir = postingsGenDir(s, dir)
-    val nBuckets = readNBuckets(s, genDir)
-    Ledger.publishOnce(hfsOf(s, dir), new Path(genDir, s"appends/$tag")) { tmp =>
-      bucketedPostings(docs, nBuckets)
-        .write.partitionBy("bucket").parquet(s"$tmp/data")
-      deletes.foreach { d =>
-        // written only when non-empty: the dir's existence is the probe's
-        // has-tombstones signal, so delete-free appends cost no join
-        val slim = d.select(col("doc_id").cast("long").as("doc_id"))
-        if (!slim.isEmpty)
-          slim.repartition(1).write.parquet(s"$tmp/deletes")
-      }
-    }
-  }
-
-  /** Re-post `docs` into a written artifact: appends their postings AND
-    * tombstones the same doc_ids in every earlier layer, so the new text
-    * wins — the safe entry for "this doc changed" (closing the round-12d
-    * re-post-duplicates caveat). One exactly-once append publish. */
-  def upsertPostings(docs: DataFrame, dir: String, tag: String): Boolean =
-    appendPostings(docs, dir, tag,
-      deletes = Some(docs.select(col("doc_id")).distinct()))
-
   private val postingSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("pos", LongType),
     StructField("term", StringType), StructField("bucket", LongType)))
@@ -258,18 +191,19 @@ object Retrieval {
     // bounded collect: ≤ k bucket ids — becomes the partition filter
     val buckets = slots.select(col("bucket")).distinct()
       .as[Long].collect().toSeq
-    val live = storedLive(spark, genDir, Some(buckets))
+    val live = storedLive(spark, genDir, buckets)
     anchorAgg(live.join(broadcast(slots), Seq("term", "bucket")), k)
   }
 
   /** The LIVE posting rows of the CURRENT generation — base + every
     * committed append, the appends' tombstones applied (a delete in
     * append layer j shadows the doc's rows in layers < j; layer = tag
-    * sort order). `buckets`, when given, prunes every layer's scan to
-    * those `bucket=` partitions. The shared resolution of the probe
-    * path and the compaction. */
+    * sort order). Every layer's scan is pruned to the `buckets`
+    * partitions. No writer in this library produces
+    * `appends/` any more; a generation written by an earlier release
+    * may still carry committed appends and their tombstones. */
   private def storedLive(spark: SparkSession, genDir: String,
-      buckets: Option[Seq[Long]]): DataFrame = {
+      buckets: Seq[Long]): DataFrame = {
     val hfs = hfsOf(spark, genDir)
     val appendsRoot = new Path(genDir, "appends")
     // tag-sorted commit order defines tombstone layering; the listing is
@@ -285,11 +219,11 @@ object Retrieval {
       (s"$genDir/base", 0L) +:
         appendDirs.zipWithIndex.map { case (p, i) =>
           (s"$p/data", i + 1L) }
-    var rows = layers.map { case (p, l) =>
+    val rows = layers.map { case (p, l) =>
       spark.read.schema(postingSchema).parquet(p)
         .withColumn("layer", lit(l)) }
       .reduce(_ unionByName _)
-    buckets.foreach(b => rows = rows.filter(col("bucket").isin(b: _*)))
+      .filter(col("bucket").isin(buckets: _*))
     val delDirs = appendDirs.zipWithIndex.collect {
       case (p, i) if hfs.exists(new Path(p, "deletes")) =>
         (s"$p/deletes", i + 1L) }
@@ -309,41 +243,6 @@ object Retrieval {
           .filter(col("dmax").isNull || col("layer") >= col("dmax"))
       }
     live.select(col("doc_id"), col("pos"), col("term"), col("bucket"))
-  }
-
-  /** Committed append tags of the CURRENT generation — the overlay
-    * chain length a maintenance policy bounds (every stored probe scans
-    * base + ALL committed appends plus their tombstone sets, so read
-    * amplification grows linearly with this number until a compaction). */
-  def chainLength(s: SparkSession, dir: String): Int = {
-    val hfs = hfsOf(s, dir)
-    val appends = new Path(postingsGenDir(s, dir), "appends")
-    if (!hfs.exists(appends)) 0
-    else hfs.listStatus(appends).count(committedLayer)
-  }
-
-  /** Compact the artifact: write the next generation's base from the
-    * RESOLVED live rows — appended history and tombstones are gone, the
-    * chain length resets to zero. One resolve scan + one bucketed write
-    * (the rows already carry their bucket, so no re-tokenization and no
-    * re-hash); publish is the atomic pointer flip with the one-cycle
-    * reader grace. A replayed batch whose tag died with the compacted
-    * generation re-UPSERTS — idempotent on content: its tombstones
-    * shadow the folded copies of exactly the rows it re-appends, so the
-    * resolved corpus is unchanged (the contract
-    * [[graft.streaming.StreamPostings]] relies on). */
-  def compactPostings(s: SparkSession, dir: String): Unit = {
-    val genDir = postingsGenDir(s, dir)
-    val nBuckets = readNBuckets(s, genDir)
-    val hfs = hfsOf(s, dir)
-    val genName = gens.nextGenName(s, dir)
-    val newDir = s"$dir/$genName"
-    storedLive(s, genDir, None)
-      .repartitionByRange(col("bucket"), col("term"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$newDir/base")
-    val out = hfs.create(new Path(newDir, MetaName), true)
-    try out.write(nBuckets.toString.getBytes("UTF-8")) finally out.close()
-    gens.publish(s, dir, genName)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

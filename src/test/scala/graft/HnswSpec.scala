@@ -35,6 +35,14 @@ class HnswSpec extends SparkSpecBase {
       .select(col("qid"), col("vec_id"), col("dot"), col("rank"))
   }
 
+  /** Plant a deletion ledger in the CURRENT generation: the shape a
+    * store maintained by an earlier release carries, which probes still
+    * honour (dead nodes are walked, never emitted). */
+  private def plantLedger(dir: String, ids: DataFrame): Unit =
+    ids.select(col("vec_id").cast("long").as("vec_id"))
+      .write.mode("overwrite")
+      .parquet(s"${Hnsw.indexGenDir(spark, dir)}/tombstones")
+
   private def asRows(df: DataFrame): Set[(Long, Long, Double, Int)] =
     df.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
@@ -116,69 +124,12 @@ class HnswSpec extends SparkSpecBase {
     assert(run() == first, "second invocation diverged (memoized build)")
   }
 
-  test("append ≡ full rebuild, row-for-row; search serves the grown corpus") {
-    val dAppend = tmp(); val dFull = tmp()
-    val base = emb.filter(col("vec_id") < 60)
-    val delta = emb.filter(col("vec_id") >= 60 && col("vec_id") < 100)
-    Hnsw.writeIndex(base, dAppend, nShards = 4, m = 8, efConstruction = 32)
-    Hnsw.appendToHnswIndex(spark, dAppend, delta)
-    Hnsw.writeIndex(emb.filter(col("vec_id") < 100), dFull,
-      nShards = 4, m = 8, efConstruction = 32)
-    def rows(d: String) = spark.read
-      .parquet(s"${Hnsw.indexGenDir(spark, d)}/nodes")
-      .select(col("shard").cast("long"), col("node"), col("vec"),
-        col("levels"))
-      .collect().map(_.toString).sorted.toSeq
-    assert(rows(dAppend) == rows(dFull),
-      "append diverged from a from-scratch rebuild (the ascending-id " +
-        "insertion identity broke)")
-    // the appended index answers for NEW ids too (exhaustive ≡ brute)
-    val qids = Seq(0L, 61L, 99L)
-    val queries = emb.filter(col("vec_id").isin(qids: _*))
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val got = Hnsw.searchStored(spark, dAppend, queries, k = 5,
-      ef = Int.MaxValue, excludeSelf = true)
-    val corpus100 = emb.filter(col("vec_id") < 100)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("dot").desc, col("vec_id"))
-    val truth = corpus100.crossJoin(broadcast(
-        emb.filter(col("vec_id").isin(qids: _*))
-          .select(col("vec_id").as("qid"), col("embedding").as("qv"))))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("dot", VectorFns.dotExact(col("qv"), col("embedding")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("qid"), col("vec_id"), col("dot"), col("rank"))
-    assert(asRows(got) == asRows(truth))
-  }
-
-  test("append refuses out-of-order and tombstoned ids, loudly") {
-    val dir = tmp()
-    Hnsw.writeIndex(emb.filter(col("vec_id") < 100), dir,
-      nShards = 4, m = 8, efConstruction = 32)
-    // id 42 already lives in its shard → cannot append mid-sequence
-    val e1 = intercept[Exception](Hnsw.appendToHnswIndex(spark, dir,
-      emb.filter(col("vec_id") === 42)))
-    assert(messages(e1).exists(m => m.contains("does not exceed") &&
-      m.contains("writeIndex")), e1.toString)
-    // a tombstoned id refuses with the compact-first fix by name
-    Hnsw.deleteFromHnswIndex(spark, dir,
-      emb.filter(col("vec_id") === 7).select(col("vec_id")),
-      rewriteThreshold = 1.0)
-    val e2 = intercept[Exception](Hnsw.appendToHnswIndex(spark, dir,
-      emb.filter(col("vec_id") === 7)))
-    assert(messages(e2).exists(_.contains("compactHnswIndex")), e2.toString)
-  }
-
   test("deleted ids never surface; exhaustive mode stays exact over live rows") {
     val dir = tmp()
     Hnsw.writeIndex(emb.filter(col("vec_id") < 100), dir,
       nShards = 4, m = 8, efConstruction = 32)
     val deadIds = Seq(3L, 10L, 55L)
-    val rewrote = Hnsw.deleteFromHnswIndex(spark, dir,
-      emb.filter(col("vec_id").isin(deadIds: _*)).select(col("vec_id")),
-      rewriteThreshold = 1.0)
-    assert(!rewrote, "3/100 dead must not trip a 100% threshold")
+    plantLedger(dir, deadIds.toDF("vec_id"))
     val qids = Seq(0L, 1L, 2L)
     val queries = emb.filter(col("vec_id").isin(qids: _*))
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -200,188 +151,33 @@ class HnswSpec extends SparkSpecBase {
       "tombstone-filtered exhaustive walk diverged from brute over live")
   }
 
-  test("threshold delete compacts: ledger dropped, store ≡ rebuild over live") {
-    val dir = tmp(); val dLive = tmp()
-    Hnsw.writeIndex(emb.filter(col("vec_id") < 100), dir,
-      nShards = 4, m = 8, efConstruction = 32)
-    val deadIds = (0L until 30L).toSeq
-    val rewrote = Hnsw.deleteFromHnswIndex(spark, dir,
-      emb.filter(col("vec_id").isin(deadIds: _*)).select(col("vec_id")),
-      rewriteThreshold = 0.2)
-    assert(rewrote, "30/100 dead must trip a 20% threshold")
-    val genDir = Hnsw.indexGenDir(spark, dir)
-    assert(!new java.io.File(s"$genDir/tombstones").exists(),
-      "compaction must not carry the ledger forward")
-    Hnsw.writeIndex(
-      emb.filter(col("vec_id") >= 30 && col("vec_id") < 100), dLive,
-      nShards = 4, m = 8, efConstruction = 32)
-    def rows(d: String) = spark.read
-      .parquet(s"${Hnsw.indexGenDir(spark, d)}/nodes")
-      .select(col("shard").cast("long"), col("node"), col("vec"),
-        col("levels"))
-      .collect().map(_.toString).sorted.toSeq
-    assert(rows(dir) == rows(dLive),
-      "compacted store diverged from a fresh build over the live rows")
-  }
-
-  test("deleting every row refuses BEFORE the ledger; index keeps serving") {
-    // the round-15 ADVICE medium: the old order wrote the ledger first
-    // and let compactHnswIndex throw after — leaving a published index
-    // whose probes silently returned zero rows
+  test("a hand-torn all-dead store refuses at probe") {
+    // a ledger covering every physical row (written outside the API)
+    // must refuse loudly, never serve zero rows
     val dir = tmp()
     Hnsw.writeIndex(emb.limit(20), dir, nShards = 2, m = 4,
       efConstruction = 8)
-    val e = intercept[IllegalStateException](
-      Hnsw.deleteFromHnswIndex(spark, dir,
-        emb.limit(20).select(col("vec_id")), rewriteThreshold = 0.1))
-    assert(e.getMessage.contains("every row"), e.getMessage)
-    // nothing was written: no ledger, probes still serve the full store
-    val genDir = Hnsw.indexGenDir(spark, dir)
-    assert(!new java.io.File(s"$genDir/tombstones").exists(),
-      "the refused delete leaked a ledger")
+    plantLedger(dir, spark.read
+      .parquet(s"${Hnsw.indexGenDir(spark, dir)}/nodes")
+      .select(col("node").as("vec_id")))
     val q1 = emb.filter(col("vec_id") === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    assert(Hnsw.searchStored(spark, dir, q1, k = 3, ef = 8).count() == 3)
-  }
-
-  test("a hand-torn all-dead store refuses at compact AND at probe") {
-    // defense in depth behind the delete-time guard: a ledger covering
-    // every physical row (written outside the API) must refuse loudly
-    // in both maintenance and serving paths, never serve zero rows
-    val dir = tmp()
-    Hnsw.writeIndex(emb.limit(20), dir, nShards = 2, m = 4,
-      efConstruction = 8)
-    val genDir = Hnsw.indexGenDir(spark, dir)
-    spark.read.parquet(s"$genDir/nodes")
-      .select(col("node").as("vec_id"))
-      .write.mode("overwrite").parquet(s"$genDir/tombstones")
     val e = intercept[IllegalStateException](
-      Hnsw.compactHnswIndex(spark, dir))
-    assert(e.getMessage.contains("empty store"), e.getMessage)
-    val q1 = emb.filter(col("vec_id") === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val e2 = intercept[IllegalStateException](
       Hnsw.searchStored(spark, dir, q1, k = 3, ef = 8))
-    assert(e2.getMessage.contains("tombstoned"), e2.getMessage)
+    assert(e.getMessage.contains("tombstoned"), e.getMessage)
   }
 
-  test("deleting a never-indexed id is a no-op; the id appends later") {
-    // round-15 ADVICE: a typo'd delete of an absent id used to enter
-    // the ledger and poison that id's future append until a full
-    // compaction — the ledger now holds only physically-present ids
-    val dir = tmp()
-    Hnsw.writeIndex(emb.filter(col("vec_id") < 50), dir,
-      nShards = 2, m = 4, efConstruction = 8)
-    val rewrote = Hnsw.deleteFromHnswIndex(spark, dir,
-      Seq(9999L).toDF("vec_id"), rewriteThreshold = 0.01)
-    assert(!rewrote)
-    val genDir = Hnsw.indexGenDir(spark, dir)
-    assert(!new java.io.File(s"$genDir/tombstones").exists(),
-      "an absent id entered the ledger")
-    // the same id now appends cleanly (it exceeds every shard max)
-    Hnsw.appendToHnswIndex(spark, dir,
-      emb.filter(col("vec_id") === 7)
-        .select(lit(9999L).as("vec_id"), col("embedding")))
-    val q1 = emb.filter(col("vec_id") === 7)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val got = Hnsw.searchStored(spark, dir, q1, k = 51,
-      ef = Int.MaxValue)
-    assert(got.collect().exists(_.getLong(1) == 9999L),
-      "the re-appended id never surfaced")
-  }
-
-  test("delete's threshold decision is metadata-only (meta count, not a scan)") {
-    // build 8 shards, then REMOVE 7 of them: a full-corpus count()
-    // would see ~1/8 of the rows and trip the threshold; the meta
-    // sidecar's exact physical count must keep the decision correct.
-    // The presence check only reads the shards the batch hashes into,
-    // so the missing directories are never touched either.
-    val dir = tmp()
-    val vecs = emb.limit(500)
-    Hnsw.writeIndex(vecs, dir, nShards = 8, m = 4, efConstruction = 8)
-    val genDir = Hnsw.indexGenDir(spark, dir)
-    val keep = 3L // shard to keep; delete ids hashing to it
-    val ids = vecs.select(col("vec_id").cast("long").as("vec_id"))
-      .filter(pmod(xxhash64(col("vec_id")), lit(8L)) === lit(keep))
-      .limit(20)
-    val hfs = new org.apache.hadoop.fs.Path(genDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (0L until 8L).filter(_ != keep).foreach { sh =>
-      hfs.delete(new org.apache.hadoop.fs.Path(
-        s"$genDir/nodes/shard=$sh"), true)
-    }
-    // 20 of 500 = 4% < 10% threshold → metadata says NO rewrite; a
-    // full count of the crippled store (~62 rows) would say 32% → yes
-    val rewrote = Hnsw.deleteFromHnswIndex(spark, dir, ids,
-      rewriteThreshold = 0.10)
-    assert(!rewrote,
-      "threshold decision scanned the store instead of the meta count")
-    assert(new java.io.File(s"$genDir/tombstones").exists(),
-      "the delete never reached the ledger")
-  }
-
-  test("append hard-links untouched shards; bytes survive GC of the old gen") {
-    // round-15 verdict #2: copyForward used to byte-copy every
-    // untouched shard through the driver — O(index bytes) per append.
-    // Now untouched shards hard-link (link(2)): same inode, zero bytes
-    val dir = tmp()
-    Hnsw.writeIndex(emb.filter(col("vec_id") < 100), dir,
-      nShards = 4, m = 4, efConstruction = 8)
-    val gen0 = Hnsw.indexGenDir(spark, dir)
-    // one fresh id → exactly one affected shard
-    val newId = 10007L
-    val touched = spark.range(1)
-      .select(pmod(xxhash64(lit(newId)), lit(4L)).as("s"))
-      .collect().head.getLong(0)
-    Hnsw.appendToHnswIndex(spark, dir,
-      emb.filter(col("vec_id") === 0)
-        .select(lit(newId).as("vec_id"), col("embedding")))
-    val gen1 = Hnsw.indexGenDir(spark, dir)
-    assert(gen1 != gen0)
-    def inodes(genDir: String, shard: Long): Set[Long] = {
-      val d = new java.io.File(s"$genDir/nodes/shard=$shard")
-      d.listFiles().filter(_.getName.endsWith(".parquet")).map { f =>
-        java.nio.file.Files.getAttribute(f.toPath, "unix:ino")
-          .asInstanceOf[Long]
-      }.toSet
-    }
-    val untouchedShard = (0L until 4L).find(_ != touched).get
-    assert(inodes(gen1, untouchedShard) == inodes(gen0, untouchedShard),
-      s"untouched shard $untouchedShard was copied, not hard-linked")
-    // the linked bytes survive the old generation's deletion
-    Hnsw.expireHnswGenerations(spark, dir)
-    val q1 = emb.filter(col("vec_id") === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    assert(Hnsw.searchStored(spark, dir, q1, k = 3, ef = 8).count() == 3,
-      "hard-linked shards died with the expired generation")
-  }
-
-  test("legacy ghost ledgers never false-fire the all-dead guards") {
+  test("legacy ghost ledgers never false-fire the probe's all-dead guard") {
     // a pre-round-16 ledger legally holds never-indexed ids ("unknown
     // ids tombstone harmlessly"); if the count alone decided, 21
-    // ghosts over a 20-row store would refuse every probe and every
-    // delete on a HEALTHY index — the first-live-row confirm must let
-    // both proceed
+    // ghosts over a 20-row store would refuse every probe of a HEALTHY
+    // index — the first-live-row confirm must let it proceed
     val dir = tmp()
     Hnsw.writeIndex(emb.limit(20), dir, nShards = 2, m = 4,
       efConstruction = 8)
-    val genDir = Hnsw.indexGenDir(spark, dir)
-    (20000L until 20021L).toSeq.toDF("vec_id") // 21 ghosts, 20 rows
-      .write.mode("overwrite").parquet(s"$genDir/tombstones")
+    plantLedger(dir, (20000L until 20021L).toSeq.toDF("vec_id")) // 21 ghosts
     val q1 = emb.filter(col("vec_id") === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    // probes still serve the fully-live store
-    assert(Hnsw.searchStored(spark, dir, q1, k = 3, ef = 8).count() == 3)
-    // a small real delete proceeds (ghosts inflate nDead past total;
-    // the confirm sees 19 live rows) — over the threshold it compacts,
-    // which also purges the ghost ledger
-    val deadId = emb.limit(20).orderBy(col("vec_id").desc)
-      .select(col("vec_id")).limit(1)
-    val rewrote = Hnsw.deleteFromHnswIndex(spark, dir, deadId,
-      rewriteThreshold = 0.2)
-    assert(rewrote, "22/20 ledger entries must trip the 20% threshold")
-    val gen2 = Hnsw.indexGenDir(spark, dir)
-    assert(!new java.io.File(s"$gen2/tombstones").exists())
     assert(Hnsw.searchStored(spark, dir, q1, k = 3, ef = 8).count() == 3)
   }
 
@@ -393,16 +189,16 @@ class HnswSpec extends SparkSpecBase {
     val e = intercept[IllegalStateException](
       Hnsw.requireFresh(spark, dir, grown))
     assert(e.getMessage.contains("STALE") &&
-      e.getMessage.contains("appendToHnswIndex"), e.getMessage)
+      e.getMessage.contains("writeIndex"), e.getMessage)
     val q1 = emb.filter(col("vec_id") === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val e2 = intercept[IllegalStateException](
       Hnsw.searchStored(spark, dir, q1, k = 3, ef = 8,
         verifyCorpus = Some(grown)))
     assert(e2.getMessage.contains("STALE"))
-    // append the delta → the same guard passes and the probe serves
-    Hnsw.appendToHnswIndex(spark, dir,
-      emb.filter(col("vec_id") >= 50 && col("vec_id") < 80))
+    // rebuild over the grown corpus → the same guard passes and the
+    // probe serves
+    Hnsw.writeIndex(grown, dir, nShards = 2, m = 8, efConstruction = 32)
     val served = Hnsw.searchStored(spark, dir, q1, k = 3, ef = 8,
       verifyCorpus = Some(grown))
     assert(served.count() == 3)

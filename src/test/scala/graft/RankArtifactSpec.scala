@@ -9,7 +9,10 @@ import graft.operators.{GraphArtifact, GraphOps, RankArtifact}
   * EXACT incremental refresh (≡ from-scratch recompute, bit-for-bit)
   * across adds / deletes / new nodes / node removal / resurrection /
   * chained deltas, the rebuild and noop gates, and per-iteration
-  * parity against a driver-computed reference recurrence. */
+  * parity against a driver-computed reference recurrence. Also the
+  * laws of the edge artifact's appends that q141 rides on: resolution
+  * ≡ a reference state machine, the same-batch add/delete refusal, and
+  * the replayed-tag skip. */
 class RankArtifactSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -209,36 +212,6 @@ class RankArtifactSpec extends SparkSpecBase {
         GraphArtifact.readAdjacency(spark, s"$dir/e"), iters = 3)))
   }
 
-  test("compactRanks with a lineage restamp pairs with compactEdges exactly") {
-    val dir = tmp()
-    val base = randomEdges(40, 90)
-    GraphArtifact.writeEdges(toDF(base), s"$dir/e")
-    RankArtifact.writeRanks(spark, s"$dir/e", s"$dir/r", iters = 3)
-    assert(GraphArtifact.appendEdges(
-      toDF(Seq((300L, 301L), (301L, base.head._1))), s"$dir/e", "b000001",
-      deletes = Some(toDF(Seq(base.last)))))
-    assert(RankArtifact.refreshRanks(spark, s"$dir/e", s"$dir/r") == "delta")
-    val before = ranksOf(RankArtifact.readRanks(spark, s"$dir/r"))
-
-    // the joint step: compact the edges (same resolved set, fresh
-    // generation, no tags) and restamp the folded ranks onto it
-    GraphArtifact.compactEdges(spark, s"$dir/e")
-    RankArtifact.compactRanks(spark, s"$dir/r",
-      Some(GraphArtifact.coverage(spark, s"$dir/e")))
-    assert(GraphArtifact.chainLength(spark, s"$dir/e") == 0)
-    assert(RankArtifact.chainLength(spark, s"$dir/r") == 0)
-    assert(ranksOf(RankArtifact.readRanks(spark, s"$dir/r")) == before)
-    // the restamped lineage anchors the chain: no rebuild, a plain noop,
-    // and the next delta refreshes against the compacted pair
-    assert(RankArtifact.refreshRanks(spark, s"$dir/e", s"$dir/r") == "noop")
-    assert(GraphArtifact.appendEdges(
-      toDF(Seq((302L, 303L), (303L, 300L))), s"$dir/e", "b000001"))
-    assert(RankArtifact.refreshRanks(spark, s"$dir/e", s"$dir/r") == "delta")
-    assert(ranksOf(RankArtifact.readRanks(spark, s"$dir/r")) ==
-      ranksOf(GraphOps.pagerank(
-        GraphArtifact.readAdjacency(spark, s"$dir/e"), iters = 3)))
-  }
-
   test("q141 is invocation-idempotent within a session (memoized build)") {
     // the gate memoizes its store BUILD per (session, dataset) and each
     // invocation appends the same delta under a fresh tag + folds — the
@@ -258,5 +231,74 @@ class RankArtifactSpec extends SparkSpecBase {
       RankArtifact.readRanks(spark, tmp() + "/nothing")
     }
     assert(e.getMessage.contains("writeRanks"), e.getMessage)
+  }
+
+  /** Reference for the edge artifact: sequential set semantics over
+    * (src, dst, op) batches. */
+  private def refApply(state: Set[(Long, Long)],
+      batch: Seq[(Long, Long, String)]): Set[(Long, Long)] = {
+    val norm = batch.flatMap { case (s, d, op) =>
+      if (s == d) None
+      else Some((math.min(s, d), math.max(s, d), op))
+    }.distinct
+    val adds = norm.collect { case (a, b, "add") => (a, b) }.toSet
+    val dels = norm.collect { case (a, b, "del") => (a, b) }.toSet
+    state -- dels ++ adds
+  }
+
+  private def edgeSet(dir: String): Set[(Long, Long)] =
+    GraphArtifact.readEdges(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** An empty edge artifact: the base every test below appends onto. */
+  private def emptyEdges(): String = {
+    val dir = tmp()
+    GraphArtifact.writeEdges(toDF(Nil), dir, nBuckets = 8)
+    dir
+  }
+
+  /** One batch of (src, dst, op ∈ add|del) rows as one append. */
+  private def appendOps(dir: String, tag: String,
+      ops: Seq[(Long, Long, String)]): Boolean =
+    GraphArtifact.appendEdges(
+      toDF(ops.collect { case (s, d, "add") => (s, d) }), dir, tag,
+      deletes = Some(toDF(ops.collect { case (s, d, "del") => (s, d) })))
+
+  test("edge artifact: appends ≡ reference state machine after every batch") {
+    val dir = emptyEdges()
+    val batches = Seq(
+      Seq((1L, 2L, "add"), (2L, 3L, "add"), (3L, 1L, "add"),
+        (2L, 1L, "add"), (4L, 4L, "add")), // dup orientation + self-loop
+      Seq((1L, 2L, "del"), (4L, 5L, "add")),
+      Seq((2L, 1L, "add"), (4L, 5L, "del")), // re-add resurrects
+      Seq((9L, 8L, "add")))
+    var state = Set.empty[(Long, Long)]
+    batches.zipWithIndex.foreach { case (b, i) =>
+      assert(appendOps(dir, f"b$i%06d", b), s"batch $i should publish")
+      state = refApply(state, b)
+      assert(edgeSet(dir) == state, s"state diverged after batch $i")
+    }
+  }
+
+  test("edge artifact: same edge added and deleted in one batch fails loudly, nothing publishes") {
+    val dir = emptyEdges()
+    assert(appendOps(dir, "b000000", Seq((1L, 2L, "add"))))
+    val e = intercept[IllegalStateException] {
+      appendOps(dir, "b000001", Seq((3L, 4L, "add"), (4L, 3L, "del")))
+    }
+    assert(e.getMessage.contains("no deterministic winner"))
+    assert(edgeSet(dir) == Set((1L, 2L)), "failed batch must not publish")
+    // nothing was committed under the refused tag, so it stays usable
+    assert(appendOps(dir, "b000001", Seq((3L, 4L, "add"))))
+    assert(edgeSet(dir) == Set((1L, 2L), (3L, 4L)))
+  }
+
+  test("edge artifact: a replayed tag skips without corrupting state") {
+    val dir = emptyEdges()
+    assert(appendOps(dir, "b000000", Seq((1L, 2L, "add"))))
+    assert(appendOps(dir, "b000001", Seq((2L, 3L, "add"))))
+    // replay tag b000001 with DIFFERENT content: the committed tag wins
+    assert(!appendOps(dir, "b000001", Seq((7L, 8L, "add"))))
+    assert(edgeSet(dir) == Set((1L, 2L), (2L, 3L)))
   }
 }

@@ -41,6 +41,21 @@ class RetrievalSpec extends SparkSpecBase {
       .agg(count(lit(1)).as("n_hits"), min(col("a0")).as("first_pos"))
   }
 
+  /** Plant a committed append layer `appends/<tag>/` in the CURRENT
+    * generation of a 16-bucket artifact: `docs`' postings plus an
+    * optional tombstone set (a doc re-posted in a layer is also in its
+    * deletes). The shape a generation maintained by an earlier release
+    * carries, which probes still resolve latest-layer-wins. */
+  private def plantLayer(dir: String, tag: String,
+      docs: Seq[(Long, String)], deletes: Seq[Long]): Unit = {
+    val layer = s"${Retrieval.postingsGenDir(spark, dir)}/appends/$tag"
+    Retrieval.postings(docs.toDF("doc_id", "text"))
+      .withColumn("bucket", pmod(xxhash64(col("term")), lit(16L)))
+      .write.partitionBy("bucket").parquet(s"$layer/data")
+    if (deletes.nonEmpty)
+      deletes.toDF("doc_id").write.parquet(s"$layer/deletes")
+  }
+
   private def asMap(df: DataFrame): Map[Long, (Long, Long)] =
     df.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
 
@@ -109,63 +124,6 @@ class RetrievalSpec extends SparkSpecBase {
     }
   }
 
-  test("append lifecycle: exactly-once publish, replay skip, torn debris") {
-    val dir = s"/tmp/graft_test_postings_app_${System.nanoTime()}"
-    val hp = new org.apache.hadoop.fs.Path(dir)
-    val hfs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val batch1 = docs.filter(col("doc_id") <= 4L)
-      val batch2 = docs.filter(col("doc_id") > 4L)
-      Retrieval.writePostings(batch1, dir, nBuckets = 16)
-      assert(Retrieval.appendPostings(batch2, dir, "b2"),
-        "first append must publish")
-      // probe over base+append ≡ in-memory search over the full corpus
-      for (phrase <- Seq(Seq("a", "b", "a"), Seq("b", "a")))
-        assert(asMap(Retrieval.phraseSearchStored(spark, dir, phrase))
-          == asMap(Retrieval.phraseSearch(docs, phrase)),
-          s"append probe diverged for $phrase")
-      // EVERY scan of the unioned artifact (base + append) must carry
-      // the bucket partition filter — pruning that survives only on one
-      // side of the union would re-grow to a full scan as appends land
-      val up = Retrieval.phraseSearchStored(spark, dir, Seq("a", "b"))
-        .queryExecution.executedPlan.toString
-      val scans = "PartitionFilters: \\[[^\\]]*\\]".r.findAllIn(up).toList
-      assert(scans.length >= 2, s"expected >= 2 scans after an append:\n$up")
-      assert(scans.forall(_.contains("bucket")),
-        s"a union side lost its bucket partition filter:\n$up")
-      // replayed tag: skip, and counts must NOT double
-      assert(!Retrieval.appendPostings(batch2, dir, "b2"),
-        "replayed append must skip")
-      assert(asMap(Retrieval.phraseSearchStored(spark, dir, Seq("a", "b")))
-        == asMap(Retrieval.phraseSearch(docs, Seq("a", "b"))),
-        "replayed append double-counted")
-      // torn debris: a junk tmp dir from a crashed attempt is cleared
-      // (staging is the ledger's temp sibling of `appends/<tag>`)
-      val b3 = new org.apache.hadoop.fs.Path(
-        Retrieval.postingsGenDir(spark, dir), "appends/b3")
-      val tmp = graft.sources.Ledger.tmpOf(b3)
-      hfs.mkdirs(tmp)
-      val junk = hfs.create(new org.apache.hadoop.fs.Path(tmp, "junk"), true)
-      try junk.write("x".getBytes) finally junk.close()
-      assert(Retrieval.appendPostings(
-        docs.limit(0), dir, "b3"), "empty append over debris must publish")
-      assert(hfs.exists(b3) &&
-        !hfs.exists(new org.apache.hadoop.fs.Path(b3, "junk")),
-        "the torn attempt's debris was published")
-      assert(asMap(Retrieval.phraseSearchStored(spark, dir, Seq("a", "b")))
-        == asMap(Retrieval.phraseSearch(docs, Seq("a", "b"))),
-        "empty append changed results")
-      // a full rebuild clears committed appends (no haunting)
-      Retrieval.writePostings(batch1, dir, nBuckets = 16)
-      assert(asMap(Retrieval.phraseSearchStored(spark, dir, Seq("a", "b")))
-        == asMap(Retrieval.phraseSearch(batch1, Seq("a", "b"))),
-        "rebuild served stale append rows")
-      intercept[IllegalArgumentException] { // tag hygiene
-        Retrieval.appendPostings(batch2, dir, "bad tag!")
-      }
-    } finally hfs.delete(hp, true)
-  }
-
   test("rebuild under a concurrent reader: generations, grace, expire") {
     val dir = s"/tmp/graft_test_postings_gen_${System.nanoTime()}"
     val hp = new org.apache.hadoop.fs.Path(dir)
@@ -196,9 +154,6 @@ class RetrievalSpec extends SparkSpecBase {
       Retrieval.writePostings(batch1, dir, nBuckets = 16)
       assert(gens() == Set("gen=1", "gen=2"),
         "publish failed to GC the out-of-grace generation")
-      // explicit drain-time end of the grace
-      assert(Retrieval.expirePostingsGenerations(spark, dir) == 1)
-      assert(gens() == Set("gen=2"))
       assert(asMap(Retrieval.phraseSearchStored(spark, dir, Seq("a", "b")))
         == asMap(Retrieval.phraseSearch(batch1, Seq("a", "b"))))
     } finally hfs.delete(hp, true)
@@ -212,8 +167,7 @@ class RetrievalSpec extends SparkSpecBase {
       val base = Seq((1L, "a b a"), (2L, "c c"), (3L, "a b")).toDF("doc_id", "text")
       Retrieval.writePostings(base, dir, nBuckets = 16)
       // upsert doc 1 with new text: old rows shadowed, new rows live
-      val doc1v2 = Seq((1L, "z b z")).toDF("doc_id", "text")
-      assert(Retrieval.upsertPostings(doc1v2, dir, "t1"))
+      plantLayer(dir, "t1", Seq((1L, "z b z")), deletes = Seq(1L))
       assert(asMap(Retrieval.phraseSearchStored(spark, dir, Seq("a", "b", "a")))
         .isEmpty, "upsert left the doc's OLD postings visible")
       assert(asMap(Retrieval.phraseSearchStored(spark, dir, Seq("z", "b", "z")))
@@ -221,14 +175,12 @@ class RetrievalSpec extends SparkSpecBase {
       assert(asMap(Retrieval.phraseSearchStored(spark, dir, Seq("a", "b")))
         == Map(3L -> ((1L, 0L))), "upsert bled into an unrelated doc")
       // delete-only append removes doc 2 everywhere
-      assert(Retrieval.appendPostings(base.limit(0), dir, "t2",
-        deletes = Some(Seq(Tuple1(2L)).toDF("doc_id"))))
+      plantLayer(dir, "t2", Nil, deletes = Seq(2L))
       assert(asMap(Retrieval.phraseSearchStored(spark, dir, Seq("c", "c")))
         .isEmpty, "delete-only append left tombstoned rows visible")
       // re-post AFTER a delete, in a later layer: the new rows survive
       // (a delete shadows strictly earlier layers only)
-      assert(Retrieval.upsertPostings(
-        Seq((2L, "c c d")).toDF("doc_id", "text"), dir, "t3"))
+      plantLayer(dir, "t3", Seq((2L, "c c d")), deletes = Seq(2L))
       assert(asMap(Retrieval.phraseSearchStored(spark, dir, Seq("c", "c")))
         == Map(2L -> ((1L, 0L))), "re-posted doc stayed dead")
       // equivalence law: stored probe ≡ in-memory search over the
@@ -239,61 +191,21 @@ class RetrievalSpec extends SparkSpecBase {
         assert(asMap(Retrieval.phraseSearchStored(spark, dir, ph))
           == asMap(Retrieval.phraseSearch(current, ph)),
           s"layered probe diverged from the logical corpus for $ph")
-      // replayed upsert tag: skips, results unchanged (exactly-once)
-      assert(!Retrieval.upsertPostings(doc1v2, dir, "t1"))
-      assert(asMap(Retrieval.phraseSearchStored(spark, dir, Seq("z", "b", "z")))
-        == Map(1L -> ((1L, 0L))), "replayed upsert double-applied")
+      // EVERY posting layer's scan must carry the bucket partition
+      // filter — pruning that survives only on one side of the union
+      // would re-grow to a full scan as layers accumulate. Three layers
+      // hold postings (base, t1, t3); t2's has no files, and the
+      // unpartitioned tombstone sets are the other scans
+      val up = Retrieval.phraseSearchStored(spark, dir, Seq("a", "b"))
+        .queryExecution.executedPlan.toString
+      val scans = "PartitionFilters: \\[[^\\]]*\\]".r.findAllIn(up).toList
+      assert(scans.count(_.contains("bucket")) == 3,
+        s"a posting layer lost its bucket partition filter:\n$up")
       // rebuild compacts: tombstones and appends die with the generation
       Retrieval.writePostings(current, dir, nBuckets = 16)
       assert(asMap(Retrieval.phraseSearchStored(spark, dir, Seq("c", "d")))
         == asMap(Retrieval.phraseSearch(current, Seq("c", "d"))))
     } finally hfs.delete(hp, true)
-  }
-
-  test("compactPostings folds appends+tombstones; probes bit-identical") {
-    val dir = s"/tmp/graft_test_postings_cp_${System.nanoTime()}"
-    try {
-      import spark.implicits._
-      Retrieval.writePostings(docs, dir, nBuckets = 8)
-      // an upsert (re-post of doc 1) and a plain append: the fold must
-      // resolve a tombstone layer AND a fresh layer
-      assert(Retrieval.upsertPostings(
-        Seq(1L -> "b a b").toDF("doc_id", "text"), dir, "b000001"))
-      assert(Retrieval.appendPostings(
-        Seq(9L -> "a b a").toDF("doc_id", "text"), dir, "b000002"))
-      assert(Retrieval.chainLength(spark, dir) == 2)
-      val phrases = Seq(Seq("a", "b"), Seq("b", "a", "b"), Seq("a"))
-      val before = phrases.map(ph =>
-        asMap(Retrieval.phraseSearchStored(spark, dir, ph)))
-      val genBefore = Retrieval.postingsGenDir(spark, dir)
-      Retrieval.compactPostings(spark, dir)
-      assert(Retrieval.postingsGenDir(spark, dir) != genBefore,
-        "fold must publish a fresh generation")
-      assert(Retrieval.chainLength(spark, dir) == 0)
-      phrases.zip(before).foreach { case (ph, want) =>
-        assert(asMap(Retrieval.phraseSearchStored(spark, dir, ph)) == want,
-          s"fold changed the probe for $ph")
-      }
-      // the folded base still bucket-prunes (rows kept their bucket ids)
-      val p = Retrieval.phraseSearchStored(spark, dir, Seq("a", "b"))
-        .queryExecution.executedPlan.toString
-      assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(p).isDefined,
-        s"no bucket partition filter after the fold:\n$p")
-      // maintenance continues: a fresh tag namespace accepts appends
-      assert(Retrieval.upsertPostings(
-        Seq(9L -> "c c c").toDF("doc_id", "text"), dir, "b000001"))
-      assert(asMap(Retrieval.phraseSearchStored(spark, dir, Seq("a", "b")))
-        == asMap(Retrieval.phraseSearch(
-          docs.filter(col("doc_id") =!= 1L && col("doc_id") =!= 9L)
-            .unionByName(Seq(1L -> "b a b").toDF("doc_id", "text"))
-            .unionByName(Seq(9L -> "c c c").toDF("doc_id", "text")),
-          Seq("a", "b"))),
-        "post-fold maintenance diverged")
-    } finally {
-      val hp = new org.apache.hadoop.fs.Path(dir)
-      hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(hp, true)
-    }
   }
 
   test("probing a dir with no complete artifact fails loudly") {

@@ -48,12 +48,10 @@ class VerifySpec extends SparkSpecBase {
 
   test("audit: every streaming object is named by other main code or perfbench") {
     // StateInspect is the one exception: the state-side inspector that
-    // deployments call directly. `pending` lists unreached modules whose
-    // specs still pin laws of kept operators' maintenance paths; they go
-    // in a later deletion (ROADMAP item 6), and the list may only shrink.
-    val pending = Set("FunnelStream", "HeartbeatMonitor", "StreamDedup",
-      "StreamGraph", "StreamHnsw", "StreamPostings", "StreamRanks",
-      "ViewMaintenance")
+    // deployments call directly. `pending` lists unreached streaming
+    // duals that go in a later deletion (ROADMAP item 6); the list may
+    // only shrink.
+    val pending = Set("FunnelStream", "HeartbeatMonitor")
     def code(f: java.nio.file.Path): Seq[String] =
       Files.readAllLines(f).asScala.toSeq.map(_.replaceAll("//.*", ""))
         .filterNot { l =>

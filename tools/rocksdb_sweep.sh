@@ -8,8 +8,9 @@
 # checkpointing, native memory). The default suite already pins RocksDB
 # for a few tests (the OTP correlation end-to-end test, the monotone
 # guard, StateInspect's change feed); this sweep pushes every stateful
-# operator (OTP correlation, funnel, heartbeat, stream dedup, view
-# maintenance, the full §3.1 connector lifecycle) through it.
+# operator (OTP correlation, funnel, heartbeat, the monotone guard and
+# idempotent sinks, the ingest pipeline, the HTTP loop, the full §3.1
+# connector lifecycle) through it.
 #
 # Mechanism: GRAFT_STATE_PROVIDER is forwarded by build.sbt into the
 # forked test JVM as -Dspark.sql.streaming.stateStore.providerClass=...,
@@ -25,10 +26,8 @@ exec sbt -batch "testOnly \
   graft.streaming.OtpCorrelationSpec \
   graft.streaming.FunnelStreamSpec \
   graft.streaming.HeartbeatMonitorSpec \
-  graft.streaming.StreamDedupSpec \
   graft.streaming.StreamOpsSpec \
   graft.streaming.StateInspectSpec \
-  graft.streaming.ViewMaintenanceSpec \
   graft.streaming.IngestPipelineSpec \
   graft.streaming.GrafteventsLifecycleSpec \
   graft.streaming.HttpLoopSpec"
