@@ -193,9 +193,8 @@ object GraphArtifact {
 
   /** Coverage snapshot: (generation name, committed append tags in
     * layer order). A derived artifact ([[RankArtifact]]) records this to
-    * know what it was computed from — take it BEFORE reading the edges
-    * (the writePqCodes discipline), so a racing append reads as stale,
-    * never as silently included. */
+    * know what it was computed from — take it BEFORE reading the edges,
+    * so a racing append reads as stale, never as silently included. */
   def coverage(s: SparkSession, dir: String): (String, Seq[String]) = {
     val genDir = edgesGenDir(s, dir)
     val hfs = hfsOf(s, genDir)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.sources.{Ledger, Tables}
+import graft.sources.Tables
 import graft.functions.{VectorFns => V}
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.11).
@@ -439,11 +439,11 @@ object VectorOps {
 
   // ─── Persisted-index layout: versioned generations, atomic publish ───
   //
-  // A generation directory `gen=N/` holds corpus + centroids (+ the
-  // tombstone ledger) TOGETHER; `CURRENT` is a one-line pointer file
-  // naming the live generation. A (re)build writes the next `gen=N+1/`
-  // fully — its `_GRAFT_INDEX_OK` manifest last — then publishes by
-  // atomically renaming a fresh pointer over `CURRENT`. Readers resolve
+  // A generation directory `gen=N/` holds corpus + centroids TOGETHER;
+  // `CURRENT` is a one-line pointer file naming the live generation. A
+  // (re)build writes the next `gen=N+1/` fully — its `_GRAFT_INDEX_OK`
+  // manifest last — then publishes by atomically renaming a fresh
+  // pointer over `CURRENT`. Readers resolve
   // the pointer first, so they see either the old generation or the new
   // one COMPLETE — never a corpus partitioned by one quantizer served
   // against another's centroid table, which is what sequentially
@@ -477,19 +477,10 @@ object VectorOps {
 
   /** Flip the pointer to `genName` (atomic rename-overwrite), then GC
     * old generations — EXCEPT the one the flip just superseded, which
-    * gets a one-publish-cycle deletion grace (see GenStore); the
-    * explicit end of the grace is [[expireIvfGenerations]]. */
+    * gets a one-publish-cycle deletion grace (see GenStore) for readers
+    * that resolved the pointer just before the flip. */
   private def publishGen(s: SparkSession, path: String, genName: String): Unit =
     gens.publish(s, path, genName)
-
-  /** Drop every generation except the CURRENT one — the explicit end of
-    * the grace period [[publishGen]] grants the generation it
-    * supersedes. Call it when in-flight readers of the old generation
-    * have provably drained (job completion, a TTL, a reader registry —
-    * deployment policy, not engine policy). Returns the number of
-    * generations deleted. */
-  def expireIvfGenerations(s: SparkSession, path: String): Int =
-    gens.expire(s, path)
 
   /** Write one full generation (corpus partitioned by cell + centroid
     * table + manifest) under `genDir` — no pointer change. */
@@ -499,126 +490,25 @@ object VectorOps {
     // range-repartition by (cell, vec_id) before the partitioned write:
     // a straight partitionBy from an n-partition plan writes n files
     // PER CELL (measured 22k part-files for one 346-cell index — every
-    // later listing, footer read, and freshness snapshot pays for it);
+    // later listing and footer read pays for it);
     // ranging gives ~cells + n files total while a hot cell still
     // splits across tasks by vec_id instead of serializing on one
     a2.repartitionByRange(col("cell"), col("vec_id"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$genDir/corpus")
     c2.write.mode("overwrite").parquet(s"$genDir/centroids")
-    // id sidecar, hash-bucketed (guide §6 partition pruning): the
-    // corpus is laid out by CELL, so an id-keyed read (the
-    // delete path's present-only invariant check) cannot prune — it
-    // scanned every cell's vec_id column per delete batch, O(corpus)
-    // at 100 TB. The sidecar re-keys JUST the id column by id hash;
-    // a delete batch then reads only its own buckets.
     val rows = a2.count()
-    val nIdB = idBucketsOf(s)
-    a2.select(col("vec_id"))
-      .withColumn(IdBucketCol, pmod(xxhash64(col("vec_id")), lit(nIdB)))
-      .repartitionByRange(col(IdBucketCol), col("vec_id"))
-      .write.mode("overwrite").partitionBy(IdBucketCol)
-      .parquet(s"$genDir/ids")
-    stampIds(s, genDir, rows, nIdB)
     a2.unpersist()
     base.unpersist()
     c2.unpersist()
     // the sentinel doubles as the generation's exact physical row count
-    // (the Hnsw meta-count discipline, round-16 VERDICT missing #1):
-    // delete's rewrite threshold reads this ONE number instead of
-    // paying an O(corpus-footers) count() per maintenance batch. Exact
-    // here by construction: the written corpus is a2 row-for-row, and
-    // a2 is already materialized in cache.
+    // (the Hnsw meta-count discipline), so a reader of the artifact's
+    // health needs no O(corpus-footers) count(). Exact here by
+    // construction: the written corpus is a2 row-for-row, and a2 is
+    // already materialized in cache.
     val ok = hfsOf(s, genDir)
       .create(new org.apache.hadoop.fs.Path(s"$genDir/$OkSentinel"), true)
     try ok.write(rows.toString.getBytes("UTF-8")) finally ok.close()
   }
-
-  // ─── id sidecar plumbing ───
-  private val IdBucketCol = "idb"
-  val IdBucketsKey = "spark.graft.ivf.idBuckets"
-  private def idBucketsOf(s: SparkSession): Long =
-    s.conf.getOption(IdBucketsKey).map(_.toLong).getOrElse(64L)
-
-  /** The sidecar's own completeness stamp: `<rows>\n<nBuckets>`. The
-    * bucket count is persisted (not re-read from conf) so a conf change
-    * between write and delete can never mis-prune, and the row count
-    * lets the delete path trust the sidecar ONLY when it provably
-    * matches the physical corpus — see [[sidecarIds]]. */
-  private def stampIds(s: SparkSession, genDir: String, rows: Long,
-      nBuckets: Long): Unit = {
-    val out = hfsOf(s, genDir).create(
-      new org.apache.hadoop.fs.Path(s"$genDir/ids/$IdsSentinel"), true)
-    try out.write(s"$rows\n$nBuckets".getBytes("UTF-8")) finally out.close()
-  }
-  private val IdsSentinel = "_GRAFT_IDS_OK"
-
-  private def readIdsStamp(s: SparkSession,
-      genDir: String): Option[(Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$genDir/ids/$IdsSentinel")
-    val hfs = hfsOf(s, genDir)
-    if (!hfs.exists(p)) return None
-    val in = hfs.open(p)
-    val raw =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    raw.split("\n", -1) match {
-      case Array(r, b) =>
-        try Some((r.trim.toLong, b.trim.toLong))
-        catch { case _: NumberFormatException => None }
-      case _ => None
-    }
-  }
-
-  /** The corpus id column for the delete path's presence check, pruned
-    * to `incoming`'s hash buckets when the generation's id sidecar is
-    * provably complete (stamp present AND its row count equals the
-    * generation's physical count — anything else falls back to the full
-    * corpus scan, never to a stale answer). Returns the read
-    * plus whether the sidecar was used (spec hook). */
-  private[graft] def presenceIds(s: SparkSession, genDir: String,
-      incoming: DataFrame): (DataFrame, Boolean) =
-    readIdsStamp(s, genDir) match {
-      case Some((rows, nB))
-          if readGenCount(s, genDir).contains(rows) =>
-        val bks = incoming
-          .select(pmod(xxhash64(col("vec_id")), lit(nB)).as("b"))
-          .distinct().collect().map(_.getLong(0)).toSeq
-        (s.read.parquet(s"$genDir/ids")
-          .filter(col(IdBucketCol).isin(bks: _*)).select(col("vec_id")),
-          true)
-      case _ =>
-        (s.read.parquet(s"$genDir/corpus").select(col("vec_id")), false)
-    }
-
-  /** The generation's stamped physical corpus row count, when the
-    * sentinel carries one (post-round-17 generations). A pre-round-17
-    * sentinel is an empty file — callers fall back to one footer
-    * count and [[stampGenCount]] the result, so the fallback is paid
-    * once per legacy generation, not per maintenance batch. */
-  private def readGenCount(s: SparkSession, genDir: String): Option[Long] =
-    Ledger.readSmall(hfsOf(s, genDir),
-      new org.apache.hadoop.fs.Path(s"$genDir/$OkSentinel"))
-      .flatMap(_.toLongOption)
-
-  /** Restamp a LIVE generation's row count (the one-time legacy
-    * upgrade) with
-    * [[Ledger.replaceSmall]]: a crash mid-stamp leaves either the old
-    * stamped sentinel or the new one, and the sentinel keeps existing
-    * throughout, so the completeness contract is never violated. */
-  private def stampGenCount(s: SparkSession, genDir: String,
-      rows: Long): Unit =
-    Ledger.replaceSmall(hfsOf(s, genDir),
-      new org.apache.hadoop.fs.Path(s"$genDir/$OkSentinel"), rows.toString)
-
-  /** Physical corpus row count: the stamped sentinel when present,
-    * else one footer count whose result is stamped back — the legacy
-    * upgrade path. */
-  private def corpusCount(s: SparkSession, genDir: String): Long =
-    readGenCount(s, genDir).getOrElse {
-      val n = s.read.parquet(s"$genDir/corpus").count()
-      stampGenCount(s, genDir, n)
-      n
-    }
 
   /** Persist the trained index: the assigned corpus laid out PARTITIONED
     * BY CELL (so a probe is a directory-pruned read, not a scan +
@@ -630,10 +520,6 @@ object VectorOps {
     val s = corpus.sparkSession
     val genName = nextGenName(s, path)
     writeGen(corpus, s"$path/$genName", cells)
-    // each generation owns its tombstone ledger, so a rebuild can never
-    // be haunted by stale deletions: the superseded ledger lives (and
-    // dies) inside the superseded gen dir, which the publish GCs after
-    // its one-cycle reader grace
     publishGen(s, path, genName)
   }
 
@@ -647,118 +533,12 @@ object VectorOps {
   }
 
   /** The generation's corpus minus tombstoned rows — what every probe
-    * serves. The anti-join's left side keeps its cell partition filters
-    * (they push through to the scan), and the tombstone side is bounded
-    * by the rewrite threshold, so the join never dominates a probe. */
+    * serves. A generation carries a `tombstones/` ledger only if an
+    * earlier release's delete path wrote one; the anti-join's left side
+    * keeps its cell partition filters (they push through to the scan). */
   private def liveCorpus(s: SparkSession, genDir: String): DataFrame = {
     val c = s.read.parquet(s"$genDir/corpus")
     tombstonesOf(s, genDir).fold(c)(t => c.join(t, Seq("vec_id"), "left_anti"))
-  }
-
-  /** Rebuild the index over its LIVE rows as the next generation and
-    * flip the pointer: tombstones are applied physically (they die with
-    * the superseded generation), the quantizer is retrained, and the
-    * swap is one atomic pointer rename — a crash at any point leaves
-    * the old generation fully served. */
-  private def retrainInPlace(s: SparkSession, path: String, cells: Int): Unit = {
-    val genDir = indexGenDir(s, path)
-    val corpus = liveCorpus(s, genDir).select(col("vec_id"), col("embedding"))
-    // loud empty-store guard: a hand-written full-coverage ledger must
-    // not publish a generation whose corpus holds no rows — every later
-    // probe would silently serve zero neighbors instead of a contract
-    // message
-    if (corpus.isEmpty) throw new IllegalStateException(
-      s"compactIvfIndex: every row of the index at $path is " +
-        "tombstoned — a retrain would publish an empty index; " +
-        "writeIvfIndex a new corpus (or delete the index directory) " +
-        "instead")
-    val genName = nextGenName(s, path)
-    // writeGen's jobs read the old generation's files lazily while the
-    // new one is written; the old dirs outlive them (deletion happens
-    // only inside publishGen, after the write completes)
-    writeGen(corpus, s"$path/$genName", cells)
-    publishGen(s, path, genName)
-  }
-
-  /** Apply tombstones physically and re-optimize the quantizer — the
-    * explicit form of the rewrite the deletion threshold triggers. */
-  def compactIvfIndex(s: SparkSession, path: String, cells: Int = 0): Unit =
-    retrainInPlace(s, path, cells)
-
-  /** Delete vectors from a written index by id: O(deleted) work + one
-    * column-pruned id scan — the ids land in a tombstone ledger that
-    * every probe anti-joins (bounded by the threshold), and once the
-    * tombstoned fraction of the physical corpus exceeds
-    * `rewriteThreshold` the index is rebuilt over its live rows (one
-    * corpus rewrite amortized over many deletes — the same economics
-    * as the dedup maintainer's delta-then-compact cycle). Returns true
-    * iff the physical rewrite ran.
-    *
-    * LEDGER INVARIANT: only ids PHYSICALLY PRESENT in the corpus enter
-    * the ledger, so a typo'd delete of a never-indexed id is a no-op and
-    * the row-count arithmetic below stays exact. The presence check
-    * reads the hash-bucketed id SIDECAR (`ids/idb=K/`, written with
-    * each generation) pruned to the batch's own buckets —
-    * O(batch-buckets) instead of every cell's id column per delete
-    * batch. Legacy generations (or one whose sidecar stamp does not
-    * match its row count) fall back to the corpus id-column scan.
-    *
-    * LOUD all-dead guard, BEFORE the ledger write: a batch that would
-    * tombstone every physical row refuses with the fix by name — the
-    * old order wrote the ledger first, and below the threshold the
-    * published index silently served zero neighbors (the Hnsw
-    * round-15 ADVICE medium, same class). */
-  def deleteFromIvfIndex(s: SparkSession, path: String, ids: DataFrame,
-      rewriteThreshold: Double = 0.2, retrainCells: Int = 0): Boolean = {
-    val genDir = indexGenDir(s, path)
-    // cast up front: an int-typed caller id column would otherwise write
-    // a mixed-type ledger (and break the long-typed reads downstream)
-    val incoming = ids.select(col("vec_id").cast("long").as("vec_id")).distinct()
-    // presence check against the hash-bucketed id sidecar when it is
-    // provably complete — reads only the batch's buckets instead of
-    // every cell's id column (see [[presenceIds]]); legacy or
-    // crash-degraded generations fall back to the corpus scan
-    val present = incoming.join(presenceIds(s, genDir, incoming)._1,
-      Seq("vec_id"), "left_semi")
-    val novel = tombstonesOf(s, genDir)
-      .fold(present)(t => present.join(t, Seq("vec_id"), "left_anti"))
-      .persist()
-    try {
-      val novelN = novel.count()
-      val ledger = tombstonesOf(s, genDir)
-      val existingDead = ledger.map(_.count()).getOrElse(0L)
-      val nDead = existingDead + novelN
-      if (nDead == 0L) return false
-      // threshold denominator is the PHYSICAL corpus row count — from
-      // the stamped sentinel (exact at write/retrain; one-time
-      // footer-count upgrade for legacy generations). Metadata-only:
-      // no per-batch corpus listing.
-      val total = corpusCount(s, genDir)
-      // all-dead refusal, count-gated then EXACTLY confirmed by a
-      // first-live-row probe: a legacy (pre-present-only-invariant)
-      // ledger can hold never-indexed ids that inflate nDead past
-      // total on a healthy index — the count only arms the check
-      if (novelN > 0 && nDead >= total) {
-        val wouldDead = ledger.fold(novel)(novel.union(_)).distinct()
-        val anyLive = s.read.parquet(s"$genDir/corpus")
-          .select(col("vec_id"))
-          .join(wouldDead, Seq("vec_id"), "left_anti")
-          .limit(1).collect()
-        if (anyLive.isEmpty) throw new IllegalStateException(
-          s"deleteFromIvfIndex: this batch would tombstone every row " +
-            s"($nDead of $total) of the index at $path — an all-dead " +
-            "index would silently serve zero neighbors; delete the " +
-            "index directory (or writeIvfIndex a new corpus) instead")
-      }
-      // skip the write when nothing novel is tombstoned: an empty append
-      // would materialize a zero-row ledger whose mere existence taxes
-      // every later probe (anti-join) forever
-      if (novelN > 0)
-        novel.write.mode("append").parquet(s"$genDir/tombstones")
-      val rewrite = nDead.toDouble / total > rewriteThreshold
-      if (rewrite) retrainInPlace(s, path, retrainCells)
-      rewrite
-    } finally { novel.unpersist(); () }
   }
 
   /** Search a written index: rank cells per query against the stored
@@ -1099,190 +879,6 @@ object VectorOps {
         gated
       }).asInstanceOf[DataFrame]
 
-  /** Attach PQ codes to the CURRENT index generation as an optional
-    * acceleration artifact: `pq/` inside the gen dir holds the trained
-    * sub-codebooks and the per-vector codes, published once by
-    * [[Ledger.publishOnce]] (a torn write leaves the generation serving
-    * without PQ; a retrain deletes the old codes first). Codes are
-    * GENERATION-SCOPED: a retrain/compact publishes a new gen without
-    * them (recompute via this call), and a delete shrinks the live
-    * corpus under the codes — [[probePqIndex]] guards that
-    * staleness loudly instead of silently scoring a partial corpus. */
-  def writePqCodes(s: SparkSession, path: String, m: Int = 4,
-      subDim: Int = 16, codewords: Int = 16): Unit = {
-    val genDir = indexGenDir(s, path)
-    // snapshot the source file set BEFORE reading anything: if a
-    // delete races this write, the listing diverges and later probes
-    // correctly report the artifact stale
-    val sources = sourceListing(s, genDir)
-    val corpus = liveCorpus(s, genDir)
-    // fail the config error BEFORE paying for m codebook trainings;
-    // pqCodesCol re-checks per row for ragged corpora
-    corpus.select(size(col("iv"))).take(1).foreach { r =>
-      require(r.getInt(0) >= m * subDim,
-        s"PQ m*subDim = ${m * subDim} exceeds vector dim ${r.getInt(0)}")
-    }
-    val books: Array[Codebook] = (0 until m).map { mi =>
-      trainBook(corpus.select(col("vec_id"),
-        slice(col("iv"), 1 + mi * subDim, subDim).as("siv")),
-        subDim, codewords)
-    }.toArray
-    val hfs = hfsOf(s, genDir)
-    val dest = new org.apache.hadoop.fs.Path(s"$genDir/pq")
-    hfs.delete(dest, true) // a retrain replaces the generation's codes
-    Ledger.publishOnce(hfs, dest) { tmp =>
-      import s.implicits._
-      books.zipWithIndex.flatMap { case (book, mi) =>
-        book.map { case (cw, csum, cn) => (mi, cw, csum.toSeq, cn) }
-      }.toSeq.toDF("m", "cw", "csum", "cn")
-        .coalesce(1).write.parquet(s"$tmp/books")
-      // codes carry — and are PARTITIONED BY — the coarse cell id, so the
-      // IVFADC probe ([[probeIvfPqIndex]]) reads only its probed cells'
-      // code files (directory pruning), never the full codes table.
-      // Persist the coded rows BEFORE the range repartition: range
-      // partitioning runs its child once to sample boundary keys and
-      // again in the shuffle map tasks — uncached, the m·codewords·subDim
-      // argmin per row (and the corpus read) would execute twice per
-      // write, and the cache holds only slim (vec_id, cell, codes) rows
-      val coded = corpus.select(col("vec_id"), col("cell"),
-          pqCodesCol(s, books, subDim)(col("iv")).as("codes"))
-        .persist()
-      try coded.repartitionByRange(col("cell"), col("vec_id"))
-        .write.partitionBy("cell").parquet(s"$tmp/codes")
-      finally coded.unpersist()
-      val sf = hfs.create(
-        new org.apache.hadoop.fs.Path(s"$tmp/source_files"), true)
-      try sf.write(sources.map(_ + "\n").mkString.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally sf.close()
-      hfs.create(new org.apache.hadoop.fs.Path(s"$tmp/$OkSentinel"), true)
-        .close()
-    }
-  }
-
-  /** ADC search over the STORED codes of the current generation: the
-    * query never touches a corpus vector — per-subspace lookup tables
-    * from the stored books, one map pass over the (vec_id, codes)
-    * table, rank-only top-k (the q111 policy, pay-per-query against a
-    * written artifact). Fails loudly when the generation has no PQ
-    * artifact, a torn one, or codes STALER than the corpus (deletes
-    * after [[writePqCodes]]). */
-  def probePqIndex(s: SparkSession, path: String, queries: DataFrame,
-      k: Int = 5): DataFrame = {
-    val genDir = indexGenDir(s, path)
-    val (books, subDim) = loadPqBooks(s, genDir)
-    val codes = s.read.parquet(s"$genDir/pq/codes")
-    assertPqFreshFast(s, genDir, codes)
-    val qArr = queries.select(col("qid"),
-      intVec(col("embedding")).as("qiv")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
-    val lut = adcLut(books, subDim, qArr)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("vec_id"))
-    codes.select(col("vec_id"),
-        explode(adcScoresCol(s, lut)(col("codes"))).as("qs"))
-      .select(col("qs._1").as("qid"), col("vec_id"), col("qs._2").as("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("rank").cast("long").as("rank"))
-      .orderBy(col("qid"), col("rank"))
-  }
-
-  /** Load the generation's PQ codebooks as driver arrays (m ×
-    * codewords × subDim longs — trivially bounded), failing loudly on a
-    * missing or torn artifact. */
-  private def loadPqBooks(s: SparkSession,
-      genDir: String): (Array[Codebook], Int) = {
-    val hfs = hfsOf(s, genDir)
-    if (!hfs.exists(new org.apache.hadoop.fs.Path(s"$genDir/pq/$OkSentinel")))
-      throw new IllegalStateException(
-        s"no (or torn) PQ artifact in $genDir — run writePqCodes")
-    val flat = s.read.parquet(s"$genDir/pq/books")
-      .select(col("m"), col("cw"), col("csum"), col("cn")).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2).toArray,
-        r.getLong(3)))
-    val m = flat.map(_._1).max + 1
-    val books: Array[Codebook] = (0 until m).map { mi =>
-      flat.filter(_._1 == mi)
-        .map { case (_, cw, csum, cn) => (cw, csum, cn) }.sortBy(_._1)
-    }.toArray
-    (books, books.head.head._2.length)
-  }
-
-  /** Fail loudly when the PQ codes are STALER than the live corpus.
-    * Staleness is an ID-SET property, not a count: a delete plus an
-    * equal-size append keeps the counts matched while the codes table
-    * still scores tombstoned rows and misses the live appends — the
-    * symmetric anti-join catches any divergence. */
-  private def assertPqFresh(s: SparkSession, genDir: String,
-      codes: DataFrame): Unit = {
-    val codeIds = codes.select(col("vec_id"))
-    val liveIds = liveCorpus(s, genDir).select(col("vec_id"))
-    val nDiverged =
-      codeIds.join(liveIds, Seq("vec_id"), "left_anti").count() +
-        liveIds.join(codeIds, Seq("vec_id"), "left_anti").count()
-    if (nDiverged != 0L)
-      throw new IllegalStateException(
-        s"PQ codes stale: $nDiverged vec_ids diverge between the codes " +
-          "table and the live corpus — re-run writePqCodes after " +
-          "appends/deletes")
-  }
-
-  /** Sorted (relative path, length) fingerprint of a generation's
-    * corpus + tombstone FILES — parquet files are immutable, so an
-    * unchanged listing implies an unchanged live id set. O(#files)
-    * directory listing, no data scan. */
-  private def sourceListing(s: SparkSession, genDir: String): Seq[String] = {
-    val hfs = hfsOf(s, genDir)
-    val prefix = new org.apache.hadoop.fs.Path(genDir).toUri.getPath
-    def ls(sub: String): Seq[String] = {
-      val p = new org.apache.hadoop.fs.Path(s"$genDir/$sub")
-      if (!hfs.exists(p)) Seq.empty
-      else {
-        // listStatus walk, NOT listFiles(recursive): the latter returns
-        // LocatedFileStatus and pays a per-file block-locations lookup —
-        // measured 150 s vs 0.9 s over a 22k-file corpus on local fs
-        val b = Seq.newBuilder[String]
-        val stack = scala.collection.mutable.Stack(p)
-        while (stack.nonEmpty) {
-          hfs.listStatus(stack.pop()).foreach { st =>
-            if (st.isDirectory) stack.push(st.getPath)
-            else b += s"${st.getPath.toUri.getPath.stripPrefix(prefix)}:${st.getLen}"
-          }
-        }
-        b.result()
-      }
-    }
-    (ls("corpus") ++ ls("tombstones")).sorted
-  }
-
-  /** The production-shape freshness check: [[writePqCodes]] records the
-    * file listing of the corpus + tombstones it encoded; a probe
-    * compares TODAY's listing against it — an O(#files) metadata read
-    * instead of [[assertPqFresh]]'s per-probe O(N) symmetric anti-join
-    * (which at 10⁹ vectors would cost a full-table pass before every
-    * pruned scan, defeating IVFADC's point). Conservative: any listing
-    * change (append, delete — even a tombstone of an id the corpus
-    * never held) reads as stale. Artifacts written before the snapshot
-    * existed fall back to the anti-join. */
-  private def assertPqFreshFast(s: SparkSession, genDir: String,
-      codes: DataFrame): Unit = {
-    val snap = new org.apache.hadoop.fs.Path(s"$genDir/pq/source_files")
-    val hfs = hfsOf(s, genDir)
-    if (!hfs.exists(snap)) { assertPqFresh(s, genDir, codes); return }
-    val recorded = {
-      val in = hfs.open(snap)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-      finally in.close()
-    }
-    val now = sourceListing(s, genDir)
-    if (recorded != now)
-      throw new IllegalStateException(
-        "PQ codes stale: the corpus/tombstone file set changed since " +
-          s"writePqCodes (${recorded.size} files recorded, ${now.size} " +
-          "now) — re-run writePqCodes after appends/deletes")
-  }
-
   /** ADC score of ONE (query, code-row) pair: the m table hits summed
     * in SUBSPACE ORDER (float addition is not associative; the oracle
     * pivots and adds in the same order). The per-pair form is what the
@@ -1303,92 +899,12 @@ object VectorOps {
     u(qid, codes)
   }
 
-  /** IVFADC probe of a WRITTEN index (q114's stored form) — the FAISS
-    * production composition, all three stages against persisted
-    * artifacts:
-    *
-    *  1. '''coarse prune''': each query ranks the stored centroids and
-    *     keeps its `nprobe` nearest cells — same probe policy (and
-    *     exact integer arithmetic) as [[probeIvfIndex]];
-    *  2. '''ADC over probed cells only''': the codes table is stored
-    *     PARTITIONED BY the coarse cell ([[writePqCodes]]), so the
-    *     scan reads only the probed cells' directories — O(Σ probed
-    *     cell sizes · m) per query batch instead of the flat-PQ O(N·m)
-    *     that [[probePqIndex]] pays, the difference between usable and
-    *     unusable at 10⁹ vectors;
-    *  3. '''exact re-rank''': the ADC shortlist's real vectors are
-    *     fetched (broadcast of ≤ nQueries·shortlist ids against the
-    *     probed cells of the corpus — vectors never shuffle) and
-    *     ordered by the exact-decimal dot, so reported values carry no
-    *     approximation (the q112 convention: ADC decides WHO competes,
-    *     never the score).
-    *
-    * Fails loudly on a missing/torn/stale PQ artifact (the
-    * [[probePqIndex]] guards). Recall bound: candidates come from the
-    * probed cells only — identical to the IVF probe's recall, with ADC
-    * additionally bounding which of those reach the exact stage. */
-  def probeIvfPqIndex(s: SparkSession, path: String, queries: DataFrame,
-      k: Int = 5, nprobe: Int = 3, shortlist: Int = 50): DataFrame = {
-    val genDir = indexGenDir(s, path)
-    val (books, subDim) = loadPqBooks(s, genDir)
-    val codesAll = s.read.parquet(s"$genDir/pq/codes")
-    if (!codesAll.columns.contains("cell"))
-      throw new IllegalStateException(
-        s"PQ artifact in $genDir predates cell partitioning (no `cell` " +
-          "column in pq/codes) — IVFADC needs the cell-partitioned " +
-          "layout; re-run writePqCodes")
-    assertPqFreshFast(s, genDir, codesAll)
-    val c2 = s.read.parquet(s"$genDir/centroids")
-    val q = externalQ(queries)
-    // bounded collect: the nQueries (qid, qiv) rows drive BOTH the
-    // per-query ADC LUTs (driver artifacts by design — m·codewords
-    // doubles each) and the cell ranking, which runs on the DRIVER over
-    // the collected centroid array (K ≈ √N rows) via the exact
-    // probeCellsOf arithmetic — no probe-side Spark job, no persisted
-    // probes plan or UDF broadcast left behind per call
-    val qArr = q.select(col("qid"), col("qiv")).distinct().collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).sortBy(_._1)
-    val cents = centRows(c2)
-    val probePairs = qArr.toSeq.flatMap { case (qid, qiv) =>
-      probeCellsDriver(cents, qiv, nprobe).map(c => (qid, c)) }
-    // probed cell ids: tiny (≤ nQueries·nprobe longs) — literal IN-list
-    // partition filters on the codes AND corpus reads
-    val probedCells = probePairs.map(_._2).distinct
-    val lut = adcLut(books, subDim, qArr)
-    val wA = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("vec_id"))
-    import s.implicits._
-    val probes = probePairs.toDF("qid", "pcell")
-    val short = codesAll.filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(probes), col("cell") === col("pcell"))
-      .withColumn("score", adcScorePairCol(s, lut)(col("qid"), col("codes")))
-      .withColumn("arank", row_number().over(wA))
-      .filter(col("arank") <= shortlist)
-      .select(col("qid"), col("vec_id"))
-    val qv = queries.select(col("qid"), col("embedding").as("qv"))
-    val wE = Window.partitionBy(col("qid"))
-      .orderBy(col("dot").desc, col("vec_id"))
-    val out = liveCorpus(s, genDir)
-      .filter(col("cell").isin(probedCells: _*))
-      .select(col("vec_id"), col("embedding"))
-      .join(broadcast(short), "vec_id")
-      .join(broadcast(qv), "qid")
-      .withColumn("dot", V.dotExact(col("qv"), col("embedding")))
-      .withColumn("rank", row_number().over(wE))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id"), col("dot"),
-        col("rank").cast("long").as("rank"))
-      .orderBy(col("qid"), col("rank"))
-    out
-  }
-
   /** IVFADC from a raw table (q114's Verify form): coarse quantizer +
     * per-subspace PQ trained inline over the held-out-query corpus
-    * (vec_id ≥ nQueries — the q103/q111 convention), then the same
-    * three-stage probe as [[probeIvfPqIndex]]: coarse cell prune → ADC
-    * over probed cells' codes only → exact-decimal re-rank of the
-    * shortlist. Engine-exact end to end (md5-seeded integer Lloyd for
-    * BOTH quantizers, exact HUGEINT ADC terms summed in subspace order,
+    * (vec_id ≥ nQueries — the q103/q111 convention), then the FAISS
+    * IVFADC three-stage probe: coarse cell prune → ADC over probed
+    * cells' codes only → exact-decimal re-rank of the shortlist.
+    * Engine-exact end to end (md5-seeded integer Lloyd for BOTH quantizers, exact HUGEINT ADC terms summed in subspace order,
     * exact dots in the re-rank), so the DuckDB oracle replays the full
     * composition — probe policy, LUT pivot, and shortlist included. */
   def ivfAdcRerank(s: SparkSession, d: String, m: Int = 4,
@@ -1546,9 +1062,9 @@ object VectorOps {
   }
 
   /** Fused all-subspace PQ code assignment as a Column over the full iv
-    * — ONE home for the argmin loop, shared by the inline scorer and
-    * the stored-artifact writer (a tie-break or key-formula change must
-    * never be able to diverge between them). */
+    * — ONE home for the argmin loop, shared by the flat ADC scorer
+    * (q111/q112) and the IVFADC probe (q114) (a tie-break or key-formula
+    * change must never be able to diverge between them). */
   private def pqCodesCol(s: SparkSession, books: Array[Codebook],
       subDim: Int)(iv: Column): Column = {
     val bcBooks = s.sparkContext.broadcast(books)
@@ -1588,8 +1104,8 @@ object VectorOps {
   }
 
   /** Per-query ADC lookup tables: term(q, mi, cw) = exact(q_mi·csum)/cn,
-    * sized to each book's max codeword id. Shared by the inline scorer
-    * and the stored-artifact probe. */
+    * sized to each book's max codeword id. Shared by the flat ADC scorer
+    * and the IVFADC probe. */
   private def adcLut(books: Array[Codebook], subDim: Int,
       qArr: Array[(Long, Array[Long])]): Array[(Long, Array[Array[Double]])] =
     qArr.map { case (qid, qiv) =>
@@ -1661,9 +1177,7 @@ object VectorOps {
     * cached memo and make the next consumer replay the whole training
     * DAG uncached. Safe because the trained assignment is deterministic
     * (md5-seeded exact-integer Lloyd). The a2 checkpoint holds the
-    * held-out corpus (vec_id, embedding, iv, cell) — bench-scale data;
-    * the production path for stored indexes is [[probeIvfPqIndex]],
-    * which never trains inline. */
+    * held-out corpus (vec_id, embedding, iv, cell) — bench-scale data. */
   private def heldOutAssign(s: SparkSession, d: String, cells: Int,
       nQueries: Int): (DataFrame, DataFrame) =
     memoFor(s).computeIfAbsent(s"assign|$d|$cells|$nQueries", _ => {

@@ -23,10 +23,8 @@ import org.apache.spark.sql.SparkSession
   *    still be opening the outgoing generation's files, and at cluster
   *    scale "an instant" is a whole multi-minute probe job.
   *    Unreferenced partials (crashed mid-write, never current) carry no
-  *    such risk and are collected immediately;
-  *  - [[expire]] is the explicit end of the grace window (call when
-  *    in-flight readers have provably drained — deployment policy, not
-  *    engine policy).
+  *    such risk and are collected immediately. The grace ends at the
+  *    following publish.
   */
 final class GenStore(val sentinel: String, val what: String,
     val buildHint: String) {
@@ -81,15 +79,5 @@ final class GenStore(val sentinel: String, val what: String,
       }
       .foreach(p => hfs.delete(p, true))
     s.catalog.refreshByPath(root)
-  }
-
-  /** Drop every generation except CURRENT. Returns the count deleted. */
-  def expire(s: SparkSession, root: String): Int = {
-    val current = new Path(genDir(s, root)).getName
-    val hfs = hfsOf(s, root)
-    val doomed = hfs.listStatus(new Path(root)).map(_.getPath)
-      .filter(p => p.getName.startsWith("gen=") && p.getName != current)
-    doomed.foreach(p => hfs.delete(p, true))
-    doomed.length
   }
 }

@@ -7,9 +7,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.sources.Ledger
 
 /** Structured Streaming forms of the reference's dataflow semantics
-  * (SURVEY.md §2.9): watermark-gated dedup (ST1), tumbling windows
-  * (ST5), and the per-mailbox monotone watermark guard (F2/A1) as an
-  * exact stateful operator.
+  * (SURVEY.md §2.9): the per-mailbox monotone watermark guard (F2/A1) as
+  * an exact stateful operator, and the idempotent batch sink (ST4).
   *
   * All operators take and return unbounded DataFrames/Datasets — they run
   * identically over `MemoryStream` (tests), file streams (this repo's
@@ -26,28 +25,6 @@ object StreamOps {
     * correspond to: source offsets commit per micro-batch regardless of
     * row-level outcomes, and the latest-per-key top-1 (q24/T1) collapsing
     * a burst to its newest element. */
-
-  /** ST1/F2 — drop duplicate notifications within the watermark window,
-    * keyed on the id columns ONLY: a Pub/Sub redelivery carries the same
-    * historyId but a fresh delivery timestamp, so the event-time column
-    * must not be part of the dedup key. `dropDuplicatesWithinWatermark`
-    * keeps per-key state garbage-collected by the watermark — bounded
-    * state at any scale. */
-  def dedupNotifications(
-      df: DataFrame,
-      eventTimeCol: String = "ts",
-      idCols: Seq[String] = Seq("historyId"),
-      lateness: String = "2 minutes"): DataFrame =
-    df.withWatermark(eventTimeCol, lateness)
-      .dropDuplicatesWithinWatermark(idCols)
-
-  /** ST5 — tumbling-window counts/sums over the event stream. */
-  def tumblingCounts(df: DataFrame, eventTimeCol: String = "ts",
-                     width: String = "10 minutes",
-                     lateness: String = "2 minutes"): DataFrame =
-    df.withWatermark(eventTimeCol, lateness)
-      .groupBy(window(col(eventTimeCol), width), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
 
   /** A (mailboxId, historyId) pair for the watermark guard. */
   final case class HistoryEvent(mailbox: String, historyId: Long)

@@ -144,7 +144,10 @@ class IvfIndexSpec extends SparkSpecBase {
       s"held-out queries must land in their home cells: recall $recall")
   }
 
-  test("delete path: tombstones hide rows exactly; compaction + threshold rewrite apply them physically") {
+  test("tombstone ledger: probes hide tombstoned rows exactly") {
+    // a generation's `tombstones/` ledger (vec_ids) is anti-joined by
+    // every probe; plant one by hand and compare with brute force over
+    // the live rows
     val rnd = new scala.util.Random(19L)
     val centers = Array.fill(8)(Array.fill(64)(rnd.nextFloat() * 2f - 1f))
     def mk(ids: Range): Seq[(Long, Seq[Float])] = ids.map { i =>
@@ -159,13 +162,8 @@ class IvfIndexSpec extends SparkSpecBase {
       cells = 8)
     val queries = mk(5000 until 5012)
       .map { case (id, v) => (id - 5000L, v) }.toDF("qid", "embedding")
-    // 30/320 = 9.4% tombstoned: logical-only delete, no rewrite
-    val rewrote = VectorOps.deleteFromIvfIndex(spark, path,
-      (0L until 30L).toSeq.toDF("vec_id"), rewriteThreshold = 0.2,
-      retrainCells = 8)
-    assert(!rewrote, "9.4% deletion must stay logical")
-    assert(new java.io.File(
-      s"${VectorOps.indexGenDir(spark, path)}/tombstones").exists())
+    (0L until 30L).toSeq.toDF("vec_id").write
+      .parquet(s"${VectorOps.indexGenDir(spark, path)}/tombstones")
     val live = initial.filterNot(_._1 < 30)
     val brute = tk(VectorOps.dotTopKWith(live.toDF("vec_id", "embedding"),
       queries, k = 5))
@@ -173,68 +171,6 @@ class IvfIndexSpec extends SparkSpecBase {
       nprobe = 8))
     assert(ex == brute, "probe must serve exactly the live corpus")
     assert(ex.forall(_._2 >= 30L), "a tombstoned row surfaced in a probe")
-    // explicit compaction: tombstones applied physically and cleared —
-    // the ledger dies with the superseded generation
-    VectorOps.compactIvfIndex(spark, path, cells = 8)
-    val gen2 = VectorOps.indexGenDir(spark, path)
-    assert(!new java.io.File(s"$gen2/tombstones").exists())
-    assert(spark.read.parquet(s"$gen2/corpus").count() == 290L)
-    assert(tk(VectorOps.probeIvfIndex(spark, path, queries, k = 5,
-      nprobe = 8)) == brute, "compaction changed the served relation")
-    // 80/290 = 27.6% tombstoned: crosses the threshold → auto-rewrite
-    val rewrote2 = VectorOps.deleteFromIvfIndex(spark, path,
-      (100L until 180L).toSeq.toDF("vec_id"), rewriteThreshold = 0.2,
-      retrainCells = 8)
-    assert(rewrote2, "27.6% deletion must trigger the physical rewrite")
-    val gen3 = VectorOps.indexGenDir(spark, path)
-    assert(!new java.io.File(s"$gen3/tombstones").exists())
-    assert(spark.read.parquet(s"$gen3/corpus").count() == 210L)
-    val live3 = live.filterNot(r => r._1 >= 100L && r._1 < 180L)
-    assert(tk(VectorOps.probeIvfIndex(spark, path, queries, k = 5,
-        nprobe = 8)) ==
-      tk(VectorOps.dotTopKWith(live3.toDF("vec_id", "embedding"),
-        queries, k = 5)))
-  }
-
-  test("delete guards: all-dead refuses before the ledger; absent ids no-op") {
-    // (a) a batch that would tombstone every physical row refuses
-    // BEFORE any write — the old order left a published index whose
-    // probes silently served zero rows below the threshold; (b) a
-    // typo'd delete of a never-indexed id is a no-op — the ledger
-    // holds only physically-present ids
-    val rnd = new scala.util.Random(23L)
-    val rows = (0 until 40).map { i =>
-      (i.toLong, Array.fill(64)(rnd.nextFloat() * 2f - 1f).toSeq)
-    }
-    val path = java.nio.file.Files.createTempDirectory("ivf_guard").toString
-    VectorOps.writeIvfIndex(rows.toDF("vec_id", "embedding"), path,
-      cells = 4)
-    val genDir = VectorOps.indexGenDir(spark, path)
-    // (b) absent id: no ledger
-    assert(!VectorOps.deleteFromIvfIndex(spark, path,
-      Seq(9999L).toDF("vec_id"), rewriteThreshold = 0.01))
-    assert(!new java.io.File(s"$genDir/tombstones").exists(),
-      "an absent id entered the ledger")
-    // (a) deleting every row (plus strays) refuses loudly, pre-ledger:
-    // ids 0..49 cover the 40 built rows (40..49 are strays the
-    // presence filter drops) → all 40 physical rows dead
-    val e = intercept[IllegalStateException](
-      VectorOps.deleteFromIvfIndex(spark, path,
-        (0L until 50L).toSeq.toDF("vec_id"), rewriteThreshold = 0.2))
-    assert(e.getMessage.contains("every row"), e.getMessage)
-    val gen2 = VectorOps.indexGenDir(spark, path)
-    assert(!new java.io.File(s"$gen2/tombstones").exists(),
-      "the refused delete leaked a ledger")
-    // probes still serve the full store
-    val q = Seq((0L, rows.head._2)).toDF("qid", "embedding")
-    assert(VectorOps.probeIvfIndex(spark, path, q, k = 3, nprobe = 4)
-      .count() == 3)
-    // (a') hand-torn full-coverage ledger: the retrain refuses loudly
-    spark.read.parquet(s"$gen2/corpus").select(col("vec_id"))
-      .write.mode("overwrite").parquet(s"$gen2/tombstones")
-    val e2 = intercept[IllegalStateException](
-      VectorOps.compactIvfIndex(spark, path, cells = 4))
-    assert(e2.getMessage.contains("empty index"), e2.getMessage)
   }
 
   test("generation layout: partial builds never serve, torn swaps fail loudly") {
@@ -271,11 +207,6 @@ class IvfIndexSpec extends SparkSpecBase {
     assert(!new java.io.File(gen0).exists(),
       "grace must end at the following publish")
     assert(new java.io.File(gen1).exists())
-    // explicit expiry once readers have drained: only the current stays
-    assert(VectorOps.expireIvfGenerations(spark, path) == 1)
-    assert(!new java.io.File(gen1).exists())
-    assert(VectorOps.probeIvfIndex(spark, path, nprobe = 2).collect()
-      .toSeq == before, "expiry changed the served relation")
     // torn generation (pointer names a dir whose manifest never landed):
     // serving it would silently mix quantizers — must throw instead
     assert(new java.io.File(s"$gen2/_GRAFT_INDEX_OK").delete())
@@ -371,113 +302,5 @@ class IvfIndexSpec extends SparkSpecBase {
     val recall = (exact & got).size.toDouble / exact.size
     assert(recall >= 0.9,
       s"trained quantizer must exploit cluster structure: recall $recall")
-  }
-
-  test("meta count: maintenance decisions are metadata-only (stamped sentinel)") {
-    // Round-17 parity with the Hnsw meta count (round-16 VERDICT missing
-    // #1): the OK sentinel carries the generation's exact physical row
-    // count, so delete's rewrite threshold stops paying an
-    // O(corpus-footers) count() per maintenance batch.
-    // The forged-stamp leg PROVES the decision reads the sentinel (a
-    // footer count would see the true total and rewrite); the
-    // empty-sentinel leg covers pre-round-17 generations (one fallback
-    // footer count, stamped back).
-    val rnd = new scala.util.Random(41L)
-    def mk(ids: Range): Seq[(Long, Seq[Float])] = ids.map { i =>
-      (i.toLong, Array.fill(64)(rnd.nextFloat() * 2f - 1f).toSeq)
-    }
-    val path = java.nio.file.Files.createTempDirectory("ivf_meta").toString
-    VectorOps.writeIvfIndex(mk(0 until 40).toDF("vec_id", "embedding"),
-      path, cells = 4)
-    def stamp(): String = {
-      val f = new java.io.File(
-        s"${VectorOps.indexGenDir(spark, path)}/_GRAFT_INDEX_OK")
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.mkString.trim finally src.close()
-    }
-    assert(stamp() == "40", "build must stamp the exact written row count")
-    // FORGE the stamp high: 15/40 = 37.5% would cross the 20% threshold,
-    // but against the forged 5000 it reads as 0.3% — no rewrite proves
-    // the threshold consumed the sentinel, never a corpus footer count
-    val genDir = VectorOps.indexGenDir(spark, path)
-    // forge through the Hadoop FS so the .crc sidecar follows
-    def forge(body: String): Unit = {
-      val sp = new org.apache.hadoop.fs.Path(s"$genDir/_GRAFT_INDEX_OK")
-      val hfs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = hfs.create(sp, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-    }
-    forge("5000")
-    assert(!VectorOps.deleteFromIvfIndex(spark, path,
-      (0L until 15L).toSeq.toDF("vec_id"), rewriteThreshold = 0.2,
-      retrainCells = 4),
-      "threshold decision must be metadata-only (read the forged stamp)")
-    // LEGACY sentinel (pre-round-17: empty file): one footer-count
-    // fallback, honest decision, and the result is stamped back; the
-    // 15 existing + 5 novel tombstones now cross 20/40 = 50% → rewrite,
-    // and the retrained generation stamps its own fresh count
-    forge("")
-    assert(VectorOps.deleteFromIvfIndex(spark, path,
-      (15L until 20L).toSeq.toDF("vec_id"), rewriteThreshold = 0.2,
-      retrainCells = 4),
-      "legacy (empty) sentinel must fall back to one footer count")
-    assert(stamp() == "20",
-      "retrained generation must stamp its live row count")
-    assert(spark.read.parquet(
-      s"${VectorOps.indexGenDir(spark, path)}/corpus").count() == 20L)
-  }
-
-  test("delete presence check: id sidecar is bucket-pruned; crash window falls back") {
-    // Round-18 (round-17 VERDICT missing #2): the delete path's
-    // present-only invariant check used to scan every cell's vec_id
-    // column (the corpus is cell-partitioned, so an id-keyed read
-    // cannot prune) — O(corpus) per delete batch. The hash-bucketed
-    // `ids/idb=K/` sidecar re-keys just the id column, and the check
-    // reads ONLY the batch's buckets. The stamps make it crash-honest:
-    // a sidecar that cannot PROVE completeness is ignored.
-    val rnd = new scala.util.Random(43L)
-    def mk(ids: Range): Seq[(Long, Seq[Float])] = ids.map { i =>
-      (i.toLong, Array.fill(64)(rnd.nextFloat() * 2f - 1f).toSeq)
-    }
-    val path = java.nio.file.Files.createTempDirectory("ivf_ids").toString
-    VectorOps.writeIvfIndex(mk(0 until 40).toDF("vec_id", "embedding"),
-      path, cells = 4)
-    val genDir = VectorOps.indexGenDir(spark, path)
-    assert(new java.io.File(s"$genDir/ids/_GRAFT_IDS_OK").exists(),
-      "build must write the id sidecar with its completeness stamp")
-    // a one-id batch selects ONLY that id's bucket directory
-    val one = Seq(7L).toDF("vec_id")
-    val (pruned, viaSidecar) = VectorOps.presenceIds(spark, genDir, one)
-    assert(viaSidecar, "complete sidecar must serve the presence check")
-    val bucket = spark.range(1)
-      .select(pmod(xxhash64(lit(7L)), lit(64L))).head.getLong(0)
-    val scanExec = pruned.queryExecution.sparkPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.head
-    val listing = scanExec.selectedPartitions
-    assert(listing.partitionCount <= 1,
-      s"one incoming id must touch at most one bucket, " +
-        s"got ${listing.partitionCount}")
-    val files = listing.toPartitionArray.map(_.filePath.toString)
-    assert(files.forall(_.contains(s"idb=$bucket")),
-      s"scan selected files outside the batch's bucket: ${files.toSeq}")
-    // the pruned check feeds the ledger invariant unchanged: the
-    // present id is tombstoned, the never-indexed one is dropped
-    assert(!VectorOps.deleteFromIvfIndex(spark, path,
-      Seq(7L, 999L).toDF("vec_id"), rewriteThreshold = 0.9,
-      retrainCells = 4))
-    val ledger = spark.read.parquet(s"$genDir/tombstones")
-      .select(col("vec_id")).collect().map(_.getLong(0)).toSet
-    assert(ledger == Set(7L),
-      s"only the physically-present id may enter the ledger, got $ledger")
-    // CRASH WINDOW: a blanked ids stamp must fall back to the corpus
-    // scan, never serve stale
-    val sp = new org.apache.hadoop.fs.Path(s"$genDir/ids/_GRAFT_IDS_OK")
-    val hfs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    hfs.create(sp, true).close()
-    val (p3, via3) = VectorOps.presenceIds(spark, genDir,
-      Seq(30L).toDF("vec_id"))
-    assert(!via3, "an unprovable sidecar must fall back to the corpus")
-    assert(p3.filter(col("vec_id") === 30L).count() == 1L)
   }
 }

@@ -48,10 +48,7 @@ class VerifySpec extends SparkSpecBase {
 
   test("audit: every streaming object is named by other main code or perfbench") {
     // StateInspect is the one exception: the state-side inspector that
-    // deployments call directly. `pending` lists unreached streaming
-    // duals that go in a later deletion (ROADMAP item 6); the list may
-    // only shrink.
-    val pending = Set("FunnelStream", "HeartbeatMonitor")
+    // deployments call directly.
     def code(f: java.nio.file.Path): Seq[String] =
       Files.readAllLines(f).asScala.toSeq.map(_.replaceAll("//.*", ""))
         .filterNot { l =>
@@ -70,9 +67,6 @@ class VerifySpec extends SparkSpecBase {
     val streaming = new java.io.File("src/main/scala/graft/streaming").toPath
     val objects = main.filter(_.startsWith(streaming))
       .flatMap(f => code(f).collect { case TopObj(n) => f -> n })
-    assert(pending.subsetOf(objects.map(_._2).toSet),
-      "drop deleted modules from the pending list: " +
-        (pending -- objects.map(_._2)).toSeq.sorted.mkString(", "))
     val unreached = objects
       .filterNot { case (f, n) =>
         val named = s"\\b$n\\b".r
@@ -80,7 +74,7 @@ class VerifySpec extends SparkSpecBase {
           u != f && lines.exists(named.findFirstIn(_).isDefined)
         }
       }
-      .map(_._2).filterNot(pending)
+      .map(_._2)
     assert(unreached.isEmpty,
       "streaming objects no main code or perfbench names (delete them, " +
         "or wire them into an entry point): " + unreached.sorted.mkString(", "))

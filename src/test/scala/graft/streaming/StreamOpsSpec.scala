@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSpecBase
 import graft.streaming.StreamOps.{HistoryEvent, MailboxWatermark}
@@ -73,50 +72,6 @@ class StreamOpsSpec extends SparkSpecBase {
         assert(out.toList == out.sorted.toList, s"trial $trial: monotone")
       } finally q.stop()
     }
-  }
-
-  test("ST1 dedup drops duplicate notifications within the watermark") {
-    implicit val s = spark
-    import s.implicits._
-    val input = MemoryStream[(Long, Timestamp)](spark)
-    val df = input.toDS().toDF("historyId", "ts")
-    val q = StreamOps.dedupNotifications(df)
-      .writeStream.format("memory").queryName("dedup_out").outputMode("append").start()
-    try {
-      val t = new Timestamp(1704100000000L)
-      val t2 = new Timestamp(1704100005000L)
-      // (1L, t2) is a REDELIVERY: same historyId, fresh delivery timestamp —
-      // it must still be dropped (dedup keys on id only, not (id, ts)).
-      input.addData((1L, t), (1L, t), (1L, t2), (2L, t))
-      q.processAllAvailable()
-      assert(spark.table("dedup_out").count() == 2)
-    } finally q.stop()
-  }
-
-  test("ST2: late data beyond the watermark is dropped from windowed aggs") {
-    implicit val s = spark
-    import s.implicits._
-    val input = MemoryStream[(Timestamp, Double)](spark)
-    val df = input.toDS().toDF("ts", "value")
-      .withColumn("event_type", org.apache.spark.sql.functions.lit("x"))
-    val q = StreamOps.tumblingCounts(df, width = "10 minutes", lateness = "2 minutes")
-      .writeStream.format("memory").queryName("late_out")
-      .outputMode("append").start()
-    def t(min: Long) = new Timestamp(1704100000000L + min * 60000)
-    try {
-      input.addData((t(0), 1.0), (t(1), 1.0))  // window [~0,10)
-      q.processAllAvailable()
-      input.addData((t(30), 1.0))              // advances watermark to 28 min
-      q.processAllAvailable()
-      input.addData((t(2), 99.0))              // LATE: before watermark → dropped
-      input.addData((t(45), 1.0))              // closes the 30-min window too
-      q.processAllAvailable()
-      val rows = spark.table("late_out")
-        .selectExpr("n", "sum_value").collect().map(r => (r.getLong(0), r.getDouble(1)))
-      // the first window emitted n=2 (the late 99.0 row never joined it)
-      assert(rows.contains((2L, 2.0)), s"got ${rows.toSeq}")
-      assert(!rows.exists(_._2 == 101.0), "late row leaked into closed window")
-    } finally q.stop()
   }
 
   test("ST4: idempotent foreachBatch sink writes batchId-keyed output") {

@@ -8,9 +8,9 @@
 # checkpointing, native memory). The default suite already pins RocksDB
 # for a few tests (the OTP correlation end-to-end test, the monotone
 # guard, StateInspect's change feed); this sweep pushes every stateful
-# operator (OTP correlation, funnel, heartbeat, the monotone guard and
-# idempotent sinks, the ingest pipeline, the HTTP loop, the full §3.1
-# connector lifecycle) through it.
+# operator (OTP correlation, the monotone guard and idempotent sinks, the
+# ingest pipeline, the HTTP loop, the full §3.1 connector lifecycle)
+# through it.
 #
 # Mechanism: GRAFT_STATE_PROVIDER is forwarded by build.sbt into the
 # forked test JVM as -Dspark.sql.streaming.stateStore.providerClass=...,
@@ -24,8 +24,6 @@ cd "$(dirname "$0")/.."
 GRAFT_STATE_PROVIDER=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider \
 exec sbt -batch "testOnly \
   graft.streaming.OtpCorrelationSpec \
-  graft.streaming.FunnelStreamSpec \
-  graft.streaming.HeartbeatMonitorSpec \
   graft.streaming.StreamOpsSpec \
   graft.streaming.StateInspectSpec \
   graft.streaming.IngestPipelineSpec \
